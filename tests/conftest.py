@@ -12,7 +12,11 @@ from yadamu___yet_another_data_migration_utility_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("pytest", master="local[8]", shuffle_partitions=8,
+    # one task slot and one shuffle partition per CPU the run may use
+    # (SPARK_GRAFT_CPUS, else the CPUs this process may run on -- nproc)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
+    s = get_spark("pytest", master=f"local[{cpus}]", shuffle_partitions=cpus,
                   extra_conf={"spark.driver.memory": "8g"})
     yield s
 

@@ -485,6 +485,11 @@ def test_cli_tag_refs_and_named_time_travel(spark, tmp_path, capsys):
     rc, out = _run(capsys, ["plan", "--table-root", root,
                             "--version", "rel-1"])
     assert rc == 0 and out["version"] == v_snap
+    # plan --key explains the lookup: the files plan_files(keys=) lists
+    rc, out = _run(capsys, ["plan", "--table-root", root, "--key", "a"])
+    want = t.plan_files(keys=["a"])
+    assert rc == 0 and out["files_scanned"] == len(want["delta_resolved"]) > 0
+    assert out["delta_resolved"] == want["delta_resolved"]
 
     rc, out = _run(capsys, ["tag", "--table-root", root])
     assert rc == 0 and out["refs"] == {"rel-1": v_snap}

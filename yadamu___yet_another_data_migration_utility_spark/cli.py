@@ -93,9 +93,12 @@ stateless per-job; a lake table needs day-2 operations):
     dedup-ingest  streaming near-dup-filtered document ingest against a
              persisted MinHash signature index (survivors + signatures
              commit under one fence)
-    plan     EXPLAIN-for-files: which files a --range scan would read
-             after zone-map pruning (no Spark session)
-    lookup   bucket-pruned point read(s) by key (--version/tag composes)
+    plan     EXPLAIN-for-files: which files a --range scan or a --key
+             lookup would read after bucket, zone-map and bloom pruning
+             (no Spark session)
+    lookup   point read(s) by key: reads exactly the files `plan --key`
+             lists, in-process for string/integral keys (no Spark job);
+             --version/tag composes
     requeue  drain the dead-letter quarantine back through the engine
              with optional --set COL=EXPR repair (exactly-once fenced)
     merge-into  general MERGE INTO from a source file: matched
@@ -648,11 +651,13 @@ def _parse_range_args(specs, types) -> tuple[dict | None, str | None]:
 
 def cmd_plan(args) -> int:
     """EXPLAIN-for-files: print the exact file set a ``read`` would
-    scan under the given ranges, next to the unpruned plan -- the
-    operator's answer to "why didn't my range scan prune". Bounds are
-    parsed to the COLUMN's type from the manifest schema (ISO
-    timestamps/dates, numerics, booleans), matching the typed-bound
-    rule the planner itself enforces. Manifest-only: no Spark session."""
+    scan under the given ranges -- or, with ``--key``, the files a
+    ``lookup`` of those keys opens (hashed buckets, then key zone maps
+    and blooms) -- next to the unpruned plan: the operator's answer to
+    "why didn't my scan prune". Bounds and keys are parsed to the
+    COLUMN's type from the manifest schema (ISO timestamps/dates,
+    numerics, booleans), matching the typed-bound rule the planner
+    itself enforces. Manifest-only: no Spark session."""
     t = _table(args)
     m = t.manifest(args.version)
     types = {f["name"]: f["type"] for f in m["schema"]["fields"]}
@@ -660,8 +665,15 @@ def cmd_plan(args) -> int:
     if err:
         print(err, file=sys.stderr)
         return 2
+    try:
+        keys = _parse_keys(args.key, m) if args.key else None
+        pruned = t.plan_files(version=args.version, ranges=ranges or None,
+                              keys=keys)
+    except (TypeError, ValueError) as e:  # ranges were validated above
+        print(f"error: bad key for merge key {m['key']!r}: {e}",
+              file=sys.stderr)
+        return 2
     full = t.plan_files(version=args.version)
-    pruned = t.plan_files(version=args.version, ranges=ranges or None)
     n = lambda p: len(p["plain"]) + len(p["delta_resolved"])  # noqa: E731
     print(json.dumps({
         "version": m["version"],
@@ -674,29 +686,36 @@ def cmd_plan(args) -> int:
     return 0
 
 
+def _parse_keys(args_key: list[str], m: dict) -> list:
+    """Parse repeated ``--key`` values to the merge-key column types of
+    manifest ``m``; on a COMPOSITE-key table each is a comma-separated
+    tuple in key-column order. Raises ValueError on malformed input."""
+    kcols = m["key"] if isinstance(m["key"], list) else [m["key"]]
+    types = {f["name"]: f["type"] for f in m["schema"]["fields"]}
+    if len(kcols) == 1:
+        return [_parse_typed(types[kcols[0]], k) for k in args_key]
+    keys = []
+    for karg in args_key:
+        comps = karg.split(",")
+        if len(comps) != len(kcols):
+            raise ValueError(
+                f"{karg!r}: need {len(kcols)} comma-separated "
+                f"components for composite key {kcols}")
+        keys.append(tuple(
+            _parse_typed(types[c], v) for c, v in zip(kcols, comps)))
+    return keys
+
+
 def cmd_lookup(args) -> int:
-    """Point lookup: current row per key, scanning only the hashed
-    buckets (LakeTable.lookup). Keys are parsed to the merge-key
-    column's type; on a COMPOSITE-key table each --key is a
+    """Point lookup: current row per key (LakeTable.lookup), reading
+    exactly the files ``plan --key`` lists -- in-process, without a
+    Spark job, for string/integral keys. Keys are parsed to the
+    merge-key column's type; on a COMPOSITE-key table each --key is a
     comma-separated tuple in key-column order."""
     t = _table(args)
     m = t.manifest(args.version)
-    kcols = m["key"] if isinstance(m["key"], list) else [m["key"]]
-    types = {f["name"]: f["type"] for f in m["schema"]["fields"]}
     try:
-        if len(kcols) == 1:
-            keys: list = [_parse_typed(types[kcols[0]], k) for k in args.key]
-        else:
-            keys = []
-            for karg in args.key:
-                comps = karg.split(",")
-                if len(comps) != len(kcols):
-                    raise ValueError(
-                        f"{karg!r}: need {len(kcols)} comma-separated "
-                        f"components for composite key {kcols}")
-                keys.append(tuple(
-                    _parse_typed(types[c], v)
-                    for c, v in zip(kcols, comps)))
+        keys = _parse_keys(args.key, m)
     except ValueError as e:
         print(f"error: bad key for merge key {m['key']!r}: {e}",
               file=sys.stderr)
@@ -1647,8 +1666,9 @@ def build_parser() -> argparse.ArgumentParser:
 
     sp = sub.add_parser(
         "lookup",
-        help="point lookup: current row per merge-key value, scanning "
-             "only the hashed buckets",
+        help="point lookup: current row per merge-key value, reading "
+             "only the files `plan --key` lists (in-process, no Spark "
+             "job, for string/integral keys)",
     )
     sp.add_argument("--table-root", required=True)
     sp.add_argument("--key", action="append", required=True,
@@ -1754,7 +1774,8 @@ def build_parser() -> argparse.ArgumentParser:
     sp = sub.add_parser(
         "plan",
         help="EXPLAIN-for-files: the exact file set a read would scan, "
-             "with zone-map range pruning -- manifest-only, no Spark",
+             "with zone-map range pruning, or a lookup would open "
+             "(--key) -- manifest-only, no Spark",
     )
     sp.add_argument("--table-root", required=True)
     sp.add_argument("--version", type=_version_arg, default=None,
@@ -1765,6 +1786,9 @@ def build_parser() -> argparse.ArgumentParser:
              "empty for an open end; timestamps/dates in ISO format "
              "(e.g. ts:2020-03-01T12:30:00..2020-04-01)",
     )
+    sp.add_argument("--key", action="append", default=[],
+                    help="merge-key value (repeatable): plan the lookup "
+                         "of these keys")
     branch_opt(sp)
     sp.set_defaults(fn=cmd_plan, cpus=None)
 

@@ -22,6 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..functions.minhash import MINHASH_K as _MINHASH_K
+from ..functions.minhash import mh_sig as _mh_sig
+from ..functions.minhash import shingle_arr, shingles  # noqa: F401
 from .catalog import ORACLES, QUERIES, _register, load
 
 # ----------------------------------------------------------------------
@@ -81,28 +84,6 @@ def docs_aug(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + 200000).alias("doc_id"), "text"
     )
     return d.unionByName(near).unionByName(exact)
-
-
-def shingle_arr(w: F.Column) -> F.Column:
-    """3-word shingle array over a word array -- THE Spark spelling of
-    the cross-engine shingle contract (_SHINGLES_SQL mirrors it
-    term-for-term: 1-indexed slice of 3, single-space join). Every
-    shingle consumer (shingles explode, doc_fingerprint,
-    doc_repetition) derives from this one definition."""
-    return F.transform(
-        F.sequence(F.lit(1), F.size(w) - 2),
-        lambda i: F.array_join(F.slice(w, i, 3), " "),
-    )
-
-
-def shingles(df: DataFrame) -> DataFrame:
-    """Distinct 3-word shingles per doc (explode)."""
-    w = F.split(F.lower(F.col("text")), " ")
-    return (
-        df.withColumn("_w", w)
-        .filter(F.size("_w") >= 3)
-        .select("doc_id", F.explode(F.array_distinct(shingle_arr(F.col("_w")))).alias("shingle"))
-    )
 
 
 # the md5->60-bit hash contract lives in functions/sketchlib.py (ONE
@@ -313,8 +294,6 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MINHASH_K = 6  # 3 bands x 2 rows
-
 _MINHASH_SQL = f"""
     WITH docs_aug AS ({_DOCS_AUG_SQL}),
     sh AS ({_SHINGLES_SQL}),
@@ -350,27 +329,6 @@ _MINHASH_SQL = f"""
     JOIN sizes s2 ON s2.doc_id = doc2
     WHERE CAST(n_inter AS DOUBLE) / (s1.n + s2.n - n_inter) >= 0.5
 """
-
-
-def _mh_sig(spark: SparkSession, sh: DataFrame) -> DataFrame:
-    """K=:data:`_MINHASH_K` md5-derived minhashes over a shingle set,
-    folded into bands of 2 -> ``(doc_id, band, h0, h1)``. ONE definition
-    of the signature contract shared by the self-join dedup and the
-    incremental batch-vs-corpus variant (and mirrored term-for-term by
-    their oracles)."""
-    ks = spark.range(_MINHASH_K).select(F.col("id").cast("int").alias("k"))
-    hashes = (
-        sh.crossJoin(F.broadcast(ks))
-        .groupBy("doc_id", "k")
-        .agg(F.min(_md5_long(F.concat(F.col("k").cast("string"), F.lit(":"), F.col("shingle")))).alias("mh"))
-    )
-    return (
-        hashes.groupBy("doc_id", (F.col("k") / 2).cast("int").alias("band"))
-        .agg(
-            F.min(F.when(F.col("k") % 2 == 0, F.col("mh"))).alias("h0"),
-            F.min(F.when(F.col("k") % 2 == 1, F.col("mh"))).alias("h1"),
-        )
-    )
 
 
 @_register("minhash_lsh_dedup", _MINHASH_SQL)

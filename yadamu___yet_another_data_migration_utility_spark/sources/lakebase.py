@@ -11,11 +11,13 @@ import contextlib
 import gzip  # noqa: F401
 import json
 import os
+import struct
 import time
 import uuid  # noqa: F401
 from dataclasses import dataclass
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -78,6 +80,97 @@ def _bucket_expr(key, n: int):
     return F.pmod(
         F.xxhash64(*[F.col(k) for k in _keylist(key)]), F.lit(n)
     ).cast("int")
+
+
+# Spark's XXH64 (catalyst expressions.XXH64) is the reference xxhash64
+# over little-endian words; these are its primes, and 42 its seed.
+_P1, _P2, _P3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
+_P4, _P5 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
+_M64 = (1 << 64) - 1
+_XXH_SEED = 42
+#: integral key types and their value range; Spark hashes byte/short/int
+#: as a 4-byte int and long as an 8-byte long
+_INT_RANGES = {"byte": 8, "short": 16, "integer": 32, "long": 64}
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh_round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def _xxh64(data: bytes, seed: int) -> int:
+    """xxhash64 of ``data`` with an unsigned 64-bit ``seed``."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed,
+             (seed - _P1) & _M64]
+        while i <= n - 32:
+            v = [_xxh_round(a, b)
+                 for a, b in zip(v, struct.unpack_from("<4Q", data, i))]
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12)
+             + _rotl(v[3], 18)) & _M64
+        for a in v:
+            h = ((h ^ _xxh_round(0, a)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i <= n - 8:
+        h ^= _xxh_round(0, struct.unpack_from("<Q", data, i)[0])
+        h = (_rotl(h, 27) * _P1 + _P4) & _M64
+        i += 8
+    if i <= n - 4:
+        h ^= struct.unpack_from("<I", data, i)[0] * _P1 & _M64
+        h = (_rotl(h, 23) * _P2 + _P3) & _M64
+        i += 4
+    for b in data[i:]:
+        h ^= b * _P5 & _M64
+        h = _rotl(h, 11) * _P1 & _M64
+    h ^= h >> 33
+    h = h * _P2 & _M64
+    h ^= h >> 29
+    h = h * _P3 & _M64
+    return h ^ (h >> 32)
+
+
+def _driver_hashable(dt: T.DataType) -> bool:
+    """Key types ``_bucket_id`` hashes exactly as Spark does: strings
+    of the default (binary) collation and the integral types."""
+    if isinstance(dt, T.StringType):
+        return getattr(dt, "collation", "UTF8_BINARY") == "UTF8_BINARY"
+    return dt.typeName() in _INT_RANGES
+
+
+def _key_bytes(v: Any, dt: T.DataType) -> bytes | None:
+    """The bytes Spark's xxhash64 reads for value ``v`` of key type
+    ``dt``, or None when ``v`` cannot be a value of that type."""
+    if isinstance(dt, T.StringType):
+        return v.encode("utf-8") if isinstance(v, str) else None
+    bits = _INT_RANGES[dt.typeName()]
+    if (isinstance(v, bool) or not isinstance(v, int)
+            or not -(1 << (bits - 1)) <= v < 1 << (bits - 1)):
+        return None
+    return v.to_bytes(8 if bits == 64 else 4, "little", signed=True)
+
+
+def _bucket_id(values, types, n: int) -> int:
+    """Driver-side ``pmod(xxhash64(key cols), n)``, bit-identical to
+    ``_bucket_expr`` for ``_driver_hashable`` key types: components
+    hash left to right, each hash seeding the next, and NULL components
+    are skipped (Spark's variadic xxhash64). Raises TypeError for a
+    value that is not of its column's type."""
+    h = _XXH_SEED
+    for v, dt in zip(values, types):
+        if v is None:
+            continue
+        b = _key_bytes(v, dt)
+        if b is None:
+            raise TypeError(f"{v!r} is not a {dt.simpleString()} key value")
+        h = _xxh64(b, h)
+    return (h - (1 << 64) if h >> 63 else h) % n
 
 
 def _distribute_delta(df: DataFrame, key, nb: int, spark) -> DataFrame:
@@ -242,13 +335,10 @@ def _keys_residual(ks: list[str], keys: list) -> "F.Column":
     key: an OR of per-tuple conjunctions -- probe lists are point-
     lookup sized, so the predicate stays small; NULL-bearing probes
     match nothing (SQL equality)."""
+    tuples = _probe_tuples(ks, keys)
     if len(ks) == 1:
-        kvals = [v for v in keys if v is not None]
+        kvals = [t[0] for t in tuples]
         return F.col(ks[0]).isin(kvals) if kvals else F.lit(False)
-    tuples = [t for t in keys
-              if t is not None and not any(v is None for v in t)]
-    if not tuples:
-        return F.lit(False)
     cond = F.lit(False)
     for t in tuples:
         c = F.lit(True)
@@ -256,6 +346,52 @@ def _keys_residual(ks: list[str], keys: list) -> "F.Column":
             c = c & (F.col(k) == F.lit(v))
         cond = cond | c
     return cond
+
+
+def _check_key_types(ks: list[str], schema: T.StructType, what: str) -> None:
+    """``keys=`` probing (bloom and bucket-hash contracts) supports
+    string/integral merge keys only."""
+    bad = [k for k in ks if not _bloom.bloom_supported(schema[k].dataType)]
+    if bad:
+        raise TypeError(
+            f"{what}(keys=...) supports string/integral merge keys; "
+            f"{bad[0]} is {schema[bad[0]].dataType.simpleString()}")
+
+
+def _check_probe_arity(ks: list[str], keys: list) -> None:
+    """On a COMPOSITE-key table every non-None probe is a tuple (or
+    list) in key-column order."""
+    bad = [v for v in keys if len(ks) > 1 and v is not None and (
+        not isinstance(v, (tuple, list)) or len(v) != len(ks))]
+    if bad:
+        raise ValueError(
+            f"composite-key probes must be {len(ks)}-tuples in key order "
+            f"{ks}; got {bad[0]!r}")
+
+
+def _probe_tuples(ks: list[str], keys: list) -> list[tuple]:
+    """Key probes as key-order tuples, minus those that can match no
+    row: a NULL probe or a NULL component (SQL equality)."""
+    tuples = [(v,) for v in keys] if len(ks) == 1 else [
+        tuple(t) for t in keys if t is not None]
+    return [t for t in tuples if not any(v is None for v in t)]
+
+
+def _key_envelope(ks: list[str], probes: list[tuple]) -> dict[str, tuple]:
+    """Per key column, the ``(min, max)`` of the probe values: a range
+    every requested row satisfies, so key zone maps can skip files.
+    Columns whose probes are unorderable or hold NaN get no envelope
+    (python min/max are position-dependent with NaN, and Spark orders
+    NaN above every double, so a finite bound would drop the NaN row)."""
+    out: dict[str, tuple] = {}
+    for i, k in enumerate(ks):
+        vals = [t[i] for t in probes]
+        try:
+            if vals and all(v == v for v in vals):  # v != v is NaN
+                out[k] = (min(vals), max(vals))
+        except TypeError:
+            pass
+    return out
 
 
 def _hashable(dt: T.DataType) -> bool:
@@ -321,6 +457,67 @@ def _resolve(df: DataFrame, key, schema: T.StructType) -> DataFrame:
     return out.filter(
         ~F.coalesce(F.col(DELETED_COL), F.lit(False))
     ).select(*[f.name for f in schema.fields])
+
+
+# ----------------------------------------------------------------------
+# in-process (pyarrow) twins of the read path, used by point lookups
+# ----------------------------------------------------------------------
+def _arrow_key_filter(ks: list[str], probes: list[tuple],
+                      target: pa.Schema) -> "pads.Expression":
+    """Pushdown filter for key probes: one ``isin`` per key column,
+    typed as the column. Exact for a single key; for a composite key a
+    superset that ``_match_probes`` narrows to the probed tuples."""
+    import pyarrow.dataset as pads  # imports pandas: only when used
+
+    expr = None
+    for i, k in enumerate(ks):
+        vals = pa.array(list(dict.fromkeys(t[i] for t in probes)),
+                        type=target.field(k).type)
+        e = pads.field(k).isin(vals)
+        expr = e if expr is None else expr & e
+    return expr
+
+
+def _match_probes(tbl: pa.Table, ks: list[str], probes: list[tuple]) -> pa.Table:
+    """Rows of ``tbl`` whose key tuple is one of ``probes``."""
+    if len(ks) == 1 or not tbl.num_rows:
+        return tbl
+    want = set(probes)
+    keys = zip(*[tbl.column(k).to_pylist() for k in ks])
+    return tbl.filter(pa.array([t in want for t in keys], pa.bool_()))
+
+
+def _resolve_arrow(tbl: pa.Table, ks: list[str]) -> pa.Table | None:
+    """``_resolve`` over an in-process (base ∪ delta) row set: per key
+    the row with the highest ``(coalesce(_lsn, -1), live over
+    tombstone)`` wins, a key whose winner is a tombstone is dropped,
+    and the winner's own ``_lsn`` (NULL included) is kept. Returns
+    None when a key's top rank ties between live rows whose content
+    differs: only ``_lsn_rank``'s content hash orders those, and it is
+    not reimplemented here -- the caller answers through Spark."""
+    best: dict[tuple, tuple] = {}
+    lsns = tbl.column(LSN_COL).to_pylist()
+    dels = tbl.column(DELETED_COL).to_pylist()
+    keys = zip(*[tbl.column(k).to_pylist() for k in ks])
+    for i, (kv, lsn, dele) in enumerate(zip(keys, lsns, dels)):
+        rank = (-1 if lsn is None else lsn, not dele)
+        top = best.get(kv)
+        if top is None or rank > top[0]:
+            best[kv] = (rank, [i])
+        elif rank == top[0]:
+            top[1].append(i)
+    content = tbl.select([c for c in tbl.column_names
+                          if c not in ks and c not in (LSN_COL, DELETED_COL)])
+    winners = []
+    for (_, live), rows in best.values():
+        if not live:
+            continue
+        if len(rows) > 1:
+            vals = content.take(rows).to_pylist()
+            if any(v != vals[0] for v in vals[1:]):
+                return None
+        winners.append(rows[0])
+    return tbl.take(pa.array(winners, pa.int64())).drop_columns([DELETED_COL])
 
 
 #: integral promotion ladder for type widening (Iceberg UpdateSchema)

@@ -13,9 +13,11 @@ import time
 import uuid
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import bloomindex as _bloom  # noqa: F401
 from .fsio import CommitConflict, LocalFS  # noqa: F401
@@ -30,6 +32,9 @@ from .lakebase import (  # noqa: F401
     _list_bucket_files, _ts_micros, _enc_stat, _inherit_stats,
     _zone_kind, _session_tz, _enc_bound, _disjoint, _footer_stats,
     _align, _cap, _utc_now_iso, _ZONE_TYPES, _ZONE_STR_CAP, _WIDEN_RANK,
+    _driver_hashable, _bucket_id, _probe_tuples, _key_envelope,
+    _arrow_key_filter, _match_probes, _resolve_arrow,
+    _check_key_types, _check_probe_arity,
 )
 
 
@@ -62,23 +67,35 @@ class ScanMixin:
         tz: str | None = None,
         keys: list | None = None,
     ) -> tuple[list[str], list[int]]:
-        """ONE planner for ``read`` and ``plan_files`` (they must never
-        drift: plan_files IS the explanation of what read scans):
-        returns ``(plain_rel_paths, delta_bucket_ids)`` after bucket
-        pruning, zone-map file skipping, and (with ``keys``) Bloom-index
-        file skipping. A delta-touched bucket is dropped only when
-        EVERY file in it is provably disjoint / provably key-free.
-        ``tz`` names the timezone naive timestamp bounds are expressed
-        in -- ``read`` passes ITS session's setting so the prune and
-        the residual filter can never disagree; None falls back to the
-        active session (or UTC). ``keys`` are probe values of the MERGE
-        KEY: a file is skipped when its bloom (sources/bloomindex.py)
-        rejects every probe -- no false negatives, so the skip is
-        exact; files without an entry always scan."""
+        """ONE planner for ``read``, ``lookup`` and ``plan_files`` (they
+        must never drift: plan_files IS the explanation of what read
+        and lookup scan): returns ``(plain_rel_paths,
+        delta_bucket_ids)`` after bucket pruning, zone-map file
+        skipping, and (with ``keys``) key pruning. A delta-touched
+        bucket is dropped only when EVERY file in it is provably
+        disjoint / provably key-free. ``tz`` names the timezone naive
+        timestamp bounds are expressed in -- ``read`` passes ITS
+        session's setting so the prune and the residual filter can
+        never disagree; None falls back to the active session (or
+        UTC).
+
+        ``keys`` are probe values of the MERGE KEY, pruned three ways:
+        to the buckets the probes hash to (``_bucket_id``, the driver-
+        side twin of the write path's ``_bucket_expr``); through the
+        key zone maps with each key column's ``[min, max]`` probe
+        envelope (key-clustered files -- append sort_within / compact
+        sort -- then skip inside a bucket); and through the bloom
+        sidecars (sources/bloomindex.py), which reject files for
+        uniformly scattered keys. None of the three has false
+        negatives, so every skip is exact; files without stats or a
+        bloom entry always scan. A probe that is not a value of its
+        key column's type disables the bucket pruning (the read's
+        residual filter then decides how it compares)."""
         schema = T.StructType.fromJson(m["schema"])
         enc: dict[str, tuple] = {}
+        kenc: dict[str, tuple] = {}
+        kinds = {f.name: _zone_kind(f.dataType) for f in schema.fields}
         if ranges:
-            kinds = {f.name: _zone_kind(f.dataType) for f in schema.fields}
             bad = [c for c in ranges if c not in kinds]
             if bad:
                 raise ValueError(f"ranges on unknown columns: {bad}")
@@ -89,26 +106,45 @@ class ScanMixin:
                 k = kinds[col]
                 enc[col] = (_enc_bound(lo, k, tz), _enc_bound(hi, k, tz), k,
                             hi is not None)
+        if keys is not None:
+            ks = _keylist(m["key"])
+            probes = _probe_tuples(ks, keys)
+            ktypes = [schema[k].dataType for k in ks]
+            if all(_driver_hashable(t) for t in ktypes):
+                try:
+                    hashed = {_bucket_id(t, ktypes, m["bucket_count"])
+                              for t in probes}
+                except TypeError:
+                    hashed = None
+                if hashed is not None:
+                    buckets = sorted(hashed if buckets is None
+                                     else hashed.intersection(buckets))
+            for col, (lo, hi) in _key_envelope(ks, probes).items():
+                k = kinds[col]
+                kenc[col] = (_enc_bound(lo, k, tz), _enc_bound(hi, k, tz), k,
+                             True)
         # pre-fix manifests may carry zones written by an unsound
         # harvester (NaN-narrowed floats, unpadded years): prune only on
         # stats stamped with the CURRENT format
         stats = (
             m.get("stats", {})
-            if enc and m.get("stats_format") == STATS_FORMAT else {}
+            if (enc or kenc) and m.get("stats_format") == STATS_FORMAT
+            else {}
         )
         rejects = self._bloom_rejector(m, keys) if keys else None
 
         def _skip(f: str) -> bool:
-            return (enc and _disjoint(stats.get(f), enc)) or (
-                rejects is not None and rejects(f)
-            )
+            return bool(
+                (enc and _disjoint(stats.get(f), enc))
+                or (kenc and _disjoint(stats.get(f), kenc))
+                or (rejects is not None and rejects(f)))
 
         deltas = m.get("deltas", {})
         delta_buckets = [
             int(b) for b, fl in deltas.items()
             if fl and (buckets is None or int(b) in buckets)
         ]
-        if enc or rejects is not None:
+        if enc or kenc or rejects is not None:
             delta_buckets = [
                 b for b in delta_buckets
                 if not all(
@@ -123,7 +159,7 @@ class ScanMixin:
             if int(b) not in delta_buckets and (buckets is None or int(b) in buckets)
             for f in fl
         ]
-        if enc or rejects is not None:
+        if enc or kenc or rejects is not None:
             plain = [f for f in plain if not _skip(f)]
         return plain, delta_buckets
 
@@ -253,19 +289,8 @@ class ScanMixin:
         schema = T.StructType.fromJson(m["schema"])
         ks = _keylist(m["key"])
         if keys is not None:
-            bad = [k for k in ks
-                   if not _bloom.bloom_supported(schema[k].dataType)]
-            if bad:
-                raise TypeError(
-                    f"read(keys=...) supports string/integral merge keys; "
-                    f"{bad[0]} is {schema[bad[0]].dataType.simpleString()}")
-            if len(ks) > 1 and any(
-                    v is not None and (not isinstance(v, (tuple, list))
-                                       or len(v) != len(ks))
-                    for v in keys):
-                raise ValueError(
-                    f"composite-key probes must be {len(ks)}-tuples in "
-                    f"key order {ks}")
+            _check_key_types(ks, schema, "read")
+            _check_probe_arity(ks, keys)
         plain_rel, delta_buckets = self._plan_scan(
             m, buckets, ranges,
             tz=spark.conf.get("spark.sql.session.timeZone"),
@@ -321,14 +346,10 @@ class ScanMixin:
         if keys is not None:
             # same validation as read(keys=...): the plan must never
             # succeed where the read it explains would raise
-            schema = T.StructType.fromJson(m["schema"])
-            bad = [k for k in _keylist(m["key"])
-                   if not _bloom.bloom_supported(schema[k].dataType)]
-            if bad:
-                raise TypeError(
-                    f"plan_files(keys=...) supports string/integral merge "
-                    f"keys; {bad[0]} is "
-                    f"{schema[bad[0]].dataType.simpleString()}")
+            ks = _keylist(m["key"])
+            _check_key_types(ks, T.StructType.fromJson(m["schema"]),
+                             "plan_files")
+            _check_probe_arity(ks, keys)
         plain, delta_buckets = self._plan_scan(m, buckets, ranges, tz=tz,
                                                keys=keys)
         dfiles = self._files(m, delta_buckets, strip=True) + self._files(
@@ -342,79 +363,125 @@ class ScanMixin:
         version: int | None = None,
         public: bool = False,
     ) -> DataFrame:
-        """POINT LOOKUP: the current row for each given merge-key value,
-        scanning ONLY the buckets those keys hash to -- the "what is
-        the state of url X" question a CDC operator asks constantly,
-        answered in O(|keys| buckets / bucket_count) of the table
-        instead of a full scan (with mor resolution applied, so the
-        answer is exactly ``read``'s).
+        """POINT LOOKUP: the current row for each given merge-key value
+        -- the "what is the state of url X" question a CDC operator
+        asks constantly, answered exactly like ``read(keys=keys)`` (mor
+        resolution applied). Deleted / never-written keys and None
+        probes yield no row. On a COMPOSITE-key table each probe is a
+        tuple in key-column order.
 
-        Two Spark jobs: a constant-size job hashing the keys to bucket
-        ids (xxhash64 is JVM-side -- the one bucketing definition,
-        never reimplemented driver-side), then a bucket-pruned snapshot
-        read semi-joined against the broadcast key set. Deleted /
-        never-written keys simply yield no row.
+        String and integral keys are answered WITHOUT a Spark job. The
+        scan is ``plan_files(keys=keys)``: the buckets the keys hash to
+        (driver-side ``_bucket_id``), minus files the key zone maps or
+        bloom sidecars rule out. Those files are read in-process with
+        pyarrow through the table's FS (key filter pushed down),
+        aligned to the snapshot schema like ``read``, and delta buckets
+        are resolved last-writer-wins exactly as ``_resolve`` does. The
+        answer comes back as a local relation, which ``collect()``
+        serves without a job. Two cases answer through Spark instead,
+        each recorded in the operation trace (operators/trace.py) with
+        its reason:
 
-        When the table carries Bloom sidecars (``harvest_blooms``) and
-        the key type supports the hash contract, the keys also ride
-        through ``read(keys=...)``: file-level bloom skipping inside
-        the hashed buckets (which the zone-map envelope cannot do for
-        uniformly scattered keys) plus an exact ``isin`` residual that
-        Catalyst pushes into the parquet scans."""
+        - ``lsn_tie``: a key's top ``_lsn`` ties between live rows of
+          differing content. Only ``_lsn_rank``'s content hash orders
+          those, and it is never reimplemented driver-side, so the
+          lookup is ``read(keys=keys)``;
+        - ``key_type``: other key types (float, timestamp, date,
+          decimal, ...) hash the keys to bucket ids in one Spark job,
+          then semi-join a bucket-pruned read against them."""
+        from ..operators import trace
+
         m = self.manifest(version)
+        ks = _keylist(m["key"])
+        schema = T.StructType.fromJson(m["schema"])
+        out_schema = T.StructType([f for f in schema.fields
+                                   if not (public and f.name == LSN_COL)])
+        if not keys:
+            return spark.createDataFrame([], out_schema)
+        _check_probe_arity(ks, keys)
+        ktypes = [schema[k].dataType for k in ks]
+        if not all(_driver_hashable(t) for t in ktypes):
+            trace.trace_event("lookup", table=self.root, path="spark",
+                              reason="key_type", version=m["version"])
+            return self._lookup_by_join(spark, m, keys, public)
+
+        t0 = time.monotonic()
+        probes = _probe_tuples(ks, keys)
+        for t in probes:
+            _bucket_id(t, ktypes, 1)  # TypeError for a mistyped probe
+        plain, delta_buckets = self._plan_scan(m, None, None, keys=keys)
+        dfiles = self._files(m, delta_buckets, strip=True) + self._files(
+            m, delta_buckets, "deltas", strip=True)
+        target = to_arrow_schema(schema)
+        kfilter = _arrow_key_filter(ks, probes, target)
+        tables = []
+        if plain:
+            tables.append(_match_probes(pa.concat_tables(
+                [self._read_arrow(rel, target, kfilter) for rel in plain]),
+                ks, probes))
+        if dfiles:
+            dtarget = target.append(pa.field(DELETED_COL, pa.bool_()))
+            rows = _match_probes(pa.concat_tables(
+                [self._read_arrow(rel, dtarget, kfilter) for rel in dfiles]),
+                ks, probes)
+            resolved = _resolve_arrow(rows, ks)
+            if resolved is None:
+                trace.trace_event("lookup", table=self.root, path="spark",
+                                  reason="lsn_tie", version=m["version"])
+                return self.read(spark, version=m["version"], keys=keys,
+                                 public=public)
+            tables.append(resolved)
+        out = pa.concat_tables(tables) if tables else target.empty_table()
+        if public:
+            out = out.drop_columns([LSN_COL])
+        trace.trace_event("lookup", table=self.root, rows=out.num_rows,
+                          elapsed_sec=time.monotonic() - t0, path="arrow",
+                          files=len(plain) + len(dfiles),
+                          version=m["version"])
+        return spark.createDataFrame(out, out_schema)
+
+    def _read_arrow(self, rel: str, target: "pa.Schema", kfilter) -> "pa.Table":
+        """One data file read in-process, key filter pushed down, and
+        aligned to ``target`` the way ``read`` aligns files to the
+        snapshot schema: a column the file predates is NULL, a column
+        written narrower is cast up."""
+        import pyarrow.dataset as pads
+
+        with self.fs.open_read(os.path.join(self.root, rel)) as f:
+            frag = pads.ParquetFileFormat().make_fragment(f)
+            have = set(frag.physical_schema.names)
+            t = frag.to_table(columns=[n for n in target.names if n in have],
+                              filter=kfilter)
+        return pa.Table.from_arrays(
+            [(t.column(fl.name) if t.schema.field(fl.name).type == fl.type
+              else t.column(fl.name).cast(fl.type))
+             if fl.name in have else pa.nulls(t.num_rows, fl.type)
+             for fl in target],
+            schema=target)
+
+    def _lookup_by_join(self, spark: SparkSession, m: dict[str, Any],
+                        keys: list, public: bool) -> DataFrame:
+        """``lookup`` for key types ``_bucket_id`` does not hash: one
+        Spark job hashes the keys to bucket ids, then a bucket-pruned
+        read (pinned to the SAME manifest, so a concurrent rebucket
+        cannot skew the ids) is semi-joined against the broadcast keys.
+        The keys' ``[min, max]`` envelope rides along as a range, so
+        the key zone maps skip files inside the hashed buckets; it
+        contains every requested value, so it never excludes one."""
         key, nb = m["key"], m["bucket_count"]
         ks = _keylist(key)
         schema = T.StructType.fromJson(m["schema"])
-        ktypes = [schema[k].dataType for k in ks]
-        if not keys:
-            return spark.createDataFrame(
-                [], schema if not public
-                else T.StructType([f for f in schema.fields
-                                   if f.name != LSN_COL]))
-        if len(ks) == 1:
-            rows = [(k,) for k in keys]
-        else:
-            bad = [t for t in keys
-                   if not isinstance(t, (tuple, list)) or len(t) != len(ks)]
-            if bad:
-                raise ValueError(
-                    f"composite-key lookup needs {len(ks)}-tuples in "
-                    f"key order {ks}; got {bad[0]!r}")
-            rows = [tuple(t) for t in keys]
+        rows = [(k,) for k in keys] if len(ks) == 1 else [tuple(t) for t in keys]
         kdf = spark.createDataFrame(
             rows, T.StructType(
-                [T.StructField(k, t) for k, t in zip(ks, ktypes)]))
+                [T.StructField(k, schema[k].dataType) for k in ks]))
         hit = [
             r["_b"]
             for r in kdf.select(_bucket_expr(key, nb).alias("_b"))
             .distinct().collect()
         ]
-        # pin the read to the SAME manifest the buckets were computed
-        # under: a concurrent rebucket between the two reads would
-        # otherwise prune the new layout with old bucket ids and
-        # silently miss existing keys. A per-column [min, max]
-        # envelope rides along as a range so the KEY zone maps (string/
-        # numeric) also skip files inside the hashed buckets -- with
-        # key-clustered files (append sort_within / compact sort) a
-        # point lookup then touches a handful of files, not the bucket;
-        # each column's envelope contains every requested value, so it
-        # never excludes a requested key, and read()'s residual filter
-        # is subsumed by the semi-join.
-        ranges: dict[str, tuple] | None = {}
-        for i, k in enumerate(ks):
-            vals = [t[i] if len(ks) > 1 else t
-                    for t in (rows if len(ks) > 1 else keys)]
-            try:
-                # NaN keys break the envelope both ways: python min/max
-                # are position-dependent with NaN, and Spark orders NaN
-                # above every double so a finite upper bound would drop
-                # the NaN row -- skip the envelope (v != v catches NaN)
-                if all(v is not None and v == v for v in vals):
-                    ranges[k] = (min(vals), max(vals))
-            except TypeError:  # unorderable key values: no envelope
-                pass
-        ranges = ranges or None
-        probe_ok = all(_bloom.bloom_supported(t) for t in ktypes)
+        ranges = _key_envelope(ks, _probe_tuples(ks, keys)) or None
+        probe_ok = all(_bloom.bloom_supported(schema[k].dataType) for k in ks)
         df = self.read(spark, version=m["version"], buckets=hit,
                        public=public, ranges=ranges,
                        keys=keys if probe_ok else None)

@@ -232,16 +232,30 @@ class IncrementalRollup:
         if until <= cur:
             return cur
 
-        key = self.base.manifest()["key"]
-        kcols = [key] if isinstance(key, str) else list(key)
-        nb = self.base.manifest()["bucket_count"]
+        m = self.base.manifest()
+        kcols = [m["key"]] if isinstance(m["key"], str) else list(m["key"])
         ch = self.base.read_changes(spark, cur, until)
         # materialize the changed-key set ONCE: it feeds the touched-
         # bucket probe plus BOTH image reads' semi-joins -- without the
-        # checkpoint the window's change scan recomputes three times
-        # per refresh. O(changed keys) rows, the quantity incremental
-        # maintenance is already bounded by.
-        keys = ch.select(*kcols).distinct().localCheckpoint(eager=True)
+        # cache the window's change scan recomputes three times per
+        # refresh. O(changed keys) rows, the quantity incremental
+        # maintenance is already bounded by. Released once the window's
+        # merge has committed (or failed).
+        keys = ch.select(*kcols).distinct().persist()
+        try:
+            keys.count()
+            return self._apply_window(spark, cur, until, v_pin, m, keys)
+        finally:
+            keys.unpersist()
+
+    def _apply_window(self, spark: SparkSession, cur: int, until: int,
+                      v_pin: int, m: dict, keys: DataFrame) -> int:
+        """Fold the base changes of window ``(cur, until]`` -- whose
+        changed keys are ``keys`` -- into the rollup, fenced on
+        ``until``; ``m`` is the base manifest the keys were read under.
+        Returns ``until``."""
+        key, nb = m["key"], m["bucket_count"]
+        kcols = [key] if isinstance(key, str) else list(key)
         touched = [
             r["_b"]
             for r in keys.select(_bucket_expr(key, nb).alias("_b"))

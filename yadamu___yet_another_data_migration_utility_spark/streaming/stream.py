@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from ..functions.minhash import mh_sig, shingles
 from ..operators.apply import BatchMetrics, apply_batch
 from ..sources.laketable import LSN_COL, LakeTable
 
@@ -759,8 +760,8 @@ def start_dedup_ingest(
 
     Per micro-batch (foreachBatch):
 
-    1. band signatures for the batch via the shared ``_mh_sig``
-       contract (plans.textops) -- 3 bands of 2 md5-minhashes;
+    1. band signatures for the batch via the shared ``mh_sig``
+       contract (functions/minhash.py) -- 3 bands of 2 md5-minhashes;
     2. candidates = batch bands equi-joined against the index AND
        against earlier docs in the same batch (smaller doc_id wins, so
        in-batch duplicates resolve deterministically); a doc is a DUP
@@ -797,13 +798,27 @@ def start_dedup_ingest(
     )
 
     def _sink(batch_df, batch_id: int) -> None:
-        from ..plans.textops import _mh_sig, shingles
+        # the batch, its signatures and the survivors each feed several
+        # actions: _dedup_batch persists each once (forced by a count)
+        # and they are all released when the batch is done, even on
+        # failure
+        held: list[DataFrame] = []
+        try:
+            _dedup_batch(batch_df, batch_id, held)
+        finally:
+            for df in held:
+                df.unpersist()
 
+    def _dedup_batch(batch_df, batch_id: int, held: list[DataFrame]) -> None:
         s = batch_df.sparkSession
         if batch_df.isEmpty():
             return
-        batch_df = batch_df.localCheckpoint(eager=True)  # stable across reuse
-        sig = _mh_sig(s, shingles(batch_df)).localCheckpoint(eager=True)
+        batch_df = batch_df.persist()
+        held.append(batch_df)
+        n_in = batch_df.count()
+        sig = mh_sig(s, shingles(batch_df)).persist()
+        held.append(sig)
+        sig.count()
         idx = index_table.read(s, public=True).select(
             "doc_id", "band", "h0", "h1")
         b = sig.alias("b")
@@ -849,9 +864,8 @@ def start_dedup_ingest(
         # materialize ONCE: survivors feeds a count and two table
         # appends -- without this the index scan + band join would
         # recompute per action, tripling the batch's dominant cost
-        survivors = batch_df.join(dups, "doc_id", "left_anti").localCheckpoint(
-            eager=True)
-        n_in = batch_df.count()
+        survivors = batch_df.join(dups, "doc_id", "left_anti").persist()
+        held.append(survivors)
         n_kept = survivors.count()
         docs_table.append(s, survivors, batch_id=batch_id)
         surv_sig = (
