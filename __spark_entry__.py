@@ -2,7 +2,7 @@
 
 ``entry(spark)`` runs the flagship CDC replay (events-derived changelog
 through the real LakeTable MERGE engine) at sf0.001. ``queries()`` /
-``oracle_sql()`` expose the full catalog from
+``oracle_sql()`` expose the CDC engine queries of
 ``yadamu___yet_another_data_migration_utility_spark.plans``.
 """
 
@@ -25,14 +25,11 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2 (plus the
-    training-data-pipeline operators). Computed columns are aliased
+    """One entry per CDC engine query. Computed columns are aliased
     identically in Spark and the oracle SQL."""
     return dict(QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL oracles -- one per ``queries()`` entry
-    (none missing: the approximate/stubbed operators' deterministic
-    algorithms are replicated in SQL)."""
+    """DuckDB-runnable ANSI SQL oracles -- one per ``queries()`` entry."""
     return dict(ORACLES)

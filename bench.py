@@ -1,21 +1,8 @@
 #!/usr/bin/env python
-"""Benchmark driver (driver contract + scaling-evidence protocol).
+"""CDC replay throughput and the N->4N scaling protocol.
 
-Default mode
-------------
-Runs every headline query from the catalog at ``$SPARK_GRAFT_SF_DIR``
-(default ``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]``
-(default 32) and prints ONE JSON line::
+One mode flag is required; every mode prints ONE JSON line on stdout.
 
-    {"metric": "...", "value": <total sec>, "unit": "sec",
-     "queries": {"q1_pricing_summary": sec, ...}, "sf": 0.1, ...}
-
-Execution is forced with the ``noop`` sink (full computation, no
-driver-side collect) so timings measure the distributed plan, not
-result serialization.
-
-Replay / scaling mode (BASELINE.json north rule evidence)
----------------------------------------------------------
 ``--replay N_EVENTS`` runs the flagship CDC replay (synthetic
 changelog -> quarantine split -> last-LSN dedup -> pandas-UDF extract
 on winners -> fenced LakeTable MERGE) end-to-end and prints a JSON
@@ -23,7 +10,9 @@ line with events/s. ``--scaling`` runs that same job, same input, as
 two subprocesses at N and 4N cores (default ``local[2]`` and
 ``local[8]`` -- see run_scaling for why this host's SMT ceiling makes
 8->32 measure the VM, not the engine) and reports throughput at both
-plus efficiency = T(4N) / (4 * T(N)).
+plus efficiency = T(4N) / (4 * T(N)). ``--gen-log N_EVENTS`` only
+writes the changelog to ``--log-path`` (the scaling protocol's untimed
+setup).
 """
 
 from __future__ import annotations
@@ -37,12 +26,8 @@ import sys
 import tempfile
 import time
 
-import pandas as pd
-
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
-
-DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 
 
 def _scratch_dir() -> str:
@@ -50,49 +35,6 @@ def _scratch_dir() -> str:
     from yadamu___yet_another_data_migration_utility_spark.session import scratch_dir
 
     return scratch_dir()
-
-#: queries whose plans are quadratic-by-design at tiny scale (exact
-#: pairwise verify) -- still run, but listed so regressions are legible.
-HEADLINE_ORDER = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "top_customer_per_nation",
-    "part_type_price_stats",
-    "events_hourly_rollup",
-    "events_user_props",
-    "cdc_last_state",
-    "cdc_dedup_salted",
-    "cdc_quarantine_split",
-    "cdc_replay_merge",
-    "cdc_scd2_history",
-    "dedup_exact",
-    "dedup_ngram_jaccard",
-    "minhash_lsh_dedup",
-    "dedup_clusters",
-    "url_canonical_dedup",
-    "boilerplate_score",
-    "pipeline_keep_list",
-    "text_lang_id",
-    "text_quality_stats",
-    "doc_fingerprint",
-    "token_stats_by_source",
-    "ann_cosine_topk",
-    "ann_lsh_bucketed",
-    "embedding_label_centroids",
-    "media_metadata",
-    "media_decode_meta",
-    "simhash_signatures",
-    "dedup_simhash",
-    "dedup_embedding_cosine",
-    "doc_rolling_hash",
-    "token_count_bpe",
-    "staged_roundtrip_csv",
-    "export_roundtrip_json",
-    "document_roundtrip",
-    "interval_iso8601",
-    "spatial_recode",
-]
 
 
 def build_spark(cpus: int):
@@ -142,154 +84,6 @@ def build_spark(cpus: int):
     )
 
 
-def force(df) -> int:
-    """Execute the full plan without collecting rows to the driver."""
-    df.write.mode("overwrite").format("noop").save()
-    return 0
-
-
-#: the 47 catalog queries BENCH_r02 measured -- their subtotal is the
-#: round-over-round comparable trend number (the full-catalog total
-#: moves every time the catalog grows)
-R2_SHARED = frozenset([
-    "ann_cosine_topk", "ann_ivf", "ann_lsh_bucketed", "boilerplate_score",
-    "cdc_asof_join", "cdc_dedup_salted", "cdc_incremental_read",
-    "cdc_last_state", "cdc_quarantine_split", "cdc_replay_merge",
-    "cdc_scd2_history", "corpus_sample", "corpus_shuffle", "dedup_clusters",
-    "dedup_embedding_cosine", "dedup_exact", "dedup_ngram_jaccard",
-    "dedup_simhash", "doc_fingerprint", "doc_repetition", "doc_rolling_hash",
-    "document_roundtrip", "embedding_label_centroids", "events_hourly_rollup",
-    "events_sessionization", "events_user_props", "export_roundtrip_json",
-    "hot_domains", "media_decode_meta", "media_frame_sample",
-    "media_metadata", "minhash_lsh_dedup", "part_type_price_stats",
-    "pii_scrub", "pipeline_keep_list", "q1_pricing_summary",
-    "q3_shipping_priority", "q5_local_supplier_volume", "simhash_signatures",
-    "staged_roundtrip_csv", "staged_roundtrip_parquet", "text_lang_id",
-    "text_quality_stats", "token_count_bpe", "token_stats_by_source",
-    "top_customer_per_nation", "url_canonical_dedup",
-])
-
-
-def run_queries(sf_dir: str, cpus: int, only: list[str] | None = None) -> dict:
-    from yadamu___yet_another_data_migration_utility_spark.plans import QUERIES
-
-    if only:
-        unknown = [n for n in only if n not in QUERIES]
-        if unknown:
-            raise SystemExit(f"--queries: unknown catalog entries {unknown}")
-    spark = build_spark(cpus)
-    try:
-        timings: dict[str, float] = {}
-        names = [n for n in HEADLINE_ORDER if n in QUERIES] + [
-            n for n in QUERIES if n not in HEADLINE_ORDER
-        ]
-        if only:
-            names = [n for n in names if n in set(only)]
-        # untimed JIT/codegen warmup at the smallest SF: without it the
-        # first timed query absorbs ~20s of compiler work that belongs
-        # to the JVM, not the plan. media_decode_meta additionally
-        # spawns the Python worker pool (mapInPandas) so no timed query
-        # pays the per-worker interpreter + pandas-import cost. The
-        # full-pool pandas-UDF warmup is gated on the SAME flag (and the
-        # emitted JSON carries warmed_pool) so cross-round totals state
-        # their warmup conditions explicitly.
-        warm_dir = "/root/testdata/sf0.001"
-        warmed = os.path.isdir(warm_dir)
-        if warmed:
-            # cdc_replay_merge at the warm SF exercises the whole
-            # LakeTable commit machinery (bucketed write, footer stats,
-            # manifest publish, observations) so the first timed
-            # commit-path query measures its plan, not ~15s of one-time
-            # JIT (measured: cdc_dlq_requeue 24.5s cold vs ~5s warm).
-            # cdc_dlq_requeue and cdc_wap_publish additionally warm
-            # their UNIQUE codegen paths (quarantine drain, staged-
-            # fragment publish) that no other query compiles --
-            # measured 15.4/36.1s in-suite vs 9.3/6.0s re-run warm at
-            # identical job counts
-            for wq in ("q1_pricing_summary", "cdc_last_state",
-                       "media_decode_meta", "cdc_replay_merge",
-                       "cdc_dlq_requeue", "cdc_wap_publish"):
-                if wq in QUERIES:
-                    force(QUERIES[wq](spark, warm_dir))
-            # spawn the FULL Python worker pool (one per core), not just
-            # the few workers the tiny warm-SF mapInPandas touches: the
-            # first timed query running an Arrow UDF across all
-            # partitions otherwise pays ~cpus interpreter+pandas-import
-            # spawns (measured: ann_lsh_bucketed 12.2s cold vs ~3-5s warm)
-            from pyspark.sql.functions import pandas_udf as _pudf
-
-            @_pudf("long")
-            def _warm_udf(x: pd.Series) -> pd.Series:
-                return x
-
-            force(
-                spark.range(cpus * 1000)
-                .repartition(cpus)
-                .select(_warm_udf("id").alias("v"))
-            )
-        # per-query Spark JOB counts ride along so stage-overhead-bound
-        # entries (many tiny jobs, e.g. a 10-job replay) are legible as
-        # overhead vs compute without re-deriving it each round
-        sc = spark.sparkContext
-        jobs: dict[str, int] = {}
-        tracker = sc.statusTracker()
-        for name in names:
-            sc.setJobGroup(name, f"bench:{name}")
-            t0 = time.monotonic()
-            force(QUERIES[name](spark, sf_dir))
-            timings[name] = round(time.monotonic() - t0, 3)
-            jobs[name] = len(tracker.getJobIdsForGroup(name))
-        total = round(sum(timings.values()), 3)
-        shared = {n: t for n, t in timings.items() if n in R2_SHARED}
-        sf = _sf_of(sf_dir)
-        return {
-            "metric": "total wall-clock of headline query suite (noop-sink forced)",
-            "value": total,
-            "unit": "sec",
-            "queries": timings,
-            "jobs": jobs,
-            "warmed_pool": warmed,
-            # round-over-round trend: BENCH_r02's 47 queries, comparable
-            # across catalogs of any size (only present on full runs)
-            "subtotal_r2_shared": (round(sum(shared.values()), 3)
-                                   if len(shared) == len(R2_SHARED) else None),
-            # the commit-count-bound family (fenced engine replays) --
-            # the slice the per-commit fixed-cost work moves
-            "subtotal_cdc": round(sum(
-                t for n, t in timings.items() if n.startswith("cdc_")), 3),
-            "sf": sf,
-            "cpus": cpus,
-            "n_queries": len(timings),
-            # rotation contract as data (VERDICT r4 ask #8): which
-            # last-green rounds the external gate's next head-50 sample
-            # will draw from, per the committed gate_history.json --
-            # {round: query_count}, round 0 = never driver-checked
-            "gate_head50_rounds": _gate_head50_rounds(),
-        }
-    finally:
-        spark.stop()
-
-
-def _gate_head50_rounds() -> dict[str, int]:
-    from yadamu___yet_another_data_migration_utility_spark.plans import (
-        GATE_HISTORY, QUERIES,
-    )
-
-    counts: dict[str, int] = {}
-    for q in list(QUERIES)[:50]:
-        r = str(GATE_HISTORY.get(q, 0))
-        counts[r] = counts.get(r, 0) + 1
-    return dict(sorted(counts.items()))
-
-
-def _sf_of(sf_dir: str) -> float:
-    base = os.path.basename(sf_dir.rstrip("/"))
-    try:
-        return float(base.replace("sf", ""))
-    except ValueError:
-        return -1.0
-
-
 def run_replay(n_events: int, cpus: int, n_batches: int = 5,
                log_path: str | None = None, dedup: str = "none") -> dict:
     """Flagship CDC replay throughput: synthetic changelog -> full
@@ -316,9 +110,6 @@ def run_replay(n_events: int, cpus: int, n_batches: int = 5,
     """
     from pyspark.sql import functions as F
 
-    from yadamu___yet_another_data_migration_utility_spark.fixtures.changelog import (
-        changelog_df,
-    )
     from yadamu___yet_another_data_migration_utility_spark.operators.apply import (
         apply_batch,
     )
@@ -410,8 +201,7 @@ def run_replay(n_events: int, cpus: int, n_batches: int = 5,
         shutil.rmtree(work, ignore_errors=True)
 
 
-def _gen_log(spark, n_events: int, n_batches: int, log_path: str,
-             hot_fraction: float = 0.2, n_hot: int = 5) -> None:
+def _gen_log(spark, n_events: int, n_batches: int, log_path: str) -> None:
     """Materialize the synthetic changelog (untimed setup).
 
     Range-partition + sort by lsn: a WAL is contiguous segments, and
@@ -427,7 +217,7 @@ def _gen_log(spark, n_events: int, n_batches: int, log_path: str,
 
     chg = changelog_df(
         spark, n_events=n_events, n_urls=max(1000, n_events // 10),
-        hot_fraction=hot_fraction, n_hot=n_hot,
+        hot_fraction=0.2, n_hot=5,
     )
     chg.repartitionByRange(n_batches * 16, "lsn").sortWithinPartitions(
         "lsn"
@@ -549,108 +339,32 @@ def _run_scaling_inner(n_events: int, n_batches: int, cpu_pair: tuple[int, int],
     }
 
 
-def run_skew(n_events: int, cpus: int, n_batches: int = 3) -> dict:
-    """Hot-domain skew ABLATION (the north rule's skew story, measured):
-    a changelog where ONE url receives half of every batch -- the
-    worst-case hash-bucket hot key -- replayed twice over the identical
-    pre-generated parquet log with ONE variable toggled: the write
-    path's key-derived salt split (``_distribute_delta``).
-
-    - **salted** (engine default): the hot bucket's rows split across
-      ceil(cores/buckets) write tasks, so extract + delta write of the
-      hot domain parallelize;
-    - **unsalted** (``SPARK_GRAFT_DISABLE_WRITE_SALT=1``): the hash
-      distribution alone routes the hot bucket -- and its 50% of every
-      batch -- through ONE task while the other cores idle.
-
-    Both sides run ``dedup="none"`` (the engine's web-crawl default),
-    so the ONLY difference is the salt -- the reduction path is not
-    conflated in. ``bucket_count`` is forced to cores/4 so the salt
-    has 4x headroom -- the regime the knob exists for (at 100 TB:
-    more cores than buckets is the steady state whenever a table's
-    bucket_count lags its cluster). Reports peak events/sec for both
-    and the salted/unsalted ratio; >1 means salting held throughput
-    the hot key would otherwise serialize away. The theoretical bound
-    here is ~(0.5 + 0.5/k)/(0.5/1) with k=4 splits ≈ 1.6-3x depending
-    on fixed per-batch costs; correctness equivalence is pinned by the
-    cdc_skew_salted_apply oracle query."""
-    work = tempfile.mkdtemp(prefix="bench_skew_", dir=_scratch_dir())
-    log_path = os.path.join(work, "hotlog")
-    old_buckets = os.environ.get("SPARK_GRAFT_BUCKETS")
-    try:
-        spark = build_spark(cpus)
-        try:
-            _gen_log(spark, n_events, n_batches, log_path,
-                     hot_fraction=0.5, n_hot=1)
-        finally:
-            spark.stop()
-        os.environ["SPARK_GRAFT_BUCKETS"] = str(max(2, cpus // 4))
-        os.environ["SPARK_GRAFT_DISABLE_WRITE_SALT"] = "1"
-        try:
-            unsalted = run_replay(n_events, cpus, n_batches,
-                                  log_path=log_path, dedup="none")
-        finally:
-            del os.environ["SPARK_GRAFT_DISABLE_WRITE_SALT"]
-        salted = run_replay(n_events, cpus, n_batches,
-                            log_path=log_path, dedup="none")
-        ratio = (salted["peak_batch_events_per_sec"]
-                 / max(unsalted["peak_batch_events_per_sec"], 1e-9))
-        return {
-            "metric": "hot-domain skew ablation (1 url = 50% of events; "
-                      "write-salt toggled, dedup=none both sides)",
-            "value": round(ratio, 3),
-            "unit": "salted/unsalted peak throughput ratio",
-            "salted_events_per_sec": salted["peak_batch_events_per_sec"],
-            "unsalted_events_per_sec": unsalted["peak_batch_events_per_sec"],
-            "salted_elapsed_sec": salted["elapsed_sec"],
-            "unsalted_elapsed_sec": unsalted["elapsed_sec"],
-            "events": n_events,
-            "cpus": cpus,
-            "bucket_count": max(2, cpus // 4),
-            "n_batches": n_batches,
-        }
-    finally:
-        if old_buckets is None:
-            os.environ.pop("SPARK_GRAFT_BUCKETS", None)
-        else:
-            os.environ["SPARK_GRAFT_BUCKETS"] = old_buckets
-        shutil.rmtree(work, ignore_errors=True)
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--replay", type=int, default=None, metavar="N_EVENTS",
-                    help="run the CDC replay throughput job instead of the query suite")
-    ap.add_argument("--scaling", type=int, nargs="?", const=3_000_000, default=None,
-                    metavar="N_EVENTS",
-                    help="run replay CPU-pinned at N and 4N cores (default local[2] "
-                         "vs local[8]), report scaling efficiency")
+    mode = ap.add_mutually_exclusive_group(required=True)
+    mode.add_argument("--replay", type=int, default=None, metavar="N_EVENTS",
+                      help="run the CDC replay throughput job")
+    mode.add_argument("--scaling", type=int, nargs="?", const=3_000_000, default=None,
+                      metavar="N_EVENTS",
+                      help="run replay CPU-pinned at N and 4N cores (default local[2] "
+                           "vs local[8]), report scaling efficiency")
+    mode.add_argument("--gen-log", type=int, default=None, metavar="N_EVENTS",
+                      help="only generate the changelog to --log-path, then exit")
     ap.add_argument("--batches", type=int, default=5,
                     help="micro-batch count for --replay/--scaling")
     ap.add_argument("--cpus", type=int,
                     default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR))
     ap.add_argument("--log-path", default=None,
                     help="reuse/write the changelog at this path (scaling protocol)")
-    ap.add_argument("--gen-log", type=int, default=None, metavar="N_EVENTS",
-                    help="only generate the changelog to --log-path, then exit")
-    ap.add_argument("--queries", default=None, metavar="NAME,NAME",
-                    help="run only this comma-separated catalog subset "
-                         "(iteration aid; the emitted total is then NOT "
-                         "comparable to full-suite rows)")
-    ap.add_argument("--skew", action="store_true",
-                    help="with --replay N: run the hot-domain skew ablation "
-                         "(salted vs unsalted) instead of the plain replay")
     ap.add_argument("--dedup", default="none",
                     choices=["none", "broadcast", "salted"],
                     help="pre-write dedup strategy for --replay/--scaling "
                          "(see run_replay docstring)")
     args = ap.parse_args()
 
-    if args.gen_log is not None and args.log_path is None:
-        ap.error("--gen-log requires --log-path (where to write the changelog)")
-
     if args.gen_log is not None:
+        if args.log_path is None:
+            ap.error("--gen-log requires --log-path (where to write the changelog)")
         spark = build_spark(args.cpus)
         try:
             _gen_log(spark, args.gen_log, args.batches, args.log_path)
@@ -659,15 +373,9 @@ def main() -> None:
         out = {"metric": "gen-log", "events": args.gen_log, "path": args.log_path}
     elif args.scaling is not None:
         out = run_scaling(args.scaling, args.batches)
-    elif args.replay is not None and args.skew:
-        out = run_skew(args.replay, args.cpus, args.batches)
-    elif args.replay is not None:
+    else:
         out = run_replay(args.replay, args.cpus, args.batches,
                          log_path=args.log_path, dedup=args.dedup)
-    else:
-        only = ([q.strip() for q in args.queries.split(",") if q.strip()]
-                if args.queries else None)
-        out = run_queries(args.sf_dir, args.cpus, only=only)
     print(json.dumps(out))
 
 

@@ -45,15 +45,32 @@ def test_aqe_guard_restores_on_exception(spark):
     assert spark.conf.get(_AQE_KEY) == before
 
 
-def test_apply_batch_leaves_aqe_enabled(spark, tmp_path):
+def test_apply_batch_leaves_aqe_enabled(spark, tmp_path, monkeypatch):
+    """AQE is off inside a merge-on-read merge only: a copy-on-write
+    merge keeps the session's value for its resolve join, and either
+    way the session's value is back once apply_batch returns."""
     before = spark.conf.get(_AQE_KEY)
-    t = LakeTable.create(str(tmp_path / "t"), SCHEMA, key="url",
-                         bucket_count=4, merge_mode="mor")
-    apply_batch(t, spark.createDataFrame(
-        [("a", "1", "I", 1)], CHG), 0, run_extract=False)
-    assert spark.conf.get(_AQE_KEY) == before
-    # aborted batch (poison rows over the limit) restores too
-    with pytest.raises(BatchAborted):
+    for mode, inside in (("cow", before), ("mor", "false")):
+        t = LakeTable.create(str(tmp_path / mode), SCHEMA, key="url",
+                             bucket_count=4, merge_mode=mode)
+        seen = []
+        merge = t.merge
+
+        def spy(*args, pre_commit_hook=None, **kwargs):
+            def hook():
+                seen.append(spark.conf.get(_AQE_KEY))
+                if pre_commit_hook is not None:
+                    pre_commit_hook()
+            return merge(*args, pre_commit_hook=hook, **kwargs)
+
+        monkeypatch.setattr(t, "merge", spy)
         apply_batch(t, spark.createDataFrame(
-            [(None, "x", "I", 2)], CHG), 1, run_extract=False, max_errors=0)
-    assert spark.conf.get(_AQE_KEY) == before
+            [("a", "1", "I", 1)], CHG), 0, run_extract=False)
+        assert seen == [inside], mode
+        assert spark.conf.get(_AQE_KEY) == before
+        # aborted batch (poison rows over the limit) restores too
+        with pytest.raises(BatchAborted):
+            apply_batch(t, spark.createDataFrame(
+                [(None, "x", "I", 2)], CHG), 1, run_extract=False, max_errors=0)
+        assert seen == [inside, inside], mode
+        assert spark.conf.get(_AQE_KEY) == before

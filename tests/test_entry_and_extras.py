@@ -1,15 +1,10 @@
-"""Driver-contract smoke tests + measured-recall acceptance for the
-approximate (LSH) operators: their bucketing is exactly hash-checked by
-the oracles, and THIS file pins how much of the brute-force truth the
-buckets recover."""
+"""Driver-contract smoke tests: ``entry`` returns the replayed CDC
+state, and ``queries``/``oracle_sql`` serve exactly the kept CDC
+queries."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-
 import __spark_entry__ as entrymod
-
-SF = "/root/testdata/sf0.001"
 
 
 def test_entry_returns_rows(spark):
@@ -19,273 +14,7 @@ def test_entry_returns_rows(spark):
 
 
 def test_contract_shapes(spark):
-    qs = entrymod.queries()
-    os_ = entrymod.oracle_sql()
-    assert set(os_.keys()) <= set(qs.keys())
-    assert len(qs) >= 20
-    # every catalog entry is oracle-checked (r1 verdict item 5: the
-    # LSH + stub-codec entries gained exact oracles by replicating
-    # their deterministic algorithms in SQL)
-    assert set(qs.keys()) == set(os_.keys())
-
-
-def test_ann_lsh_recall_vs_bruteforce(spark):
-    """Measured recall@5 of the bucketed ANN against the brute-force
-    baseline, over the same 8 queries. Single-table 8-bit LSH on
-    near-orthogonal synthetic vectors is the weakest case for LSH;
-    the pinned floor documents the trade (scale path = more tables)."""
-    qs = entrymod.queries()
-    brute = {
-        (r["query_id"], r["neighbor_id"])
-        for r in qs["ann_cosine_topk"](spark, SF).collect()
-    }
-    lsh = {
-        (r["query_id"], r["neighbor_id"])
-        for r in qs["ann_lsh_bucketed"](spark, SF).collect()
-    }
-    assert brute and lsh
-    recall = len(brute & lsh) / len(brute)
-    # pinned floor; measured value printed for the record
-    print(f"ann_lsh_bucketed recall@5 vs brute force: {recall:.3f}")
-    assert recall >= 0.2, f"recall collapsed: {recall}"
-
-
-def test_ann_ivf_recall_vs_bruteforce(spark):
-    """Measured recall@5 of the IVF (nearest-cell, NPROBE=2) ANN against
-    the brute-force baseline over the same 8 queries. Label-derived
-    cells on synthetic near-orthogonal vectors are a weak quantizer, so
-    the floor is modest; the pipeline (assign -> probe -> exact verify)
-    is exactly hash-checked by the DuckDB oracle regardless."""
-    qs = entrymod.queries()
-    brute = {
-        (r["query_id"], r["neighbor_id"])
-        for r in qs["ann_cosine_topk"](spark, SF).collect()
-    }
-    ivf = {
-        (r["query_id"], r["neighbor_id"])
-        for r in qs["ann_ivf"](spark, SF).collect()
-    }
-    assert brute and ivf
-    recall = len(brute & ivf) / len(brute)
-    print(f"ann_ivf recall@5 vs brute force: {recall:.3f}")
-    assert recall >= 0.2, f"recall collapsed: {recall}"
-
-
-def test_embedding_dedup_candidate_recall(spark):
-    """Measured recall of the 16x4 multi-table LSH candidate pairs vs
-    the exact >=0.35 brute-force pair set (the r1 BNLJ implementation,
-    reproduced here as the test oracle)."""
-    e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    to_d = lambda c: F.transform(F.col(c), lambda x: x.cast("double"))  # noqa: E731
-    p = e.filter(F.col("vec_id") % 10 == 0).select(
-        F.col("vec_id").alias("probe_id"), to_d("embedding").alias("pe")
-    )
-    t = e.select(F.col("vec_id").alias("cand_id"), to_d("embedding").alias("te"))
-
-    def dot(x, y):
-        return F.aggregate(F.zip_with(x, y, lambda a, b: a * b), F.lit(0.0), lambda s, v: s + v)
-
-    def norm(x):
-        return F.sqrt(F.aggregate(F.transform(x, lambda a: a * a), F.lit(0.0), lambda s, v: s + v))
-
-    sim = dot(F.col("pe"), F.col("te")) / (norm(F.col("pe")) * norm(F.col("te")))
-    exact = {
-        (r["probe_id"], r["cand_id"])
-        for r in t.join(F.broadcast(p), F.col("probe_id") < F.col("cand_id"))
-        .select("probe_id", "cand_id", sim.alias("sim"))
-        .filter(F.col("sim") >= 0.35)
-        .collect()
-    }
-    got = {
-        (r["probe_id"], r["cand_id"])
-        for r in entrymod.queries()["dedup_embedding_cosine"](spark, SF).collect()
-    }
-    assert exact, "test setup: no exact pairs at this SF"
-    recall = len(exact & got) / len(exact)
-    print(f"dedup_embedding_cosine candidate recall vs exact: {recall:.3f}")
-    # these tail pairs (sim 0.35-0.46) are the HARD case for hyperplane
-    # LSH; genuinely-near pairs (>=0.9) recall ~0.998 at 16x4
-    assert recall >= 0.5, f"recall collapsed: {recall}"
-    # no false positives: the exact-verify stage must keep candidates
-    # only when they really clear the threshold
-    extra = got - exact
-    assert not extra, f"pairs below threshold leaked through verify: {sorted(extra)[:5]}"
-
-
-def test_media_decode_meta_deterministic(spark):
-    qs = entrymod.queries()
-    a = qs["media_decode_meta"](spark, SF).orderBy("media_id").collect()
-    b = qs["media_decode_meta"](spark, SF).orderBy("media_id").collect()
-    assert a == b
-    assert all(64 <= r["width"] <= 255 and r["n_bytes"] > 0 for r in a)
-
-
-def test_frame_sample_plumbing(spark):
-    from yadamu___yet_another_data_migration_utility_spark.functions.multimodal import (
-        frame_sample,
-    )
-
-    d = spark.read.parquet(f"{SF}/documents.parquet").select(
-        F.col("doc_id").alias("media_id"),
-        F.encode(F.col("text"), "UTF-8").alias("payload"),
-    )
-    fs = frame_sample(d, every_n=2)
-    rows = fs.groupBy("media_id").count().collect()
-    assert all(1 <= r["count"] <= 2 for r in rows)  # n_frames in 1..4, every 2nd
-
-def test_dedup_clusters_transitive_keeplist(spark):
-    """dedup_clusters must assign one label per connected component of
-    the MinHash pair graph (A~B~C collapses to ONE cluster even when
-    the A~C pair was never emitted), label it with the component's
-    minimum doc_id, and mark exactly that doc as keep."""
-    qs = entrymod.queries()
-    pairs = [
-        (r["doc1"], r["doc2"])
-        for r in qs["minhash_lsh_dedup"](spark, SF).collect()
-    ]
-    labels = {
-        r["doc_id"]: (r["cluster"], r["keep"])
-        for r in qs["dedup_clusters"](spark, SF).collect()
-    }
-    assert pairs, "test setup: no near-dup pairs at this SF"
-    # domain = exactly the docs appearing in any pair
-    assert set(labels) == {d for p in pairs for d in p}
-    # transitivity: both endpoints of every pair share a cluster
-    for a, b in pairs:
-        assert labels[a][0] == labels[b][0], (a, b)
-    # cluster id is the component minimum; keep <=> doc IS that minimum
-    by_cluster: dict[int, list[int]] = {}
-    for doc, (cl, _) in labels.items():
-        by_cluster.setdefault(cl, []).append(doc)
-    for cl, members in by_cluster.items():
-        assert cl == min(members)
-        assert [d for d in members if labels[d][1]] == [cl]
-
-
-def test_url_canonicalization_semantics(spark):
-    """Tracking params must vanish (variant collapses into the bare
-    URL) while REAL params survive, order-normalized -- conflating the
-    two would merge genuinely different pages."""
-    qs = entrymod.queries()
-    rows = {r["canonical_url"]: r for r in qs["url_canonical_dedup"](spark, SF).collect()}
-    bare = [u for u in rows if "?" not in u]
-    parammed = [u for u in rows if "?" in u]
-    assert bare and parammed
-    # every parammed canonical keeps exactly the sorted real params
-    assert all(u.endswith("?a=1&b=2") for u in parammed)
-    # no tracking params, ports, fragments, or uppercase hosts survive
-    for u in rows:
-        assert "utm_" not in u and ":443" not in u and "#" not in u
-        assert u.split("?")[0] == u.split("?")[0].lower()
-    # bare canonicals fold multiple raw spellings together
-    assert any(rows[u]["n_variants"] > 1 for u in bare)
-
-
-def test_boilerplate_score_bounds(spark):
-    qs = entrymod.queries()
-    rows = qs["boilerplate_score"](spark, SF).collect()
-    assert rows
-    for r in rows:
-        assert 0 <= r["n_boiler"] <= r["n_shingles"]
-        assert abs(r["boiler_ratio"] - r["n_boiler"] / r["n_shingles"]) < 1e-12
-        from yadamu___yet_another_data_migration_utility_spark.plans.webtext import (
-            BOILER_DROP_RATIO,
-        )
-
-        assert r["keep"] == (r["boiler_ratio"] < BOILER_DROP_RATIO)
-
-
-def test_canonical_url_idempotent(spark):
-    """canonical_url must be a projection onto its own image:
-    canon(canon(u)) == canon(u) for every crawler spelling."""
-    from yadamu___yet_another_data_migration_utility_spark.functions.urltools import (
-        canonical_url,
-    )
-
-    qs = entrymod.queries()
-    c1 = qs["url_canonical_dedup"](spark, SF).select(
-        F.col("canonical_url").alias("u")
-    )
-    twice = c1.select("u", canonical_url(F.col("u")).alias("u2"))
-    assert twice.filter(F.col("u") != F.col("u2")).count() == 0
-
-
-def test_canonical_url_library_edge_cases(spark):
-    """The library surface must only strip the default port at the
-    https authority -- ':443' in paths/query values and on http (where
-    443 is NOT the default) is meaningful and must survive."""
-    from yadamu___yet_another_data_migration_utility_spark.functions.urltools import (
-        canonical_url,
-    )
-
-    cases = [
-        # (raw, expected canonical)
-        ("https://a.com/docs/rfc:443/intro", "https://a.com/docs/rfc:443/intro"),
-        ("https://a.com/r?to=https://b.com:443/p", "https://a.com/r?to=https://b.com:443/p"),
-        ("http://h:443/x", "http://h:443/x"),
-        ("https://h:443", "https://h"),
-        ("https://h:443/x", "https://h/x"),
-        ("https://h:443?a=1", "https://h?a=1"),
-        ("HTTPS://H.COM/Path#f", "https://h.com/Path"),
-        ("https://h/p?utm_source=x", "https://h/p"),
-        ("https://h/p?z=1&a=2", "https://h/p?a=2&z=1"),
-        # path-less URL: query values keep their case (authority regex
-        # must stop at '?')
-        ("https://a.com?id=AbC", "https://a.com?id=AbC"),
-        ("HTTPS://A.COM?id=AbC", "https://a.com?id=AbC"),
-    ]
-    df = spark.createDataFrame([(r,) for r, _ in cases], "raw string")
-    got = {
-        r["raw"]: r["canon"]
-        for r in df.select("raw", canonical_url(F.col("raw")).alias("canon")).collect()
-    }
-    for raw, want in cases:
-        assert got[raw] == want, (raw, got[raw], want)
-
-
-def test_pipeline_keep_list_consistent_with_components(spark):
-    """The composed keep-list must agree with its component operators
-    under the documented precedence (exact_dup > near_dup > boilerplate
-    > too_short), recomputed independently here in plain Python."""
-    import hashlib
-
-    from yadamu___yet_another_data_migration_utility_spark.plans.webtext import (
-        BOILER_DROP_RATIO,
-        MIN_WORDS,
-    )
-    from yadamu___yet_another_data_migration_utility_spark.plans.textops import docs_aug
-
-    qs = entrymod.queries()
-    docs = {r["doc_id"]: r["text"] for r in docs_aug(spark, SF).collect()}
-    clusters = {
-        r["doc_id"]: r["cluster"] for r in qs["dedup_clusters"](spark, SF).collect()
-    }
-    ratios = {
-        r["doc_id"]: r["boiler_ratio"]
-        for r in qs["boilerplate_score"](spark, SF).collect()
-    }
-    min_by_md5: dict[str, int] = {}
-    for d, t in docs.items():
-        fp = hashlib.md5(t.encode()).hexdigest()
-        min_by_md5[fp] = min(min_by_md5.get(fp, d), d)
-
-    def expected(d: int) -> str | None:
-        if d != min_by_md5[hashlib.md5(docs[d].encode()).hexdigest()]:
-            return "exact_dup"
-        if d in clusters and clusters[d] != d:
-            return "near_dup"
-        if ratios.get(d) is not None and ratios[d] >= BOILER_DROP_RATIO:
-            return "boilerplate"
-        if len(docs[d].split(" ")) < MIN_WORDS:
-            return "too_short"
-        return None
-
-    got = {r["doc_id"]: (r["keep"], r["reason"])
-           for r in qs["pipeline_keep_list"](spark, SF).collect()}
-    assert set(got) == set(docs)
-    for d in docs:
-        want = expected(d)
-        assert got[d] == (want is None, want), (d, got[d], want)
-    # the corpus actually exercises the dedup legs at this SF
-    assert any(r == "exact_dup" for _, r in got.values())
-    assert any(r == "near_dup" for _, r in got.values())
+    # the CDC queries that are each the only test of some engine line
+    kept = {"cdc_replay_merge", "cdc_envelope_decode", "cdc_skew_salted_apply"}
+    assert set(entrymod.queries()) == kept
+    assert set(entrymod.oracle_sql()) == kept

@@ -138,16 +138,17 @@ def test_import_json_bounded_driver_memory(tmp_path):
     assert n == n_rows
 
 
-@pytest.mark.parametrize("fmt", ["csv", "json"])
+@pytest.mark.parametrize("fmt", ["csv", "json", "parquet"])
 def test_staged_compression_option(spark, tmp_path, fmt):
     """The staged writer's compression option (reference gzip chain,
-    fileDBI.js:344-372) must produce .gz data files that load back
+    fileDBI.js:344-372) must produce gzip data files that load back
     losslessly."""
     df = tricky_df(spark).drop("d")  # JSON text format cannot carry NaN/Inf
     root = str(tmp_path / f"ds_{fmt}")
     unload({"t": df}, root, fmt=fmt, compression="gzip")
     data_dir = os.path.join(root, "data", "t")
-    assert any(f.endswith(".gz") for f in os.listdir(data_dir)), os.listdir(data_dir)
+    suffix = ".gz.parquet" if fmt == "parquet" else ".gz"
+    assert any(f.endswith(suffix) for f in os.listdir(data_dir)), os.listdir(data_dir)
     back = load_staged(spark, root)["t"]
     res = compare(df, back)
     assert res.ok, res

@@ -13,10 +13,7 @@ import pytest
 from yadamu___yet_another_data_migration_utility_spark.plans import ORACLES, QUERIES
 
 SF_DIR = "/root/testdata/sf0.001"
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+TABLES = ["events"]
 
 
 @pytest.fixture(scope="module")
@@ -61,6 +58,6 @@ def test_query_matches_oracle(spark, duck, name):
 
 
 def test_all_queries_have_entries():
-    # every query either has an oracle or is explicitly non-SQL-expressible
-    assert set(ORACLES.keys()) <= set(QUERIES.keys())
-    assert len(QUERIES) >= 10
+    # every query has an oracle (the exact set is pinned in
+    # test_entry_and_extras.py::test_contract_shapes)
+    assert QUERIES and set(ORACLES) == set(QUERIES)

@@ -23,10 +23,11 @@ Subpackages
 -----------
 sources/    table formats + changelog readers (laketable, file changelog)
 operators/  CDC batch apply, dedup reductions, fencing, metrics
-functions/  column-level functions: text extraction, text analysis,
-            dedup signatures (minhash/simhash), similarity, multimodal
+functions/  column-level functions: text extraction, MinHash dedup
+            signatures, md5/HyperLogLog sketch primitives
 streaming/  Structured Streaming wrapper (foreachBatch, checkpoints)
-plans/      query catalog used by __spark_entry__ and bench.py
+plans/      CDC engine queries with DuckDB oracles, served by
+            __spark_entry__
 fixtures/   deterministic synthetic changelog generator (seeded, pure
             Spark -- no external data)
 """

@@ -1,3 +1,4 @@
-"""Column-level functions: extraction, text analysis, dedup signatures,
-similarity. All JVM-side Catalyst builtins where possible; Arrow-batched
-pandas UDFs for the rest (never per-row Python UDFs)."""
+"""Column-level functions: html -> text extraction, MinHash dedup
+signatures and the shared md5/HyperLogLog sketch primitives. All
+JVM-side Catalyst builtins where possible; Arrow-batched pandas UDFs for
+the rest (never per-row Python UDFs)."""

@@ -2,12 +2,12 @@
 contract and the integer-exact HyperLogLog register algebra.
 
 ONE home for spellings that must stay bit-identical everywhere they
-appear -- the query catalog's oracle-checked sketches
-(plans/sketches.py), the engine's ANALYZE statistics
-(sources/laketable.py), and every md5-die/fingerprint query
-(plans/textops.py re-exports ``md5_long`` as its ``_md5_long``).
+appear -- the engine's ANALYZE statistics and bloom sidecars
+(sources/) and the MinHash signature (functions/minhash.py). DuckDB
+spells the same hash ``CAST(concat('0x', substr(md5(x), 1, 15)) AS
+BIGINT)``.
 
-Determinism rules (see plans/sketches.py for the full rationale):
+Determinism rules:
 - md5 -> first 15 hex chars -> 60-bit BIGINT (both engines agree);
 - integer DIV for hash splitting (60-bit values exceed double range);
 - register rho from length(bin(x)), never floor(log2);
@@ -21,13 +21,8 @@ import math
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-#: DuckDB spelling of the same 60-bit hash (format with x=<sql expr>)
-MD5_LONG_SQL = "CAST(concat('0x', substr(md5({x}), 1, 15)) AS BIGINT)"
-
-
 def md5_long(c: Column) -> Column:
-    """60-bit hash from md5 -- identical in Spark and DuckDB
-    (``MD5_LONG_SQL`` is the oracle-side spelling)."""
+    """60-bit hash from md5 -- identical in Spark and DuckDB."""
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 

@@ -51,7 +51,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.extract import extract_text
-from ..sources.laketable import LakeTable, MergeResult, _aqe_off, _keylist
+from ..sources.laketable import LakeTable, MergeResult, _keylist
 
 QUARANTINE_DIR = "quarantine"
 
@@ -409,24 +409,15 @@ def apply_batch(
             )
 
     try:
-        # AQE off for the ingest merge ONLY: this plan is shallow and
-        # fully statically decided (scan -> hinted-broadcast winner
-        # semi-join -> explicit salted repartition -> write), so AQE
-        # contributes nothing but per-exchange materialization barriers
-        # -- measured ~0.2 s pure scheduling per suite-sized commit and
-        # 3.7x on 20k-event replay batches, neutral at 3M events. Deep
-        # merge plans (incremental-rollup refresh, merge_into, CoW
-        # resolve) keep AQE: runtime coalescing/skew-split pays there.
-        with _aqe_off(spark):
-            res: MergeResult = table.merge(
-                spark,
-                reduced,
-                batch_id,
-                op_col=op_col,
-                lsn_col=lsn_col,
-                extra_audit=counts,
-                pre_commit_hook=_pre_commit,
-            )
+        res: MergeResult = table.merge(
+            spark,
+            reduced,
+            batch_id,
+            op_col=op_col,
+            lsn_col=lsn_col,
+            extra_audit=counts,
+            pre_commit_hook=_pre_commit,
+        )
     except _SkipBatch:
         v = table.record_skip(batch_id, extra_audit=counts)
         n_in, n_bad = counts["rows_batch_in"], counts["rows_quarantined"]

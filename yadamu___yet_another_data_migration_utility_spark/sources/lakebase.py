@@ -193,10 +193,7 @@ def _distribute_delta(df: DataFrame, key, nb: int, spark) -> DataFrame:
     differs from the bucket hash so the split is independent of
     bucket placement."""
     dp = spark.sparkContext.defaultParallelism
-    if dp > nb and not os.environ.get("SPARK_GRAFT_DISABLE_WRITE_SALT"):
-        # SPARK_GRAFT_DISABLE_WRITE_SALT is an ABLATION knob for
-        # bench.py --skew only: it measures what a hot bucket costs
-        # without the salt split. Never set it in production.
+    if dp > nb:
         k = -(-dp // nb)  # ceil
         salt = F.pmod(
             F.xxhash64(*[F.col(c) for c in _keylist(key)], F.lit(-7)),
@@ -656,10 +653,13 @@ def _aqe_off(spark: SparkSession):
     by the key-derived salt split -- so AQE contributes only its
     per-exchange materialization barriers (the broadcast build becomes
     its own scheduled job, each shuffle a staged checkpoint), measured
-    ~0.1-0.2 s of pure scheduling per commit at suite batch sizes and
-    nothing at 3M-event batches. CoW merges and compactions keep AQE:
-    their resolve joins are where runtime re-planning (skew-join
-    splitting) genuinely pays. Refcounted like ``_ts_micros``; the
+    ~0.1-0.2 s of pure scheduling per commit at suite batch sizes, 3.7x
+    on 20k-event replay batches, and nothing at 3M-event batches.
+    ``LakeTable._merge_mor`` holds it for its whole body, so every MoR
+    merge runs without AQE. CoW merges hold it only while they cache
+    and materialize the batch (so an upstream Observation fires);
+    their resolve joins and compactions keep AQE, where runtime
+    re-planning (skew-join splitting) genuinely pays. Refcounted like ``_ts_micros``; the
     saved value is restored when the last writer exits."""
     with _conf_guard(spark, _AQE_KEY, "false", _AQE_STATE):
         yield

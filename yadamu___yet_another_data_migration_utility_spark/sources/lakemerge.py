@@ -199,126 +199,131 @@ class MergeMixin:
         which bounds the commit's file count at O(buckets).
         Per-bucket lineage comes from the parquet footers of the files
         just written (row counts + ``_lsn`` min/max): driver-side
-        O(files), no second job."""
+        O(files), no second job.
+
+        The whole merge runs under ``_aqe_off``: its plan is decided
+        statically, so AQE would add only materialization barriers."""
         from pyspark.sql import Observation
 
-        t0 = time.monotonic()
-        _dbg = os.environ.get("SPARK_GRAFT_DEBUG_TIMING")
+        with _aqe_off(spark):
+            t0 = time.monotonic()
+            _dbg = os.environ.get("SPARK_GRAFT_DEBUG_TIMING")
 
-        def _tick(label, _last=[t0]):
-            if _dbg:
-                now = time.monotonic()
-                print(f"    merge.{label}: {now - _last[0]:.2f}s", flush=True)
-                _last[0] = now
+            def _tick(label, _last=[t0]):
+                if _dbg:
+                    now = time.monotonic()
+                    print(f"    merge.{label}: {now - _last[0]:.2f}s", flush=True)
+                    _last[0] = now
 
-        table_schema = _evolved_schema(m, batch_df, op_col, lsn_col)
-        src = batch_df.withColumnRenamed(lsn_col, LSN_COL)
-        src = _align(src, table_schema, keep=[op_col])
-        delta = src.withColumn(DELETED_COL, F.col(op_col) == "D").drop(op_col)
+            table_schema = _evolved_schema(m, batch_df, op_col, lsn_col)
+            src = batch_df.withColumnRenamed(lsn_col, LSN_COL)
+            src = _align(src, table_schema, keep=[op_col])
+            delta = src.withColumn(DELETED_COL, F.col(op_col) == "D").drop(op_col)
 
-        key, nb = m["key"], m["bucket_count"]
-        obs = Observation(f"merge_mor_{batch_id}")
-        out_dir, rel_dir = self._new_commit_dir(m["version"] + 1)
-        with _ts_micros(spark):
-            (
-                _distribute_delta(
-                    delta.withColumn("_b", _bucket_expr(key, nb)),
-                    key, nb, spark,
+            key, nb = m["key"], m["bucket_count"]
+            obs = Observation(f"merge_mor_{batch_id}")
+            out_dir, rel_dir = self._new_commit_dir(m["version"] + 1)
+            with _ts_micros(spark):
+                (
+                    _distribute_delta(
+                        delta.withColumn("_b", _bucket_expr(key, nb)),
+                        key, nb, spark,
+                    )
+                    .observe(
+                        obs,
+                        F.count(F.lit(1)).alias("n"),
+                        F.sum(F.col(DELETED_COL).cast("long")).alias("dels"),
+                        F.min(LSN_COL).alias("mn"),
+                        F.max(LSN_COL).alias("mx"),
+                    )
+                    .write.partitionBy("_b")
+                    .parquet(self.fs.spark_path(out_dir))
                 )
-                .observe(
-                    obs,
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum(F.col(DELETED_COL).cast("long")).alias("dels"),
-                    F.min(LSN_COL).alias("mn"),
-                    F.max(LSN_COL).alias("mx"),
-                )
-                .write.partitionBy("_b")
-                .parquet(self.fs.spark_path(out_dir))
+            _tick("delta_write")
+            got = obs.get
+            try:
+                if pre_commit_hook is not None:
+                    pre_commit_hook()  # may raise -> clean abort below
+            except Exception:
+                self.fs.rmtree(out_dir)  # nothing referenced it yet
+                raise
+            _tick("hook")
+
+            new_files = _list_bucket_files(self.fs, out_dir, rel_dir)
+            lineage: list[dict[str, Any]] = []
+            # zone maps are collected UNCONDITIONALLY (the footers are open
+            # anyway); collect_lineage gates only the lineage rows -- the
+            # two features are independent
+            per_bucket, zone, frows = _footer_stats(
+                self.fs, self.root, new_files, schema=table_schema,
             )
-        _tick("delta_write")
-        got = obs.get
-        try:
-            if pre_commit_hook is not None:
-                pre_commit_hook()  # may raise -> clean abort below
-        except Exception:
-            self.fs.rmtree(out_dir)  # nothing referenced it yet
-            raise
-        _tick("hook")
+            if collect_lineage:
+                for b, fstats in per_bucket.items():
+                    lineage.append({"batch_id": batch_id, "bucket": int(b), **fstats})
+            _tick("footers")
 
-        new_files = _list_bucket_files(self.fs, out_dir, rel_dir)
-        lineage: list[dict[str, Any]] = []
-        # zone maps are collected UNCONDITIONALLY (the footers are open
-        # anyway); collect_lineage gates only the lineage rows -- the
-        # two features are independent
-        per_bucket, zone, frows = _footer_stats(
-            self.fs, self.root, new_files, schema=table_schema,
-        )
-        if collect_lineage:
-            for b, fstats in per_bucket.items():
-                lineage.append({"batch_id": batch_id, "bucket": int(b), **fstats})
-        _tick("footers")
+            n_in = got["n"] or 0
+            dels = got["dels"] or 0
 
-        n_in = got["n"] or 0
-        dels = got["dels"] or 0
+            def build(mp: dict[str, Any]) -> dict[str, Any]:
+                # rebase: a mor merge only APPENDS delta files + its fence
+                # entry, which composes with any intervening commit (another
+                # merge, an append, even a compact -- our files were not part
+                # of what it folded). Only a concurrent schema change aborts.
+                if mp is not m and mp["schema"] != m["schema"]:
+                    raise RebaseError(
+                        "concurrent schema change during merge; retry the batch"
+                    )
+                v = mp["version"] + 1
+                deltas = {k: list(fl) for k, fl in mp.get("deltas", {}).items()}
+                for b, files in new_files.items():
+                    deltas[b] = deltas.get(b, []) + files
+                applied = dict(mp["applied_batches"])
+                applied[str(batch_id)] = {"version": v, "op": "merge"}
+                audit = {
+                    "batch_id": batch_id,
+                    "operation": "merge",
+                    "mode": "mor",
+                    "rows_in": n_in,
+                    "rows_applied": n_in - dels,
+                    "rows_deleted": dels,
+                    "min_lsn": got["mn"],
+                    "max_lsn": got["mx"],
+                    "touched_buckets": len(new_files),
+                    "version": v,
+                    **(extra_audit or {}),
+                }
+                return {
+                    **mp,
+                    "version": v,
+                    "parent": mp["version"],
+                    "schema": table_schema.jsonValue(),
+                    "deltas": deltas,
+                    "applied_batches": _cap(applied),
+                    "lsn_high": max(mp.get("lsn_high") or 0, got["mx"] or 0),
+                    "audit": audit,
+                    "lineage": lineage,
+                    "stats": {**_inherit_stats(mp), **zone},
+                    "file_rows": {**mp.get("file_rows", {}), **frows},
+                    "summary": {"operation": "merge", "mode": "mor",
+                                "rows_written": n_in},
+                    "committed_at": _utc_now_iso(),
+                }
 
-        def build(mp: dict[str, Any]) -> dict[str, Any]:
-            # rebase: a mor merge only APPENDS delta files + its fence
-            # entry, which composes with any intervening commit (another
-            # merge, an append, even a compact -- our files were not part
-            # of what it folded). Only a concurrent schema change aborts.
-            if mp is not m and mp["schema"] != m["schema"]:
-                raise RebaseError(
-                    "concurrent schema change during merge; retry the batch"
-                )
-            v = mp["version"] + 1
-            deltas = {k: list(fl) for k, fl in mp.get("deltas", {}).items()}
-            for b, files in new_files.items():
-                deltas[b] = deltas.get(b, []) + files
-            applied = dict(mp["applied_batches"])
-            applied[str(batch_id)] = {"version": v, "op": "merge"}
-            audit = {
-                "batch_id": batch_id,
-                "operation": "merge",
-                "mode": "mor",
-                "rows_in": n_in,
-                "rows_applied": n_in - dels,
-                "rows_deleted": dels,
-                "min_lsn": got["mn"],
-                "max_lsn": got["mx"],
-                "touched_buckets": len(new_files),
-                "version": v,
-                **(extra_audit or {}),
-            }
-            return {
-                **mp,
-                "version": v,
-                "parent": mp["version"],
-                "schema": table_schema.jsonValue(),
-                "deltas": deltas,
-                "applied_batches": _cap(applied),
-                "lsn_high": max(mp.get("lsn_high") or 0, got["mx"] or 0),
-                "audit": audit,
-                "lineage": lineage,
-                "stats": {**_inherit_stats(mp), **zone},
-                "file_rows": {**mp.get("file_rows", {}), **frows},
-                "summary": {"operation": "merge", "mode": "mor", "rows_written": n_in},
-                "committed_at": _utc_now_iso(),
-            }
-
-        try:
-            committed = self._commit_with_rebase(m, build, batch_id=batch_id)
-        except (CommitConflict, RebaseError):
-            self.fs.rmtree(out_dir)  # unreferenced; leave the table clean
-            raise
-        _tick("manifest")
-        dt = int((time.monotonic() - t0) * 1000)
-        if committed is None:  # a concurrent writer fenced this batch first
-            self.fs.rmtree(out_dir)
-            return MergeResult(batch_id, None, True, 0, 0, 0, None, None, 0, dt)
-        return MergeResult(
-            batch_id, committed["version"], False, n_in, n_in - dels, dels,
-            got["mn"], got["mx"], len(new_files), dt,
-        )
+            try:
+                committed = self._commit_with_rebase(m, build, batch_id=batch_id)
+            except (CommitConflict, RebaseError):
+                self.fs.rmtree(out_dir)  # unreferenced; leave the table clean
+                raise
+            _tick("manifest")
+            dt = int((time.monotonic() - t0) * 1000)
+            if committed is None:  # a concurrent writer fenced this batch first
+                self.fs.rmtree(out_dir)
+                return MergeResult(batch_id, None, True, 0, 0, 0, None, None, 0, dt)
+            return MergeResult(
+                batch_id, committed["version"], False, n_in, n_in - dels, dels,
+                got["mn"], got["mx"], len(new_files), dt,
+            )
 
     # ------------------------------------------------------------------
     def _merge_cow(
@@ -345,21 +350,30 @@ class MergeMixin:
         data_cols = [f.name for f in table_schema.fields if f.name != LSN_COL]
 
         src = batch_df.withColumnRenamed(lsn_col, LSN_COL)
-        src = _align(src, table_schema, keep=[op_col]).persist()
+        src = _align(src, table_schema, keep=[op_col])
         try:
             # ---- ONE job: touched buckets + audit numbers per bucket --
             # (bucket discovery for pruning and the audit stats share a
-            # scan; the groupBy on ~nb groups collects a tiny result)
-            bstats = (
-                src.groupBy(_bucket_expr(key, nb).alias("_b"))
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.min(LSN_COL).alias("mn"),
-                    F.max(LSN_COL).alias("mx"),
-                    F.sum(F.when(F.col(op_col) == "D", 1).otherwise(0)).alias("dels"),
+            # scan; the groupBy on ~nb groups collects a tiny result).
+            # The batch is cached and materialized with AQE off (a cache
+            # fixes its plan at persist time): AQE's empty-relation
+            # propagation would skip an observed subtree whose join
+            # partner came out empty, so an Observation the caller
+            # attached upstream would never fire. The resolve join
+            # below keeps AQE.
+            with _aqe_off(spark):
+                src = src.persist()
+                bstats = (
+                    src.groupBy(_bucket_expr(key, nb).alias("_b"))
+                    .agg(
+                        F.count(F.lit(1)).alias("n"),
+                        F.min(LSN_COL).alias("mn"),
+                        F.max(LSN_COL).alias("mx"),
+                        F.sum(F.when(F.col(op_col) == "D", 1)
+                              .otherwise(0)).alias("dels"),
+                    )
+                    .collect()
                 )
-                .collect()
-            )
             touched = [r["_b"] for r in bstats]
             if pre_commit_hook is not None:
                 pre_commit_hook()  # may raise -> clean abort, nothing committed
