@@ -2,7 +2,7 @@
 
 ``entry(spark)`` runs the flagship CDC replay (events-derived changelog
 through the real LakeTable MERGE engine) at sf0.001. ``queries()`` /
-``oracle_sql()`` expose the CDC engine queries of
+``oracle_sql()`` expose the query catalog of
 ``yadamu___yet_another_data_migration_utility_spark.plans``.
 """
 
@@ -25,7 +25,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per CDC engine query. Computed columns are aliased
+    """One entry per catalog query. Computed columns are aliased
     identically in Spark and the oracle SQL."""
     return dict(QUERIES)
 

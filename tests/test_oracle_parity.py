@@ -13,7 +13,10 @@ import pytest
 from yadamu___yet_another_data_migration_utility_spark.plans import ORACLES, QUERIES
 
 SF_DIR = "/root/testdata/sf0.001"
-TABLES = ["events"]
+TABLES = [
+    "region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings",
+]
 
 
 @pytest.fixture(scope="module")

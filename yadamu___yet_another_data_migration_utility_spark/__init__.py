@@ -23,10 +23,11 @@ Subpackages
 -----------
 sources/    table formats + changelog readers (laketable, file changelog)
 operators/  CDC batch apply, dedup reductions, fencing, metrics
-functions/  column-level functions: text extraction, MinHash dedup
-            signatures, md5/HyperLogLog sketch primitives
+functions/  column-level functions: text extraction, dedup signatures
+            (minhash), md5/HyperLogLog sketch primitives, similarity,
+            multimodal, type conversion and spatial recode
 streaming/  Structured Streaming wrapper (foreachBatch, checkpoints)
-plans/      CDC engine queries with DuckDB oracles, served by
+plans/      query catalog with DuckDB oracles, served by
             __spark_entry__
 fixtures/   deterministic synthetic changelog generator (seeded, pure
             Spark -- no external data)

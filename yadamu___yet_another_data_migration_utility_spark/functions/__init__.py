@@ -1,4 +1,4 @@
-"""Column-level functions: html -> text extraction, MinHash dedup
-signatures and the shared md5/HyperLogLog sketch primitives. All
-JVM-side Catalyst builtins where possible; Arrow-batched pandas UDFs for
-the rest (never per-row Python UDFs)."""
+"""Column-level functions: extraction, dedup signatures, sketch
+primitives, similarity, multimodal decode, type conversion. All JVM-side
+Catalyst builtins where possible; Arrow-batched pandas UDFs for the rest
+(never per-row Python UDFs)."""

@@ -1,5 +1,7 @@
 """Shingles and MinHash band signatures: the near-duplicate signature
-contract of the dedup-ingest stream (streaming/stream.py).
+contract shared by the dedup-ingest stream (streaming/stream.py) and
+the catalog's dedup queries (plans/textops.py, whose DuckDB oracles
+mirror these definitions term-for-term).
 
 - a shingle is 3 consecutive words of the lower-cased text, split on
   single spaces and joined with one space;
@@ -19,8 +21,11 @@ MINHASH_K = 6  # 3 bands x 2 rows
 
 
 def shingle_arr(w: F.Column) -> F.Column:
-    """3-word shingle array over a word array: 1-indexed slice of 3,
-    single-space join."""
+    """3-word shingle array over a word array -- THE Spark spelling of
+    the cross-engine shingle contract (plans/textops.py's
+    ``_SHINGLES_SQL`` mirrors it term-for-term: 1-indexed slice of 3,
+    single-space join). Every shingle consumer (shingles explode,
+    doc_fingerprint, doc_repetition) derives from this one definition."""
     return F.transform(
         F.sequence(F.lit(1), F.size(w) - 2),
         lambda i: F.array_join(F.slice(w, i, 3), " "),
@@ -39,7 +44,9 @@ def shingles(df: DataFrame) -> DataFrame:
 
 def mh_sig(spark: SparkSession, sh: DataFrame) -> DataFrame:
     """K=:data:`MINHASH_K` md5-derived minhashes over a shingle set,
-    folded into bands of 2 -> ``(doc_id, band, h0, h1)``."""
+    folded into bands of 2 -> ``(doc_id, band, h0, h1)``. ONE definition
+    of the signature contract shared by the self-join dedup, the
+    incremental batch-vs-corpus variant and the dedup-ingest stream."""
     ks = spark.range(MINHASH_K).select(F.col("id").cast("int").alias("k"))
     hashes = (
         sh.crossJoin(F.broadcast(ks))

@@ -3,11 +3,11 @@ contract and the integer-exact HyperLogLog register algebra.
 
 ONE home for spellings that must stay bit-identical everywhere they
 appear -- the engine's ANALYZE statistics and bloom sidecars
-(sources/) and the MinHash signature (functions/minhash.py). DuckDB
-spells the same hash ``CAST(concat('0x', substr(md5(x), 1, 15)) AS
-BIGINT)``.
+(sources/), and every md5-die/fingerprint query (plans/textops.py
+re-exports ``md5_long`` as its ``_md5_long``).
 
-Determinism rules:
+Determinism rules (each keeps Spark and the DuckDB oracles
+bit-identical):
 - md5 -> first 15 hex chars -> 60-bit BIGINT (both engines agree);
 - integer DIV for hash splitting (60-bit values exceed double range);
 - register rho from length(bin(x)), never floor(log2);
@@ -21,8 +21,13 @@ import math
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+#: DuckDB spelling of the same 60-bit hash (format with x=<sql expr>)
+MD5_LONG_SQL = "CAST(concat('0x', substr(md5({x}), 1, 15)) AS BIGINT)"
+
+
 def md5_long(c: Column) -> Column:
-    """60-bit hash from md5 -- identical in Spark and DuckDB."""
+    """60-bit hash from md5 -- identical in Spark and DuckDB
+    (``MD5_LONG_SQL`` is the oracle-side spelling)."""
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 

@@ -579,9 +579,7 @@ def document_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ======================================================================
 
 #: connected components of a `pairs(doc1, doc2)` CTE via recursive
-#: transitive closure -- shared verbatim by the dedup_clusters oracle
-#: and the composed pipeline_keep_list oracle (plans/webtext.py) so
-#: there is ONE source of truth for the closure
+#: transitive closure -- the dedup_clusters oracle
 _CC_CTES = """edges AS (
       SELECT doc1 AS a, doc2 AS b FROM pairs
       UNION ALL

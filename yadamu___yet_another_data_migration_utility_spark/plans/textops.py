@@ -726,7 +726,7 @@ def corpus_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: pass 1 is an algebraic groupBy on lang (map-side combine,
     |langs| rows); the rate table broadcasts; pass 2 is a pure scan
     with a per-row hash + compare. The 1-row min_cnt aggregate rides
-    a constant broadcast (same shape as hot_domains' denominator).
+    a constant broadcast (a 1-row scalar, no data-sized side).
     Hash dice keep the sample incrementally stable as the corpus
     grows (modulo the rate drifting with new counts)."""
     d = load(spark, sf_dir, "documents")
@@ -1033,8 +1033,8 @@ def corpus_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed benchmark set in production (tiny -> broadcast); here it is
     the 1% die slice, so the plan keeps the shuffle join that
     survives an arbitrarily large eval side. Stop-shingle skew is the
-    known hazard -- the mitigation is the same DF-threshold drop
-    boilerplate_score computes."""
+    known hazard -- the mitigation is a document-frequency threshold
+    that drops stop shingles before the join."""
     d = load(spark, sf_dir, "documents")
     die = _md5_long(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))) % 100
     w = F.split(F.lower(F.col("text")), " ")
