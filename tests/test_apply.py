@@ -14,6 +14,7 @@ from yadamu___yet_another_data_migration_utility_spark.fixtures.changelog import
 from yadamu___yet_another_data_migration_utility_spark.functions.extract import (
     extract_text_series,
 )
+from yadamu___yet_another_data_migration_utility_spark.operators import apply as apply_mod
 from yadamu___yet_another_data_migration_utility_spark.operators.apply import (
     BatchAborted,
     apply_batch,
@@ -287,3 +288,149 @@ def test_apply_batch_multi_routes_and_resumes(spark, tmp_path):
     with pytest.raises(KeyError, match="unknown tables"):
         apply_batch_multi(tables, b2, batch_id=2, run_extract=False)
     assert state(ta) == {("x", "v3")} and not ta.is_applied(2)
+
+
+# ---------------------------------------------------------------------
+# the two merge-on-read writers: every batch in this file is small, so
+# the cases above run in-process; the fixture sends them through Spark
+# ---------------------------------------------------------------------
+
+
+def local_df(spark, rows, ddl):
+    """``rows`` as a local relation, whose size the optimizer knows (a
+    DataFrame made from a Python list is an RDD of unknown size, which
+    apply_batch never treats as small)."""
+    return spark.createDataFrame(spark.createDataFrame(rows, ddl).toArrow())
+
+
+@pytest.fixture()
+def spark_path(monkeypatch):
+    """No batch is small: every merge-on-read apply_batch takes the
+    Spark path (the bound sits below any size estimate, 0 included)."""
+    monkeypatch.setattr(apply_mod, "ARROW_MAX_BYTES", -1)
+
+
+@pytest.mark.parametrize("case", [
+    test_apply_batch_replay_is_noop,
+    test_apply_quarantine_and_max_errors,
+    test_apply_on_error_skip_policy,
+    test_schema_evolution_mid_stream,
+], ids=lambda f: f.__name__)
+def test_core_cases_on_the_spark_path(spark, tmp_table_root, spark_path, case):
+    case(spark, tmp_table_root)
+
+
+@pytest.mark.parametrize("dedup", ["broadcast", "none"])
+def test_replay_matches_oracle_on_the_spark_path(spark, tmp_table_root,
+                                                 spark_path, dedup):
+    test_apply_replay_matches_oracle(spark, tmp_table_root, "mor", dedup)
+
+
+@pytest.mark.parametrize("mode", ["mor", "cow"])
+def test_all_quarantined_local_batch_on_the_spark_path(spark, tmp_path, spark_path,
+                                                       mode):
+    """A local-relation batch whose every row is quarantined: the
+    optimizer folds the merge plan to an empty relation at plan time,
+    and the input Observation with it; the counts still come out."""
+    import pyspark.sql.types as T
+
+    schema = T.StructType([T.StructField("url", T.StringType()),
+                           T.StructField("val", T.StringType())])
+    t = LakeTable.create(str(tmp_path / "t"), schema, key="url",
+                         bucket_count=4, merge_mode=mode)
+    df = local_df(spark, [("a", "1", "X", 1), (None, "2", "I", 2)],
+                  "url string, val string, op string, lsn long")
+    m = apply_batch(t, df, 0, run_extract=False)
+    assert (m.rows_in, m.rows_quarantined, m.rows_merged_in) == (2, 2, 0)
+    assert t.is_applied(0) and t.read(spark).count() == 0
+    assert quarantine_df(spark, t).count() == 2
+
+
+def _apply_trace(tmp_path, fn):
+    """Run ``fn`` with the operation trace on; its apply records."""
+    import json
+    import uuid
+
+    from yadamu___yet_another_data_migration_utility_spark.operators import trace
+
+    path = str(tmp_path / f"trace-{uuid.uuid4().hex}.jsonl")
+    trace.enable(path)
+    try:
+        out = fn()
+    finally:
+        trace.disable()
+    with open(path) as f:
+        recs = [json.loads(line) for line in f]
+    return out, [r for r in recs if r["op"] == "apply"]
+
+
+@pytest.mark.parametrize("path", ["arrow", "spark"])
+def test_constraints_and_composite_key_on_both_paths(spark, tmp_path,
+                                                      monkeypatch, path):
+    """A composite-key table with a CHECK constraint: NULL key
+    components, a violation and a bad op quarantine, the newest valid
+    event per key wins, exact redeliveries collapse on read -- on
+    either path, and the trace names the path that ran."""
+    import pyspark.sql.types as T
+
+    if path == "spark":
+        monkeypatch.setattr(apply_mod, "ARROW_MAX_BYTES", -1)
+    schema = T.StructType([T.StructField("site", T.StringType()),
+                           T.StructField("page", T.LongType()),
+                           T.StructField("n", T.IntegerType())])
+    t = LakeTable.create(str(tmp_path / "t"), schema, key=["site", "page"],
+                         bucket_count=4, merge_mode="mor")
+    t.add_constraint(spark, "nonneg", "n >= 0")
+    rows = [("a", 1, 1, "I", 1), ("a", 1, 2, "U", 2), ("a", 1, 2, "U", 2),
+            ("a", 2, -5, "I", 3), ("b", 1, 7, "I", 4), ("b", 1, None, "D", 5),
+            (None, 3, 1, "I", 6), ("c", None, 1, "I", 7), ("c", 4, 9, "X", 8),
+            ("c", 5, 3, "I", 9)]
+    df = local_df(spark, rows, "site string, page long, n int, op string, lsn long")
+    m, recs = _apply_trace(tmp_path, lambda: apply_batch(t, df, batch_id=0))
+    m.check_invariant()
+    assert (m.rows_in, m.rows_quarantined, m.rows_merged_in) == (10, 4, 4)
+    assert {(r["site"], r["page"], r["n"], r["_lsn"]) for r in t.read(spark).collect()} == {
+        ("a", 1, 2, 2), ("c", 5, 3, 9)}
+    assert {(r["reason"], r["lsn"]) for r in quarantine_df(spark, t).collect()} == {
+        ("check:nonneg", 3), ("null_key", 6), ("null_key", 7), ("bad_op", 8)}
+    assert [(r["detail"]["path"], r["detail"]["reason"], r["rows"]) for r in recs] == [
+        (path, None if path == "arrow" else "size", 10)]
+
+
+def test_apply_trace_records_each_path_and_its_reason(spark, tmp_path):
+    """One apply record per call: the in-process path with its four
+    phase timings, the Spark path with the reason it was taken, and a
+    fenced replay."""
+    sch = "url string, val string, op string, lsn long"
+    import pyspark.sql.types as T
+
+    schema = T.StructType([T.StructField("url", T.StringType()),
+                           T.StructField("val", T.StringType())])
+    mor = LakeTable.create(str(tmp_path / "mor"), schema, key="url",
+                           bucket_count=4, merge_mode="mor")
+    cow = LakeTable.create(str(tmp_path / "cow"), schema, key="url",
+                           bucket_count=4, merge_mode="cow")
+    df = local_df(spark, [("a", "1", "I", 1), ("b", "2", "I", 2)], sch)
+
+    def run():
+        apply_batch(mor, df, 0, run_extract=False)
+        apply_batch(mor, spark.createDataFrame([("c", "3", "I", 3)], sch), 3,
+                    run_extract=False)
+        apply_batch(mor, df, 0, run_extract=False)
+        apply_batch(mor, df, 1, run_extract=False, dedup="salted")
+        apply_batch(mor, df, 2, run_extract=False, precheck_errors=True)
+        apply_batch(cow, df, 0, run_extract=False)
+
+    _, recs = _apply_trace(tmp_path, run)
+    got = [(r["table"], r["batch_id"], r["detail"]["path"], r["detail"].get("reason"))
+           for r in recs]
+    assert got == [(mor.root, 0, "arrow", None), (mor.root, 3, "spark", "size"),
+                   (mor.root, 0, "fenced", None),
+                   (mor.root, 1, "spark", "salted"), (mor.root, 2, "spark", "precheck"),
+                   (cow.root, 0, "spark", "cow")]
+    phases = {"collect_s", "dedup_extract_s", "write_s", "commit_s"}
+    assert phases <= set(recs[0]["detail"])
+    # a list-built batch is an RDD: its size is unknown, so not small
+    assert recs[1]["detail"]["plan_bytes"] == 2**63 - 1
+    assert {"write_s", "commit_s"} <= set(recs[1]["detail"])
+    assert not phases & set(recs[2]["detail"])

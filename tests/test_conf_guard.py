@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 import pyspark.sql.types as T
 
+from yadamu___yet_another_data_migration_utility_spark.operators import apply as apply_mod
 from yadamu___yet_another_data_migration_utility_spark.operators.apply import (
     BatchAborted,
     apply_batch,
@@ -48,7 +49,10 @@ def test_aqe_guard_restores_on_exception(spark):
 def test_apply_batch_leaves_aqe_enabled(spark, tmp_path, monkeypatch):
     """AQE is off inside a merge-on-read merge only: a copy-on-write
     merge keeps the session's value for its resolve join, and either
-    way the session's value is back once apply_batch returns."""
+    way the session's value is back once apply_batch returns. The
+    batches take the Spark path: a small merge-on-read batch committed
+    in-process runs no Spark write, so there is no AQE value to see."""
+    monkeypatch.setattr(apply_mod, "ARROW_MAX_BYTES", -1)
     before = spark.conf.get(_AQE_KEY)
     for mode, inside in (("cow", before), ("mor", "false")):
         t = LakeTable.create(str(tmp_path / mode), SCHEMA, key="url",

@@ -245,8 +245,8 @@ def test_lookup_equals_read_and_oracle(spark, tmp_path_factory, events, more,
     assert _rows(old) == _expect(_oracle_at(allev[:n], ktype), probes)
 
 
-def _lookup_trace(tmp_path, fn):
-    """Run ``fn`` with the operation trace on; its lookup records."""
+def _trace_records(tmp_path, fn, op="lookup"):
+    """Run ``fn`` with the operation trace on; its ``op`` records."""
     import json
     import uuid
 
@@ -260,7 +260,7 @@ def _lookup_trace(tmp_path, fn):
         trace.disable()
     with open(path) as f:
         recs = [json.loads(line) for line in f]
-    return out, [r["detail"] for r in recs if r["op"] == "lookup"]
+    return out, [r["detail"] for r in recs if r["op"] == op]
 
 
 CHG = "url string, val string, op string, lsn long"
@@ -276,12 +276,12 @@ def test_lookup_lsn_tie_with_differing_content_answers_through_spark(spark, tmp_
     t.merge(spark, spark.createDataFrame(
         [("a", "x", "I", 5), ("b", "p", "I", 6), ("b", "p", "I", 6)], CHG), 0)
     t.merge(spark, spark.createDataFrame([("a", "y", "U", 5)], CHG), 1)
-    rows, recs = _lookup_trace(tmp_path, lambda: t.lookup(spark, ["a", "b"]).collect())
+    rows, recs = _trace_records(tmp_path, lambda: t.lookup(spark, ["a", "b"]).collect())
     assert {tuple(r) for r in rows} == {tuple(r) for r in t.read(spark, keys=["a", "b"]).collect()}
     assert len(rows) == 2
     assert [(r["path"], r["reason"]) for r in recs] == [("spark", "lsn_tie")]
     # identical redeliveries tie benignly and stay in-process
-    _, recs = _lookup_trace(tmp_path, lambda: t.lookup(spark, ["b"]).collect())
+    _, recs = _trace_records(tmp_path, lambda: t.lookup(spark, ["b"]).collect())
     assert [(r["path"], r.get("reason")) for r in recs] == [("arrow", None)]
 
 
@@ -290,7 +290,7 @@ def test_lookup_other_key_types_keep_the_spark_path(spark, tmp_path):
                         T.StructField("v", T.StringType())])
     t = LakeTable.create(str(tmp_path / "t"), sch, key="k", bucket_count=2)
     t.append(spark, spark.createDataFrame([(1.5, "a"), (2.5, "b")], "k double, v string"))
-    rows, recs = _lookup_trace(tmp_path, lambda: t.lookup(spark, [1.5, 9.0]).collect())
+    rows, recs = _trace_records(tmp_path, lambda: t.lookup(spark, [1.5, 9.0]).collect())
     assert [r["v"] for r in rows] == ["a"]
     assert [(r["path"], r["reason"]) for r in recs] == [("spark", "key_type")]
 
@@ -372,3 +372,164 @@ def test_fast_lookup_runs_no_spark_job_and_opens_the_planned_files(spark, tmp_pa
         assert {(r["url"], r["val"]) for r in rows} == {(mk(1), "v1"), (mk(7), "w")}
         planned = plan["plain"] + plan["delta_resolved"]
         assert sorted(opened) == sorted(os.path.join(t.root, f) for f in planned)
+
+
+# ---------------------------------------------------------------------
+# the two merge-on-read writers of apply_batch: the same batches through
+# the in-process path (Arrow dedup, driver-side extract, pyarrow delta
+# write) and the Spark path must leave the same table, file by bucket
+# ---------------------------------------------------------------------
+
+KEYS = st.sampled_from(["string", "long", "composite"])
+#: (key 0-5, op -- X is a bad op, n -- negative violates the CHECK,
+#: poison: none, a NULL key component or a NULL html)
+APPLY_EVENTS = st.lists(
+    st.tuples(st.integers(0, 5), st.sampled_from("IUDIUX"),
+              st.integers(-1, 3), st.sampled_from([None, None, None, "key", "html"])),
+    min_size=1, max_size=20)
+STEPS = st.lists(st.sampled_from(["commit", "commit", "compact", "delete", "replay"]),
+                 min_size=2, max_size=6)
+
+
+def _apply_table(root, kind):
+    key = {"string": [("url", T.StringType())], "long": [("url", T.LongType())],
+           "composite": [("site", T.StringType()), ("page", T.LongType())]}[kind]
+    schema = T.StructType([T.StructField(k, t) for k, t in key]
+                          + [T.StructField("n", T.IntegerType()),
+                             T.StructField("html", T.BinaryType()),
+                             T.StructField("text", T.StringType())])
+    return LakeTable.create(root, schema, key=[k for k, _ in key], bucket_count=4,
+                            merge_mode="mor")
+
+
+def _apply_rows(kind, events, first_lsn, evolved):
+    """Change rows for ``events``; ``evolved`` batches carry ``n`` as a
+    long (the table widens it) and a new ``tag`` column. Every third
+    event is re-delivered verbatim."""
+    rows = []
+    for lsn, (k, op, n, poison) in enumerate(events, start=first_lsn):
+        key = {"string": (f"k{k}",), "long": (k * 1_000_003 - 2,),
+               "composite": (f"s{k % 2}", k)}[kind]
+        if poison == "key":
+            key = (None,) + key[1:]
+        html = None if op == "D" or poison == "html" else (
+            f"<p>k{k} &amp; <b>{lsn}</b></p><script>x</script>".encode())
+        rows.append(key + (n, html) + ((f"t{lsn}",) if evolved else ()) + (op, lsn))
+    return rows + rows[::3]
+
+
+def _apply_ddl(kind, evolved):
+    key = {"string": "url string", "long": "url long",
+           "composite": "site string, page long"}[kind]
+    return (f"{key}, n {'long' if evolved else 'int'}, html binary"
+            + (", tag string" if evolved else "") + ", op string, lsn long")
+
+
+def _by_bucket(t):
+    """Per bucket of base files and of deltas: row count and the zone
+    map over its files (a column's zone only if every file has one), so
+    one file and several files of the same rows compare equal."""
+    m = t.manifest()
+    out = {}
+    for which in ("buckets", "deltas"):
+        for b, files in m.get(which, {}).items():
+            if not files:
+                continue
+            zones = [m.get("stats", {}).get(f, {}) for f in files]
+            cols = set().union(*zones)
+            out[which, b] = (
+                sum(m["file_rows"][f] for f in files),
+                {c: (min(z[c][0] for z in zones), max(z[c][1] for z in zones))
+                 if all(c in z for z in zones) else None for c in cols})
+    return out
+
+
+def _table_state(spark, t):
+    import pyarrow.parquet as pq
+
+    from yadamu___yet_another_data_migration_utility_spark.operators.apply import (
+        QUARANTINE_DIR,
+        pending_quarantine_ids,
+    )
+
+    # quarantine per batch directory: batches of a widened column hold
+    # differently typed files, which one Spark read cannot merge
+    quarantine = {
+        b: sorted(map(repr, pq.read_table(os.path.join(
+            t.root, QUARANTINE_DIR, f"batch_id={b}")).to_pylist()))
+        for b in pending_quarantine_ids(t)}
+    return (
+        sorted(map(repr, t.read(spark).collect())),
+        _by_bucket(t),
+        t.audit_entries(),
+        sorted(map(repr, t.lineage_entries())),
+        t.schema().jsonValue(),
+        quarantine,
+    )
+
+
+@settings(
+    max_examples=6,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(events=APPLY_EVENTS, cuts=CUTS, steps=STEPS, kind=KEYS)
+def test_in_process_apply_equals_spark_apply(spark, tmp_path_factory, monkeypatch,
+                                             events, cuts, steps, kind):
+    """Random commit / compact / delete / replay sequences applied to
+    two tables, one through each apply_batch path: quarantined rows
+    (NULL key component, NULL html, bad op, CHECK violation), exact
+    redeliveries, a column added and one widened mid-stream, string,
+    integral and composite keys. After every step both tables read the
+    same rows (``text`` byte for byte), hold the same rows and zone
+    maps per bucket, the same audit and lineage rows and quarantine,
+    and every call returned the same BatchMetrics."""
+    from yadamu___yet_another_data_migration_utility_spark.operators import apply as apply_mod
+
+    root = tmp_path_factory.mktemp("diff")
+    arrow, sparkt = (_apply_table(str(root / p), kind) for p in ("arrow", "spark"))
+    for t in (arrow, sparkt):
+        t.add_constraint(spark, "nonneg", "n >= 0")
+    bounds = sorted({c for c in cuts if c < len(events)}) + [len(events)]
+    batches = [events[a:b] for a, b in zip([0] + bounds, bounds) if b > a]
+    applied: list[tuple[int, object]] = []
+
+    def apply_both(bid, df, paths):
+        def run():
+            got = []
+            for t, bound in ((arrow, None), (sparkt, -1)):
+                with monkeypatch.context() as mp:
+                    if bound is not None:
+                        mp.setattr(apply_mod, "ARROW_MAX_BYTES", bound)
+                    got.append(apply_mod.apply_batch(t, df, bid))
+            return got
+
+        got, recs = _trace_records(tmp_path_factory.mktemp("tr"), run, op="apply")
+        assert [r["path"] for r in recs] == paths
+        a, s = ({k: v for k, v in m.as_dict().items() if k != "duration_ms"}
+                for m in got)
+        assert a == s
+        got[0].check_invariant()
+
+    lsn = 1
+    for step in steps:
+        if step == "commit" and batches:
+            bid = len(applied)
+            evolved = bid >= 1 and bid % 2 == 1
+            ev = batches.pop(0)
+            # a local relation: a DataFrame made from a Python list is an
+            # RDD of unknown size, which apply_batch never treats as small
+            df = spark.createDataFrame(spark.createDataFrame(
+                _apply_rows(kind, ev, lsn, evolved), _apply_ddl(kind, evolved)).toArrow())
+            lsn += len(ev)
+            apply_both(bid, df, ["arrow", "spark"])
+            applied.append((bid, df))
+        elif step == "replay" and applied:
+            apply_both(*applied[0], ["fenced", "fenced"])  # a no-op on both
+        elif step == "compact":
+            for t in (arrow, sparkt):
+                t.compact(spark, all_deltas=True)
+        elif step == "delete":
+            for t in (arrow, sparkt):
+                t.delete_where(spark, "n = 1")
+        assert _table_state(spark, arrow) == _table_state(spark, sparkt), step

@@ -26,9 +26,20 @@ Stages:
 3. **extract** -- html -> text via the Arrow-vectorized pandas UDF
    (functions.extract), only for winner I/U rows.
 4. **MERGE** into the LakeTable (LSN-monotonic, batch-id fenced).
-   Under the default merge-on-read mode the whole clean batch is ONE
-   Spark job: scan -> broadcast semi-join -> extract -> per-bucket
-   delta write (no target read, no payload shuffle, no table rewrite).
+   Under the default merge-on-read mode there is no target read, no
+   payload shuffle and no table rewrite, and a clean batch takes one
+   of two paths:
+
+   - **in-process** (input size estimate <= ``ARROW_MAX_BYTES``): ONE
+     Spark job, a ``toArrow()`` collect that evaluates the quarantine
+     tags and fires the input Observation; stages 1-3 then run in Arrow
+     and pandas on the driver (``extract_text_series``) and the table
+     writes the per-bucket delta files with pyarrow;
+   - **Spark** (larger batches, copy-on-write, ``dedup="salted"``,
+     ``precheck_errors``, key or column types the in-process path
+     does not carry): TWO Spark jobs measured per commit -- the
+     broadcast winner build, then scan -> semi-join -> extract UDF ->
+     per-bucket delta write.
 
 Exactly-once: the quarantine write is made idempotent by overwriting a
 per-batch partition directory; the merge (or skip) is fenced in the
@@ -44,14 +55,22 @@ committed + lost + skipped``
 from __future__ import annotations
 
 import os
+import time
 from dataclasses import dataclass
 from typing import Any
 
+import numpy as np
+import pyarrow as pa
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..functions.extract import extract_text
-from ..sources.laketable import LakeTable, MergeResult, _keylist
+from ..functions.extract import extract_text, extract_text_series
+from ..sources.lakebase import _driver_hashable, _same_cast
+from ..sources.laketable import (
+    LSN_COL, LakeTable, MergeResult, _evolved_schema, _keylist,
+)
 
 QUARANTINE_DIR = "quarantine"
 
@@ -186,6 +205,115 @@ def last_lsn_dedup(df: DataFrame, key="url", lsn_col: str = "lsn",
 
 DEDUP_STRATEGIES = ("broadcast", "salted", "none")
 
+#: Largest merge-on-read batch, by the optimizer's size estimate of the
+#: input (file bytes for a parquet scan; an RDD's unknown size counts
+#: as unbounded), that ``apply_batch`` commits in-process. Set below
+#: the measured crossover of the two paths (local[4] on a 4-vCPU VM,
+#: 16 buckets): a 50k-event crawl batch (2.6 MB of parquet, every event
+#: extracted) takes about 1.8 s either way, because the driver-side
+#: extract is single-threaded; at 100k events Spark is faster (2.0 s
+#: against 2.6 s), at 25k the in-process path (1.0 s against 1.3 s).
+ARROW_MAX_BYTES = 2 << 20
+
+
+def _plan_bytes(df: DataFrame) -> int:
+    """The optimized plan's size estimate of ``df`` in bytes; reading it
+    plans the query but starts no job."""
+    return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+
+
+def _spark_reason(mf: dict[str, Any], batch_df: DataFrame, out_schema,
+                  dedup: str, precheck_errors: bool, op_col: str,
+                  lsn_col: str, info: dict[str, Any]) -> str | None:
+    """Why this batch must take the Spark path, or None when it commits
+    in-process. ``out_schema`` is the schema of the rows handed to the
+    merge (the batch's columns, plus ``text`` when extracting). The
+    size estimate goes into the trace record ``info``: an input of
+    unknown size (e.g. an RDD) estimates as ``Long.MaxValue``."""
+    from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+
+    if mf.get("merge_mode", "cow") != "mor":
+        return "cow"
+    if dedup == "salted":
+        return "salted"
+    if precheck_errors:
+        return "precheck"
+    schema = T.StructType.fromJson(mf["schema"])
+    if not all(_driver_hashable(schema[k].dataType) for k in _keylist(mf["key"])):
+        return "key_type"
+    info["plan_bytes"] = _plan_bytes(batch_df)
+    if info["plan_bytes"] > ARROW_MAX_BYTES:
+        return "size"
+    try:
+        back = from_arrow_schema(to_arrow_schema(out_schema))
+    except Exception:  # noqa: BLE001 -- a type Arrow cannot carry
+        return "arrow_type"
+    if [f.dataType for f in back.fields] != [f.dataType for f in out_schema.fields]:
+        return "arrow_type"
+    evolved = _evolved_schema(mf, out_schema, op_col, lsn_col)
+    for f in out_schema.fields:
+        name = LSN_COL if f.name == lsn_col else f.name
+        if name in evolved.fieldNames() and not _same_cast(
+                f.dataType, evolved[name].dataType):
+            return "cast"
+    return None
+
+
+def _reduce_arrow(rows: pa.Table, key, op_col: str, lsn_col: str,
+                  dedup: str, run_extract: bool) -> pa.Table:
+    """The Spark path's valid split, last-LSN reduction and extract,
+    over a batch collected with its ``_reason`` tags. Same winner rule:
+    per key the max ``lsn`` among structurally valid rows (key, lsn
+    and op all usable), then the valid rows carrying that (key, lsn) --
+    exact redeliveries included. ``dedup="none"`` keeps every valid
+    row. ``text`` comes from ``extract_text_series`` over the live
+    (non-delete) rows only."""
+    import pyarrow.compute as pc
+
+    ks = _keylist(key)
+    valid = rows.filter(pc.is_null(rows.column("_reason"))).drop_columns(["_reason"])
+    if dedup != "none":
+        ok = pc.is_in(rows.column(op_col), pa.array(["I", "U", "D"]))
+        for c in ks + [lsn_col]:
+            ok = pc.and_(ok, pc.is_valid(rows.column(c)))
+        winners = rows.filter(ok).group_by(ks).aggregate([(lsn_col, "max")])
+        winners = winners.select(ks + [f"{lsn_col}_max"]).rename_columns(ks + [lsn_col])
+        probe = valid.select(ks + [lsn_col]).append_column(
+            "_i", pa.array(np.arange(valid.num_rows)))
+        hit = probe.join(winners, keys=ks + [lsn_col], join_type="left semi")
+        valid = valid.take(np.sort(hit.column("_i").to_numpy()))
+    if run_extract and "html" in valid.column_names:
+        live = pc.fill_null(pc.not_equal(valid.column(op_col), "D"), False)
+        live = live.combine_chunks() if isinstance(live, pa.ChunkedArray) else live
+        html = valid.column("html").filter(live).to_pandas()
+        text = pc.replace_with_mask(
+            pa.nulls(valid.num_rows, pa.string()), live,
+            pa.array(extract_text_series(html), pa.string()))
+        if "text" in valid.column_names:
+            valid = valid.set_column(valid.column_names.index("text"), "text", text)
+        else:
+            valid = valid.append_column("text", text)
+    return valid
+
+
+def _tag_counts() -> list[F.Column]:
+    """Rows in and rows quarantined, over a ``_tag_quarantine`` output."""
+    return [F.count(F.lit(1)).alias("n_in"), F.count("_reason").alias("n_bad")]
+
+
+def _write_quarantine(table: LakeTable, tagged: DataFrame, batch_id: int) -> None:
+    """Persist a batch's quarantined rows (``_reason`` set) to its own
+    dead-letter directory. An overwrite of a per-batch directory, so a
+    replayed batch rewrites it identically."""
+    qdir = os.path.join(table.root, QUARANTINE_DIR, f"batch_id={batch_id}")
+    (
+        tagged.filter(F.col("_reason").isNotNull())
+        .withColumn("_batch_id", F.lit(batch_id))
+        .withColumnRenamed("_reason", "reason")
+        .write.mode("overwrite")
+        .parquet(qdir)
+    )
+
 
 def apply_batch(
     table: LakeTable,
@@ -205,29 +333,63 @@ def apply_batch(
     """Apply one micro-batch of change events to ``table``. Pure:
     (table, df, batch_id) -> metrics; safe to replay.
 
+    A merge-on-read batch whose input is small (the optimizer's size
+    estimate is at most ``ARROW_MAX_BYTES``) commits in-process: one
+    ``toArrow()`` collect evaluates the quarantine tags and CHECK
+    constraints and fires the input Observation, the split, dedup and
+    extract run in Arrow and pandas on the driver, and the table writes
+    the delta with pyarrow -- one Spark job per commit, plus the
+    quarantine write when bad rows exist. Copy-on-write tables,
+    ``dedup="salted"``, ``precheck_errors``, key types ``_bucket_id``
+    does not hash, types Arrow does not carry exactly, and larger
+    batches take the Spark path: the dedup's winner build and the
+    extract-and-write are two jobs. Both paths give the same table, the
+    same metrics and the same audit row; each call writes one ``apply``
+    record to the operation trace (operators/trace.py) naming the path,
+    the reason for the Spark path, and per-phase seconds.
+
     ``dedup`` picks the pre-write last-LSN reduction strategy. Under
     merge-on-read the reduction is an OPTIMIZATION, not a correctness
     requirement -- read-side resolution applies max-LSN-per-key exactly
     regardless -- so the right strategy depends on the batch's
     intra-key duplication:
 
-    - "broadcast" (default): narrow argmax + broadcast semi-join.
-      Right for update-heavy streams (few keys, many events each): the
-      winner set is small, and skipping extract/write for superseded
-      events pays for the broadcast. Cost: the broadcast build collects
-      one row per distinct key to the driver -- a SERIAL cost that
-      grows with batch key-cardinality, which caps scaling efficiency
-      on near-unique batches.
+    - "broadcast" (default): narrow argmax + broadcast semi-join (on
+      the in-process path, the same rule as an Arrow group-by and
+      semi-join). Right for update-heavy streams (few keys, many events
+      each): the winner set is small, and skipping extract/write for
+      superseded events pays for the broadcast. Cost on the Spark path:
+      the broadcast build is its own job and collects one row per
+      distinct key to the driver -- a SERIAL cost that grows with batch
+      key-cardinality, which caps scaling efficiency on near-unique
+      batches.
     - "salted": two-phase salted exact reduction (last_lsn_dedup) --
-      for skewed hot keys without partial aggregation support.
+      for skewed hot keys without partial aggregation support. Always
+      the Spark path.
     - "none": write every valid event as a delta row; resolution
       dedups at read/compact (exactly Flink's Iceberg upsert writer
       shape: appended upserts + equality deletes, no pre-reduce).
       Right for near-unique batches (web-crawl: most events in a batch
       touch distinct urls), where a reduction would pay a driver-side
       broadcast build + a second scan to drop only a few percent of
-      rows. Fully parallel -- no shuffle, no broadcast, no collect.
+      rows. Fully parallel on the Spark path -- no shuffle, no
+      broadcast, no collect.
     """
+    from . import trace
+
+    with trace.span("apply", table=table.root) as info:
+        info["batch_id"] = batch_id
+        metrics = _apply(table, batch_df, batch_id, key, op_col, lsn_col,
+                         salt_buckets, max_errors, on_error, run_extract,
+                         dedup, precheck_errors, extra_audit, info)
+        info["rows"] = metrics.rows_in
+    return metrics
+
+
+def _apply(table, batch_df, batch_id, key, op_col, lsn_col, salt_buckets,
+           max_errors, on_error, run_extract, dedup, precheck_errors,
+           extra_audit, info) -> BatchMetrics:
+    """``apply_batch``'s body; ``info`` collects its trace record."""
     if on_error not in ON_ERROR_POLICIES:
         raise ValueError(f"on_error must be one of {ON_ERROR_POLICIES}")
     if dedup not in DEDUP_STRATEGIES:
@@ -244,7 +406,7 @@ def apply_batch(
     constraints = mf.get("constraints", {})
     if salt_buckets > 0:
         dedup = "salted"
-    if dedup == "none" and table.merge_mode() != "mor":
+    if dedup == "none" and mf.get("merge_mode", "cow") != "mor":
         # cow resolves against the table ONCE per batch assuming one
         # winner per key; unreduced batches are only exact under mor
         # read-resolution
@@ -253,7 +415,19 @@ def apply_batch(
 
     # fence first: a replayed batch must not even re-count
     if table.is_applied(batch_id):
+        info["path"] = "fenced"
         return BatchMetrics(batch_id, 0, 0, 0, 0, 0, True, None, 0)
+
+    out_schema = batch_df.schema
+    if run_extract and "html" in out_schema.fieldNames():
+        # the extract's withColumn: replaces ``text`` in place, or appends it
+        text = T.StructField("text", T.StringType())
+        out_schema = T.StructType(
+            [text if f.name == "text" else f for f in out_schema.fields]
+            + ([] if "text" in out_schema.fieldNames() else [text]))
+    reason = _spark_reason(mf, batch_df, out_schema, dedup, precheck_errors,
+                           op_col, lsn_col, info)
+    info["path"], info["reason"] = ("spark", reason) if reason else ("arrow", None)
 
     if precheck_errors and max_errors is not None and on_error in ("abort", "skip"):
         # Opt-in extra pass for pipelines EXPECTING poison: evaluate the
@@ -261,27 +435,18 @@ def apply_batch(
         # delta write, so a mostly-bad batch is rejected without paying
         # full-batch compute that the single-job fast path would only
         # write and then discard. Clean pipelines keep the default
-        # (False): one job per batch, policy checked in the pre-commit
-        # hook off the same Observation.
+        # (False): policy checked in the pre-commit hook off the same
+        # Observation.
         tagged0 = _tag_quarantine(batch_df, op_col, key, lsn_col,
-                                constraints=constraints)
-        pre = tagged0.agg(
-            F.count(F.lit(1)).alias("n_in"), F.count("_reason").alias("n_bad")
-        ).collect()[0]
+                                  constraints=constraints)
+        pre = tagged0.agg(*_tag_counts()).collect()[0]
         if pre["n_bad"] > max_errors:
             counts0 = {"rows_batch_in": pre["n_in"],
                        "rows_quarantined": pre["n_bad"],
                        **(extra_audit or {})}
             # quarantine rows persist BEFORE the policy decision lands,
             # same ordering contract as the in-merge hook
-            qdir = os.path.join(table.root, QUARANTINE_DIR, f"batch_id={batch_id}")
-            (
-                tagged0.filter(F.col("_reason").isNotNull())
-                .withColumn("_batch_id", F.lit(batch_id))
-                .withColumnRenamed("_reason", "reason")
-                .write.mode("overwrite")
-                .parquet(qdir)
-            )
+            _write_quarantine(table, tagged0, batch_id)
             if on_error == "skip":
                 v = table.record_skip(batch_id, extra_audit=counts0)
                 metrics = BatchMetrics(
@@ -306,20 +471,116 @@ def apply_batch(
     # Input/quarantine counts ride on an Observation attached above the
     # validity filter ON THE PROBE SIDE ONLY (the winner subtree is a
     # separate, unobserved copy of the plan -- otherwise the broadcast
-    # build job would double-count every row). The merge write
-    # materializes the probe side exactly once and fires it. The
-    # quarantine write is an extra job only when bad rows actually
-    # exist -- it runs inside the merge's pre-commit hook, i.e. still
-    # strictly BEFORE the commit, so a crash between quarantine write
-    # and merge commit replays both (the quarantine write is an
-    # idempotent per-batch directory overwrite).
+    # build job would double-count every row). The merge write (or the
+    # in-process path's collect) materializes the probe side exactly
+    # once and fires it. The quarantine write is an extra job only when
+    # bad rows actually exist -- it runs inside the merge's pre-commit
+    # hook, i.e. still strictly BEFORE the commit, so a crash between
+    # quarantine write and merge commit replays both (the quarantine
+    # write is an idempotent per-batch directory overwrite).
     from pyspark.sql import Observation
 
     obs = Observation(f"apply_batch_{batch_id}")
     tagged = _tag_quarantine(batch_df, op_col, key, lsn_col,
-                                constraints=constraints).observe(
-        obs, F.count(F.lit(1)).alias("n_in"), F.count("_reason").alias("n_bad")
+                                constraints=constraints).observe(obs, *_tag_counts())
+    if reason is None:
+        t = time.monotonic()
+        rows = tagged.toArrow()
+        info["collect_s"] = round(time.monotonic() - t, 4)
+        t = time.monotonic()
+        reduced = _reduce_arrow(rows, key, op_col, lsn_col, dedup, run_extract)
+        info["dedup_extract_s"] = round(time.monotonic() - t, 4)
+    else:
+        reduced = _reduce_spark(batch_df, tagged, key, op_col, lsn_col, dedup,
+                                salt_buckets, run_extract)
+
+    # filled by the hook once the observation has fired; doubles as the
+    # extra_audit dict (merge reads it at manifest-build time, after the
+    # hook has populated it). Caller-supplied extra_audit keys ride
+    # along -- requeue_quarantine records its drained source dirs here
+    # so a crashed drain can recover the exact list from the fence.
+    counts: dict[str, Any] = dict(extra_audit or {})
+
+    def _pre_commit() -> None:
+        info["write_s"] = round(time.monotonic() - t_merge, 4)
+        try:
+            got = obs.get
+        except Py4JJavaError:
+            # the Observation never ran: the optimizer proved at plan
+            # time that no row reaches the merge (a local-relation batch
+            # whose every row is quarantined) and dropped the observed
+            # subtree with the rest of the plan -- count the batch itself
+            got = _tag_quarantine(batch_df, op_col, key, lsn_col,
+                                  constraints=constraints).agg(
+                *_tag_counts()).collect()[0]
+        counts["rows_batch_in"] = got["n_in"]
+        counts["rows_quarantined"] = got["n_bad"]
+        if got["n_bad"] > 0:
+            # persist quarantine rows BEFORE any policy decision so an
+            # aborted/skipped batch always leaves its diagnosis data
+            # (idempotent per-batch overwrite => replay-safe)
+            _write_quarantine(table, _tag_quarantine(
+                batch_df, op_col, key, lsn_col, constraints=constraints),
+                batch_id)
+        if max_errors is not None and got["n_bad"] > max_errors:
+            if on_error == "skip":
+                raise _SkipBatch()
+            raise BatchAborted(
+                f"batch {batch_id}: {got['n_bad']} quarantined > max_errors={max_errors}"
+            )
+
+    t_merge = time.monotonic()
+    try:
+        res: MergeResult = table.merge(
+            spark,
+            reduced,
+            batch_id,
+            op_col=op_col,
+            lsn_col=lsn_col,
+            extra_audit=counts,
+            pre_commit_hook=_pre_commit,
+        )
+    except _SkipBatch:
+        v = table.record_skip(batch_id, extra_audit=counts)
+        n_in, n_bad = counts["rows_batch_in"], counts["rows_quarantined"]
+        metrics = BatchMetrics(
+            batch_id=batch_id,
+            rows_in=n_in,
+            rows_quarantined=n_bad,
+            rows_deduped=0,
+            rows_merged_in=0,
+            rows_deleted=0,
+            fenced=False,
+            version=v,
+            duration_ms=0,
+            rows_skipped=n_in - n_bad,
+        )
+        metrics.check_invariant()
+        return metrics
+    if "write_s" in info:
+        info["commit_s"] = round(time.monotonic() - t_merge - info["write_s"], 4)
+
+    n_in, n_bad = counts["rows_batch_in"], counts["rows_quarantined"]
+    metrics = BatchMetrics(
+        batch_id=batch_id,
+        rows_in=n_in,
+        rows_quarantined=n_bad,
+        rows_deduped=n_in - n_bad - res.rows_in,
+        rows_merged_in=res.rows_in,
+        rows_deleted=res.rows_deleted,
+        fenced=res.fenced,
+        version=res.version,
+        duration_ms=res.duration_ms,
     )
+    metrics.check_invariant()
+    return metrics
+
+
+def _reduce_spark(batch_df: DataFrame, tagged: DataFrame, key, op_col: str,
+                  lsn_col: str, dedup: str, salt_buckets: int,
+                  run_extract: bool) -> DataFrame:
+    """The Spark path's valid split, last-LSN reduction and extract, as
+    a plan the merge's delta write runs."""
     valid = tagged.filter(F.col("_reason").isNull()).drop("_reason")
 
     # last-writer-wins, scale path: a NARROW argmax shuffle (key + lsn
@@ -375,81 +636,7 @@ def apply_batch(
             "text",
             F.when(F.col(op_col) != "D", extract_text(F.col("html"))),
         )
-
-    # filled by the hook once the observation has fired; doubles as the
-    # extra_audit dict (merge reads it at manifest-build time, after the
-    # hook has populated it). Caller-supplied extra_audit keys ride
-    # along -- requeue_quarantine records its drained source dirs here
-    # so a crashed drain can recover the exact list from the fence.
-    counts: dict[str, Any] = dict(extra_audit or {})
-
-    def _pre_commit() -> None:
-        got = obs.get
-        counts["rows_batch_in"] = got["n_in"]
-        counts["rows_quarantined"] = got["n_bad"]
-        if got["n_bad"] > 0:
-            # persist quarantine rows BEFORE any policy decision so an
-            # aborted/skipped batch always leaves its diagnosis data
-            # (idempotent per-batch overwrite => replay-safe)
-            qdir = os.path.join(table.root, QUARANTINE_DIR, f"batch_id={batch_id}")
-            (
-                _tag_quarantine(batch_df, op_col, key, lsn_col,
-                                constraints=constraints)
-                .filter(F.col("_reason").isNotNull())
-                .withColumn("_batch_id", F.lit(batch_id))
-                .withColumnRenamed("_reason", "reason")
-                .write.mode("overwrite")
-                .parquet(qdir)
-            )
-        if max_errors is not None and got["n_bad"] > max_errors:
-            if on_error == "skip":
-                raise _SkipBatch()
-            raise BatchAborted(
-                f"batch {batch_id}: {got['n_bad']} quarantined > max_errors={max_errors}"
-            )
-
-    try:
-        res: MergeResult = table.merge(
-            spark,
-            reduced,
-            batch_id,
-            op_col=op_col,
-            lsn_col=lsn_col,
-            extra_audit=counts,
-            pre_commit_hook=_pre_commit,
-        )
-    except _SkipBatch:
-        v = table.record_skip(batch_id, extra_audit=counts)
-        n_in, n_bad = counts["rows_batch_in"], counts["rows_quarantined"]
-        metrics = BatchMetrics(
-            batch_id=batch_id,
-            rows_in=n_in,
-            rows_quarantined=n_bad,
-            rows_deduped=0,
-            rows_merged_in=0,
-            rows_deleted=0,
-            fenced=False,
-            version=v,
-            duration_ms=0,
-            rows_skipped=n_in - n_bad,
-        )
-        metrics.check_invariant()
-        return metrics
-
-    n_in, n_bad = counts["rows_batch_in"], counts["rows_quarantined"]
-    metrics = BatchMetrics(
-        batch_id=batch_id,
-        rows_in=n_in,
-        rows_quarantined=n_bad,
-        rows_deduped=n_in - n_bad - res.rows_in,
-        rows_merged_in=res.rows_in,
-        rows_deleted=res.rows_deleted,
-        fenced=res.fenced,
-        version=res.version,
-        duration_ms=res.duration_ms,
-    )
-    metrics.check_invariant()
-    return metrics
+    return reduced
 
 
 def apply_batch_multi(

@@ -90,20 +90,21 @@ def trace_event(op: str, table: str | None = None, rows: int | None = None,
 def span(op: str, table: str | None = None, **detail: Any) -> Iterator[dict]:
     """Time an operation and trace it on exit (also on failure, with
     ``error`` set -- the reference logs failed statements too). The
-    yielded dict lets the body attach ``rows``/``batch_id`` post-hoc."""
+    yielded dict lets the body attach ``rows``/``batch_id`` post-hoc;
+    any other key it sets joins the record's detail."""
     info: dict[str, Any] = {}
     t0 = time.monotonic()
     try:
         yield info
     except BaseException as e:
         if _path is not None:
-            trace_event(op, table, info.get("rows"),
-                        time.monotonic() - t0, info.get("batch_id"),
-                        error=f"{type(e).__name__}: {e}", **detail)
+            trace_event(op, table, info.pop("rows", None),
+                        time.monotonic() - t0, info.pop("batch_id", None),
+                        error=f"{type(e).__name__}: {e}", **detail, **info)
         raise
     if _path is not None:
-        trace_event(op, table, info.get("rows"), time.monotonic() - t0,
-                    info.get("batch_id"), **detail)
+        trace_event(op, table, info.pop("rows", None), time.monotonic() - t0,
+                    info.pop("batch_id", None), **detail, **info)
 
 
 def trace_df(spark: SparkSession, path: str | None = None) -> DataFrame:

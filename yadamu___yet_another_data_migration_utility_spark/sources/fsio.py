@@ -25,7 +25,8 @@ Everything else (listdir/walk/remove for retention, open_read for
 parquet footers) is plain namespace traversal with direct object-store
 analogues (LIST/DELETE/GET). Data files are written by Spark itself --
 point the table root at an ``s3a://`` URI and Spark's committers handle
-the data plane; this seam covers the metadata plane.
+the data plane; this seam covers the metadata plane, plus ``open_write``
+for the small merge-on-read deltas the engine writes in-process.
 
 Reference capability this replaces: the loader's pluggable storage
 services -- /root/reference/src/YADAMU/loader/node/cloudDBI.js:1-194
@@ -87,6 +88,13 @@ class LocalFS:
         """Binary reader (parquet footer stats). S3 analogue: ranged GET
         via pyarrow.fs.S3FileSystem.open_input_file."""
         return open(path, "rb")
+
+    # -- data files ----------------------------------------------------------
+    def open_write(self, path: str) -> IO[bytes]:
+        """Binary writer for a new data file (in-process delta writes).
+        S3 analogue: pyarrow.fs.S3FileSystem.open_output_stream."""
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        return open(path, "wb")
 
     # -- namespace traversal ----------------------------------------------
     def exists(self, path: str) -> bool:
@@ -231,6 +239,11 @@ class ObjectFS:
             raise
         except OSError as e:
             raise FileNotFoundError(str(e)) from e
+
+    # -- data files ----------------------------------------------------
+    def open_write(self, path: str):
+        self.makedirs(path.rsplit("/", 1)[0])
+        return self.fs.open_output_stream(path)
 
     # -- namespace traversal -------------------------------------------
     def _info(self, path: str):

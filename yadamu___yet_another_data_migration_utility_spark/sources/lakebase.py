@@ -173,6 +173,19 @@ def _bucket_id(values, types, n: int) -> int:
     return (h - (1 << 64) if h >> 63 else h) % n
 
 
+def _bucket_ids(tbl: pa.Table, ks: list[str], types, n: int) -> list[int]:
+    """``_bucket_id`` of every row of ``tbl``'s key columns, hashing
+    each distinct key once (update-heavy batches repeat hot keys)."""
+    memo: dict[tuple, int] = {}
+    out = []
+    for kv in zip(*[tbl.column(k).to_pylist() for k in ks]):
+        b = memo.get(kv)
+        if b is None:
+            b = memo[kv] = _bucket_id(kv, types, n)
+        out.append(b)
+    return out
+
+
 def _distribute_delta(df: DataFrame, key, nb: int, spark) -> DataFrame:
     """Cluster a merge batch to ~one write task per touched bucket
     before the ``partitionBy("_b")`` delta write (Iceberg:
@@ -475,6 +488,19 @@ def _arrow_key_filter(ks: list[str], probes: list[tuple],
     return expr
 
 
+def _align_arrow(t: pa.Table, target: pa.Schema) -> pa.Table:
+    """``_align``'s in-process twin: project ``t`` onto ``target``'s
+    column order, a column ``t`` lacks becoming NULL and a column of
+    another type cast to the target type."""
+    have = set(t.column_names)
+    return pa.Table.from_arrays(
+        [(t.column(fl.name) if t.schema.field(fl.name).type == fl.type
+          else t.column(fl.name).cast(fl.type))
+         if fl.name in have else pa.nulls(t.num_rows, fl.type)
+         for fl in target],
+        schema=target)
+
+
 def _match_probes(tbl: pa.Table, ks: list[str], probes: list[tuple]) -> pa.Table:
     """Rows of ``tbl`` whose key tuple is one of ``probes``."""
     if len(ks) == 1 or not tbl.num_rows:
@@ -537,7 +563,18 @@ def _widens(old: T.DataType, new: T.DataType) -> bool:
     return old.typeName() == "float" and new.typeName() == "double"
 
 
-def _evolved_schema(m: dict[str, Any], batch_df: DataFrame, op_col: str,
+def _same_cast(old: T.DataType, new: T.DataType) -> bool:
+    """True iff casting a value of ``old`` to ``new`` gives the same
+    result in Spark and in pyarrow: equal types, and the numeric casts
+    the engine's own schema evolution produces (integral to integral,
+    float to double, decimal precision growth at fixed scale). Both
+    engines raise on an overflowing integral narrowing (Spark under its
+    default ANSI mode)."""
+    return old == new or _widens(old, new) or (
+        old.typeName() in _WIDEN_RANK and new.typeName() in _WIDEN_RANK)
+
+
+def _evolved_schema(m: dict[str, Any], batch_schema: T.StructType, op_col: str,
                     lsn_col: str) -> T.StructType:
     """Schema evolution (Iceberg: UpdateSchema): new payload columns in
     the batch are appended (nullable) to the table schema, and an
@@ -547,8 +584,8 @@ def _evolved_schema(m: dict[str, Any], batch_df: DataFrame, op_col: str,
     (the batch column is cast by ``_align``, the pre-evolution
     behavior)."""
     table_schema = T.StructType.fromJson(m["schema"])
-    payload_cols = [c for c in batch_df.columns if c not in (op_col, lsn_col)]
-    batch_fields = {f.name: f for f in batch_df.schema.fields
+    payload_cols = [c for c in batch_schema.fieldNames() if c not in (op_col, lsn_col)]
+    batch_fields = {f.name: f for f in batch_schema.fields
                     if f.name in payload_cols}
     fields = [
         # the MERGE KEY never widens: bucket placement is
@@ -565,7 +602,7 @@ def _evolved_schema(m: dict[str, Any], batch_df: DataFrame, op_col: str,
     known = set(table_schema.fieldNames())
     fields += [
         T.StructField(f.name, f.dataType, True)
-        for f in batch_df.schema.fields
+        for f in batch_schema.fields
         if f.name in payload_cols and f.name not in known
     ]
     return T.StructType(fields)

@@ -520,7 +520,7 @@ class DmlMixin:
             drop_evo += [s for s, k in zip(sk, ks) if s != k]
             src_for_evo = source.drop(*drop_evo)
             schema = _evolved_schema(
-                m, src_for_evo, op_col="\x00none", lsn_col="\x00none2")
+                m, src_for_evo.schema, op_col="\x00none", lsn_col="\x00none2")
         else:
             schema = T.StructType.fromJson(m["schema"])
         fields = {f.name: f.dataType for f in schema.fields}

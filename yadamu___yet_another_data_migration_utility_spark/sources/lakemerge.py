@@ -6,30 +6,27 @@ module docstring for the commit-protocol design."""
 
 from __future__ import annotations
 
-import contextlib  # noqa: F401  (kept for parity with the pre-split module)
 import json
 import os
 import time
 import uuid
 from typing import Any
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
-from . import bloomindex as _bloom  # noqa: F401
-from .fsio import CommitConflict, LocalFS  # noqa: F401
-from .lakebase import (  # noqa: F401
+from .fsio import CommitConflict
+from .lakebase import (
     RebaseError, ConstraintViolation, MergeResult,
-    FORMAT_VERSION, MANIFEST_DIR, DATA_DIR, CURRENT, BRANCHES_SUBDIR,
-    BRANCH_META, MAIN_BRANCH, LSN_COL, DELETED_COL, STATS_FORMAT,
-    MERGE_MODES,
-    _keylist, _bucket_expr, _distribute_delta, _znorm_expr, _zorder_expr,
-    _zorder_key, _where_cond, _keys_residual, _hashable, _lsn_rank,
-    _resolve, _widens, _evolved_schema, _buckets_changed_between,
-    _list_bucket_files, _ts_micros, _aqe_off, _enc_stat, _inherit_stats,
-    _zone_kind, _session_tz, _enc_bound, _disjoint, _footer_stats,
-    _align, _cap, _utc_now_iso, _ZONE_TYPES, _ZONE_STR_CAP, _WIDEN_RANK,
+    MANIFEST_DIR, DATA_DIR, LSN_COL, DELETED_COL,
+    _keylist, _bucket_expr, _bucket_ids, _distribute_delta, _hashable,
+    _lsn_rank, _evolved_schema, _buckets_changed_between,
+    _list_bucket_files, _ts_micros, _aqe_off, _inherit_stats,
+    _footer_stats, _align, _align_arrow, _cap, _utc_now_iso, _ZONE_TYPES,
 )
 
 
@@ -131,7 +128,7 @@ class MergeMixin:
     def merge(
         self,
         spark: SparkSession,
-        batch_df: DataFrame,
+        batch_df: DataFrame | pa.Table,
         batch_id: int,
         op_col: str = "op",
         lsn_col: str = "lsn",
@@ -162,6 +159,11 @@ class MergeMixin:
         ``mode`` overrides the table's ``merge_mode`` property for this
         commit (tests/benchmarks); normally leave None.
 
+        ``batch_df`` may also be a ``pyarrow.Table`` already in driver
+        memory (``operators.apply`` hands small batches over this way):
+        merge-on-read only, written by ``_merge_mor_arrow`` without a
+        Spark job.
+
         ``pre_commit_hook`` (if given) is a zero-arg callable invoked
         after the batch has been materialized (so any Observation the
         caller attached upstream has fired) and BEFORE the manifest
@@ -176,6 +178,14 @@ class MergeMixin:
         if str(batch_id) in m["applied_batches"]:
             return MergeResult(batch_id, None, True, 0, 0, 0, None, None, 0, 0)
         mode = mode or m.get("merge_mode", "cow")
+        if isinstance(batch_df, pa.Table):
+            if mode != "mor":
+                raise ValueError("an in-memory (pyarrow) batch merges "
+                                 "only into a merge-on-read table")
+            return self._merge_mor_arrow(
+                spark, m, batch_df, batch_id, op_col, lsn_col,
+                collect_lineage, extra_audit, pre_commit_hook,
+            )
         if mode == "mor":
             return self._merge_mor(
                 spark, m, batch_df, batch_id, op_col, lsn_col,
@@ -207,15 +217,7 @@ class MergeMixin:
 
         with _aqe_off(spark):
             t0 = time.monotonic()
-            _dbg = os.environ.get("SPARK_GRAFT_DEBUG_TIMING")
-
-            def _tick(label, _last=[t0]):
-                if _dbg:
-                    now = time.monotonic()
-                    print(f"    merge.{label}: {now - _last[0]:.2f}s", flush=True)
-                    _last[0] = now
-
-            table_schema = _evolved_schema(m, batch_df, op_col, lsn_col)
+            table_schema = _evolved_schema(m, batch_df.schema, op_col, lsn_col)
             src = batch_df.withColumnRenamed(lsn_col, LSN_COL)
             src = _align(src, table_schema, keep=[op_col])
             delta = src.withColumn(DELETED_COL, F.col(op_col) == "D").drop(op_col)
@@ -239,91 +241,170 @@ class MergeMixin:
                     .write.partitionBy("_b")
                     .parquet(self.fs.spark_path(out_dir))
                 )
-            _tick("delta_write")
-            got = obs.get
-            try:
-                if pre_commit_hook is not None:
-                    pre_commit_hook()  # may raise -> clean abort below
-            except Exception:
-                self.fs.rmtree(out_dir)  # nothing referenced it yet
-                raise
-            _tick("hook")
+            return self._commit_mor_delta(
+                m, batch_id, out_dir, rel_dir, table_schema, obs.get,
+                collect_lineage, extra_audit, pre_commit_hook, t0)
 
-            new_files = _list_bucket_files(self.fs, out_dir, rel_dir)
-            lineage: list[dict[str, Any]] = []
-            # zone maps are collected UNCONDITIONALLY (the footers are open
-            # anyway); collect_lineage gates only the lineage rows -- the
-            # two features are independent
-            per_bucket, zone, frows = _footer_stats(
-                self.fs, self.root, new_files, schema=table_schema,
-            )
-            if collect_lineage:
-                for b, fstats in per_bucket.items():
-                    lineage.append({"batch_id": batch_id, "bucket": int(b), **fstats})
-            _tick("footers")
+    def _merge_mor_arrow(
+        self, spark, m, batch: pa.Table, batch_id, op_col, lsn_col,
+        collect_lineage, extra_audit, pre_commit_hook,
+    ) -> MergeResult:
+        """Merge-on-read of a batch already in driver memory: the same
+        delta files as ``_merge_mor`` -- the table schema aligned by
+        ``_align_arrow``, rows placed by ``_bucket_id`` (bit-identical to
+        ``_bucket_expr``), one file per touched bucket under the same
+        ``c{v}-{uuid}/_b=N/`` layout -- written by pyarrow through the
+        table FS, then committed by the same tail. No Spark job.
 
-            n_in = got["n"] or 0
-            dels = got["dels"] or 0
+        The files match Spark's writer where it shows: the session's
+        parquet codec, microsecond timestamps, the ``_deleted`` column
+        last, every column nullable. Footer statistics are written only
+        for the columns ``_footer_stats`` reads (the zone-map types and
+        ``_lsn``); writing them for the payload too would put its
+        min/max into every page header and grow the delta files. No
+        dictionary encoding: a batch's keys and payloads are nearly all
+        distinct, and on 2k-event commits plain pages came out 8%
+        smaller than Spark's files and read 8% faster (4-vCPU VM)."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
 
-            def build(mp: dict[str, Any]) -> dict[str, Any]:
-                # rebase: a mor merge only APPENDS delta files + its fence
-                # entry, which composes with any intervening commit (another
-                # merge, an append, even a compact -- our files were not part
-                # of what it folded). Only a concurrent schema change aborts.
-                if mp is not m and mp["schema"] != m["schema"]:
-                    raise RebaseError(
-                        "concurrent schema change during merge; retry the batch"
-                    )
-                v = mp["version"] + 1
-                deltas = {k: list(fl) for k, fl in mp.get("deltas", {}).items()}
-                for b, files in new_files.items():
-                    deltas[b] = deltas.get(b, []) + files
-                applied = dict(mp["applied_batches"])
-                applied[str(batch_id)] = {"version": v, "op": "merge"}
-                audit = {
-                    "batch_id": batch_id,
-                    "operation": "merge",
-                    "mode": "mor",
-                    "rows_in": n_in,
-                    "rows_applied": n_in - dels,
-                    "rows_deleted": dels,
-                    "min_lsn": got["mn"],
-                    "max_lsn": got["mx"],
-                    "touched_buckets": len(new_files),
-                    "version": v,
-                    **(extra_audit or {}),
-                }
-                return {
-                    **mp,
-                    "version": v,
-                    "parent": mp["version"],
-                    "schema": table_schema.jsonValue(),
-                    "deltas": deltas,
-                    "applied_batches": _cap(applied),
-                    "lsn_high": max(mp.get("lsn_high") or 0, got["mx"] or 0),
-                    "audit": audit,
-                    "lineage": lineage,
-                    "stats": {**_inherit_stats(mp), **zone},
-                    "file_rows": {**mp.get("file_rows", {}), **frows},
-                    "summary": {"operation": "merge", "mode": "mor",
-                                "rows_written": n_in},
-                    "committed_at": _utc_now_iso(),
-                }
+        t0 = time.monotonic()
+        table_schema = _evolved_schema(
+            m, from_arrow_schema(batch.schema), op_col, lsn_col)
+        target = pa.schema([f.with_nullable(True)
+                            for f in to_arrow_schema(table_schema)])
+        src = batch.rename_columns(
+            [LSN_COL if c == lsn_col else c for c in batch.column_names])
+        delta = _align_arrow(src, target).append_column(
+            DELETED_COL, pc.equal(batch.column(op_col), "D"))
 
-            try:
-                committed = self._commit_with_rebase(m, build, batch_id=batch_id)
-            except (CommitConflict, RebaseError):
-                self.fs.rmtree(out_dir)  # unreferenced; leave the table clean
-                raise
-            _tick("manifest")
-            dt = int((time.monotonic() - t0) * 1000)
-            if committed is None:  # a concurrent writer fenced this batch first
-                self.fs.rmtree(out_dir)
-                return MergeResult(batch_id, None, True, 0, 0, 0, None, None, 0, dt)
-            return MergeResult(
-                batch_id, committed["version"], False, n_in, n_in - dels, dels,
-                got["mn"], got["mx"], len(new_files), dt,
-            )
+        ks = _keylist(m["key"])
+        buckets = np.asarray(_bucket_ids(
+            delta, ks, [table_schema[k].dataType for k in ks],
+            m["bucket_count"]), dtype=np.int64)
+        order = np.argsort(buckets, kind="stable")
+        delta = delta.take(order)
+        touched, starts = np.unique(buckets[order], return_index=True)
+        codec = spark.conf.get("spark.sql.parquet.compression.codec")
+        codec = "none" if codec == "uncompressed" else codec
+        stats_cols = [f.name for f in table_schema.fields  # _lsn included
+                      if isinstance(f.dataType, _ZONE_TYPES)]
+        out_dir, rel_dir = self._new_commit_dir(m["version"] + 1)
+        try:
+            for b, lo, hi in zip(touched, starts,
+                                 np.append(starts[1:], delta.num_rows)):
+                name = f"part-00000-{uuid.uuid4()}.c000.parquet"
+                with self.fs.open_write(
+                        os.path.join(out_dir, f"_b={b}", name)) as f:
+                    pq.write_table(
+                        delta.slice(lo, hi - lo), f, compression=codec,
+                        use_dictionary=False, write_statistics=stats_cols,
+                        store_schema=False)
+        except BaseException:
+            self.fs.rmtree(out_dir)
+            raise
+        lsn = delta.column(LSN_COL)
+        got = {
+            "n": delta.num_rows,
+            "dels": pc.sum(delta.column(DELETED_COL).cast(pa.int64())).as_py(),
+            "mn": pc.min(lsn).as_py(),
+            "mx": pc.max(lsn).as_py(),
+        }
+        return self._commit_mor_delta(
+            m, batch_id, out_dir, rel_dir, table_schema, got,
+            collect_lineage, extra_audit, pre_commit_hook, t0)
+
+    def _commit_mor_delta(
+        self, m, batch_id, out_dir, rel_dir, table_schema, got,
+        collect_lineage, extra_audit, pre_commit_hook, t0,
+    ) -> MergeResult:
+        """The merge-on-read commit tail both delta writers share: run
+        the pre-commit hook, harvest footers (lineage, zone maps, file
+        row counts) of the files under ``out_dir``, then publish the
+        manifest with the batch's fence. ``got`` holds the delta's row
+        count ``n``, tombstone count ``dels`` and ``_lsn`` range
+        ``mn``/``mx``. Any failure before the publish removes
+        ``out_dir``: nothing references it yet."""
+        try:
+            if pre_commit_hook is not None:
+                pre_commit_hook()  # may raise -> clean abort below
+        except Exception:
+            self.fs.rmtree(out_dir)  # nothing referenced it yet
+            raise
+
+        new_files = _list_bucket_files(self.fs, out_dir, rel_dir)
+        lineage: list[dict[str, Any]] = []
+        # zone maps are collected UNCONDITIONALLY (the footers are open
+        # anyway); collect_lineage gates only the lineage rows -- the
+        # two features are independent
+        per_bucket, zone, frows = _footer_stats(
+            self.fs, self.root, new_files, schema=table_schema,
+        )
+        if collect_lineage:
+            for b, fstats in per_bucket.items():
+                lineage.append({"batch_id": batch_id, "bucket": int(b), **fstats})
+
+        n_in = got["n"] or 0
+        dels = got["dels"] or 0
+
+        def build(mp: dict[str, Any]) -> dict[str, Any]:
+            # rebase: a mor merge only APPENDS delta files + its fence
+            # entry, which composes with any intervening commit (another
+            # merge, an append, even a compact -- our files were not part
+            # of what it folded). Only a concurrent schema change aborts.
+            if mp is not m and mp["schema"] != m["schema"]:
+                raise RebaseError(
+                    "concurrent schema change during merge; retry the batch"
+                )
+            v = mp["version"] + 1
+            deltas = {k: list(fl) for k, fl in mp.get("deltas", {}).items()}
+            for b, files in new_files.items():
+                deltas[b] = deltas.get(b, []) + files
+            applied = dict(mp["applied_batches"])
+            applied[str(batch_id)] = {"version": v, "op": "merge"}
+            audit = {
+                "batch_id": batch_id,
+                "operation": "merge",
+                "mode": "mor",
+                "rows_in": n_in,
+                "rows_applied": n_in - dels,
+                "rows_deleted": dels,
+                "min_lsn": got["mn"],
+                "max_lsn": got["mx"],
+                "touched_buckets": len(new_files),
+                "version": v,
+                **(extra_audit or {}),
+            }
+            return {
+                **mp,
+                "version": v,
+                "parent": mp["version"],
+                "schema": table_schema.jsonValue(),
+                "deltas": deltas,
+                "applied_batches": _cap(applied),
+                "lsn_high": max(mp.get("lsn_high") or 0, got["mx"] or 0),
+                "audit": audit,
+                "lineage": lineage,
+                "stats": {**_inherit_stats(mp), **zone},
+                "file_rows": {**mp.get("file_rows", {}), **frows},
+                "summary": {"operation": "merge", "mode": "mor",
+                            "rows_written": n_in},
+                "committed_at": _utc_now_iso(),
+            }
+
+        try:
+            committed = self._commit_with_rebase(m, build, batch_id=batch_id)
+        except (CommitConflict, RebaseError):
+            self.fs.rmtree(out_dir)  # unreferenced; leave the table clean
+            raise
+        dt = int((time.monotonic() - t0) * 1000)
+        if committed is None:  # a concurrent writer fenced this batch first
+            self.fs.rmtree(out_dir)
+            return MergeResult(batch_id, None, True, 0, 0, 0, None, None, 0, dt)
+        return MergeResult(
+            batch_id, committed["version"], False, n_in, n_in - dels, dels,
+            got["mn"], got["mx"], len(new_files), dt,
+        )
 
     # ------------------------------------------------------------------
     def _merge_cow(
@@ -346,7 +427,7 @@ class MergeMixin:
                 "compact(spark, all_deltas=True) first"
             )
 
-        table_schema = _evolved_schema(m, batch_df, op_col, lsn_col)
+        table_schema = _evolved_schema(m, batch_df.schema, op_col, lsn_col)
         data_cols = [f.name for f in table_schema.fields if f.name != LSN_COL]
 
         src = batch_df.withColumnRenamed(lsn_col, LSN_COL)
@@ -587,7 +668,7 @@ class MergeMixin:
             "staged_at": _utc_now_iso(),
         }))
         try:
-            table_schema = _evolved_schema(m, batch_df, op_col, lsn_col)
+            table_schema = _evolved_schema(m, batch_df.schema, op_col, lsn_col)
             src = batch_df.withColumnRenamed(lsn_col, LSN_COL)
             src = _align(src, table_schema, keep=[op_col])
             delta = src.withColumn(

@@ -33,7 +33,7 @@ from .lakebase import (  # noqa: F401
     _zone_kind, _session_tz, _enc_bound, _disjoint, _footer_stats,
     _align, _cap, _utc_now_iso, _ZONE_TYPES, _ZONE_STR_CAP, _WIDEN_RANK,
     _driver_hashable, _bucket_id, _probe_tuples, _key_envelope,
-    _arrow_key_filter, _match_probes, _resolve_arrow,
+    _arrow_key_filter, _align_arrow, _match_probes, _resolve_arrow,
     _check_key_types, _check_probe_arity,
 )
 
@@ -452,12 +452,7 @@ class ScanMixin:
             have = set(frag.physical_schema.names)
             t = frag.to_table(columns=[n for n in target.names if n in have],
                               filter=kfilter)
-        return pa.Table.from_arrays(
-            [(t.column(fl.name) if t.schema.field(fl.name).type == fl.type
-              else t.column(fl.name).cast(fl.type))
-             if fl.name in have else pa.nulls(t.num_rows, fl.type)
-             for fl in target],
-            schema=target)
+        return _align_arrow(t, target)
 
     def _lookup_by_join(self, spark: SparkSession, m: dict[str, Any],
                         keys: list, public: bool) -> DataFrame:
