@@ -357,7 +357,7 @@ def main() -> None:
     ap.add_argument("--log-path", default=None,
                     help="reuse/write the changelog at this path (scaling protocol)")
     ap.add_argument("--dedup", default="none",
-                    choices=["none", "broadcast", "salted"],
+                    choices=["none", "broadcast"],
                     help="pre-write dedup strategy for --replay/--scaling "
                          "(see run_replay docstring)")
     args = ap.parse_args()

@@ -53,9 +53,15 @@ def test_extractor_deterministic_and_correct():
 
 
 def test_last_lsn_dedup_salted_equals_unsalted(spark):
+    """The map-side combined ``max_by`` reduction equals a window-rank
+    reduction (one row per url, the max-lsn event with its payload),
+    exact redeliveries included."""
+    from pyspark.sql import Window
+
     df = changelog_df(spark, 2000, 50, dup_mod=10)
-    a = last_lsn_dedup(df, salt_buckets=0).orderBy("url")
-    b = last_lsn_dedup(df, salt_buckets=16).orderBy("url")
+    a = last_lsn_dedup(df)
+    rank = F.row_number().over(Window.partitionBy("url").orderBy(F.col("lsn").desc()))
+    b = df.withColumn("_rn", rank).filter("_rn = 1").select(*a.columns)
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
     # one row per url, each the max lsn
     mx = df.groupBy("url").agg(F.max("lsn").alias("lsn"))
@@ -81,14 +87,14 @@ def test_quarantine_split_reasons(spark):
 
 @pytest.mark.parametrize("mode,dedup", [
     ("mor", "broadcast"), ("cow", "broadcast"),
-    ("mor", "none"), ("mor", "salted"),
+    ("mor", "none"),
 ])
 def test_apply_replay_matches_oracle(spark, tmp_table_root, mode, dedup):
     """Replay a 5k-event changelog in 5 batches; final state must equal
     the whole-log batch oracle (YADAMU acceptance operator) -- in both
     merge modes and across every dedup strategy (under mor, pre-write
     reduction is an optimization; resolution must give the identical
-    final state with it, without it, and with salting)."""
+    final state with it and without it)."""
     t = mk_table(tmp_table_root, merge_mode=mode)
     log = changelog_df(spark, 5000, 300, dup_mod=25)
     n_batches = 5
@@ -195,35 +201,33 @@ def test_schema_evolution_mid_stream(spark, tmp_table_root):
 
 
 def test_apply_precheck_rejects_before_writing(spark, tmp_table_root):
-    """precheck_errors=True: a poisoned batch beyond max_errors is
-    skipped/aborted on a cheap narrow count BEFORE the extract + delta
-    write -- no delta files for the batch ever land on disk -- while
+    """A poisoned batch beyond max_errors is skipped/aborted by the
+    merge's pre-commit hook, BEFORE the manifest commit -- no delta
+    files of the batch are referenced or left on disk -- while
     quarantine rows still persist for diagnosis."""
     import os
 
     t = mk_table(tmp_table_root)
     log = changelog_df(spark, 1000, 100, poison_mod=20, dup_mod=0)
     bad = log.filter(F.col("lsn") <= 500)
-    m0 = apply_batch(t, bad, batch_id=0, max_errors=1, on_error="skip",
-                     precheck_errors=True)
+    m0 = apply_batch(t, bad, batch_id=0, max_errors=1, on_error="skip")
     assert m0.rows_skipped > 0 and m0.rows_merged_in == 0
     assert t.is_applied(0)
     assert t.audit_entries()[-1]["operation"] == "skip"
     assert quarantine_df(spark, t).count() == m0.rows_quarantined
-    # the reject happened before any delta write: no data files at all
+    # the skip committed no data: no data files referenced or on disk
     m = t.manifest()
     assert all(not fl for fl in m["buckets"].values())
     assert all(not fl for fl in m.get("deltas", {}).values())
-    # abort policy under precheck raises (fresh table), quarantine kept
+    assert not [f for _, _, fs in os.walk(os.path.join(t.root, "data")) for f in fs]
+    # abort policy raises (fresh table), quarantine kept
     t2 = mk_table(tmp_table_root + "_pre_abort")
-    with pytest.raises(BatchAborted, match="precheck"):
-        apply_batch(t2, bad, batch_id=0, max_errors=1, on_error="abort",
-                    precheck_errors=True)
+    with pytest.raises(BatchAborted, match="max_errors=1"):
+        apply_batch(t2, bad, batch_id=0, max_errors=1, on_error="abort")
     assert quarantine_df(spark, t2).count() > 0
-    # clean batch with precheck on: applies normally (single merge path)
+    # a clean batch under the same policy applies normally
     good = log.filter((F.col("lsn") > 500) & (F.col("lsn") <= 1000))
-    m1 = apply_batch(t, good, batch_id=1, max_errors=1000, on_error="skip",
-                     precheck_errors=True)
+    m1 = apply_batch(t, good, batch_id=1, max_errors=1000, on_error="skip")
     assert m1.rows_merged_in > 0
 
 
@@ -399,8 +403,9 @@ def test_constraints_and_composite_key_on_both_paths(spark, tmp_path,
 
 def test_apply_trace_records_each_path_and_its_reason(spark, tmp_path):
     """One apply record per call: the in-process path with its four
-    phase timings, the Spark path with the reason it was taken, and a
-    fenced replay."""
+    phase timings, the Spark path with the reason it was taken, a
+    fenced replay, and the dedup strategy each call ran -- a
+    copy-on-write table reduces even when asked for ``dedup="none"``."""
     sch = "url string, val string, op string, lsn long"
     import pyspark.sql.types as T
 
@@ -417,17 +422,19 @@ def test_apply_trace_records_each_path_and_its_reason(spark, tmp_path):
         apply_batch(mor, spark.createDataFrame([("c", "3", "I", 3)], sch), 3,
                     run_extract=False)
         apply_batch(mor, df, 0, run_extract=False)
-        apply_batch(mor, df, 1, run_extract=False, dedup="salted")
-        apply_batch(mor, df, 2, run_extract=False, precheck_errors=True)
+        apply_batch(mor, df, 1, run_extract=False, dedup="none")
         apply_batch(cow, df, 0, run_extract=False)
+        apply_batch(cow, df, 1, run_extract=False, dedup="none")
 
     _, recs = _apply_trace(tmp_path, run)
-    got = [(r["table"], r["batch_id"], r["detail"]["path"], r["detail"].get("reason"))
-           for r in recs]
-    assert got == [(mor.root, 0, "arrow", None), (mor.root, 3, "spark", "size"),
-                   (mor.root, 0, "fenced", None),
-                   (mor.root, 1, "spark", "salted"), (mor.root, 2, "spark", "precheck"),
-                   (cow.root, 0, "spark", "cow")]
+    got = [(r["table"], r["batch_id"], r["detail"]["path"],
+            r["detail"].get("reason"), r["detail"]["dedup"]) for r in recs]
+    assert got == [(mor.root, 0, "arrow", None, "broadcast"),
+                   (mor.root, 3, "spark", "size", "broadcast"),
+                   (mor.root, 0, "fenced", None, "broadcast"),
+                   (mor.root, 1, "arrow", None, "none"),
+                   (cow.root, 0, "spark", "cow", "broadcast"),
+                   (cow.root, 1, "spark", "cow", "broadcast")]
     phases = {"collect_s", "dedup_extract_s", "write_s", "commit_s"}
     assert phases <= set(recs[0]["detail"])
     # a list-built batch is an RDD: its size is unknown, so not small

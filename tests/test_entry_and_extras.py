@@ -23,7 +23,7 @@ KEPT_QUERIES = {
     "cdc_metrics_audit", "cdc_mirror_replicate", "cdc_multi_table_replay",
     "cdc_point_lookup", "cdc_predicate_delete", "cdc_predicate_update",
     "cdc_quarantine_split", "cdc_replay_merge", "cdc_rollback_replay",
-    "cdc_scd2_history", "cdc_schema_evolution", "cdc_skew_salted_apply",
+    "cdc_scd2_history", "cdc_schema_evolution",
     "cdc_snapshot_sync", "cdc_sql_over_lake", "cdc_time_travel_tag",
     "cdc_timeslice_scan", "cdc_wap_publish", "corpus_balanced_sample",
     "corpus_decontaminate", "corpus_mix_weights", "corpus_pack_sequences",

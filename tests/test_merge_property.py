@@ -79,7 +79,7 @@ def test_merge_equals_lww_oracle(spark, tmp_path_factory, events, cuts, mode):
             # reduction (the same operator apply_batch routes through),
             # so the property fuzzes the real pre-reduction + merge
             # pipeline, duplicates included, not a test-local re-oracle
-            df = last_lsn_dedup(df, key="url", lsn_col="lsn", salt_buckets=4)
+            df = last_lsn_dedup(df, key="url", lsn_col="lsn")
         t.merge(spark, df, batch_id=bid)
         start = end
     # replay the first batch verbatim: must fence as a no-op
@@ -151,8 +151,7 @@ def test_merge_equals_lww_oracle_composite_key(
         dup = [r for i, r in enumerate(chunk) if i % 3 == 0]
         df = spark.createDataFrame(chunk + dup, ddl)
         if mode == "cow":
-            df = last_lsn_dedup(df, key=["site", "page"], lsn_col="lsn",
-                                salt_buckets=4)
+            df = last_lsn_dedup(df, key=["site", "page"], lsn_col="lsn")
         t.merge(spark, df, batch_id=bid)
         start = end
     first = rows[: bounds[0]]
@@ -225,7 +224,7 @@ def test_lookup_equals_read_and_oracle(spark, tmp_path_factory, events, more,
         if chunk:
             df = spark.createDataFrame(chunk + chunk[::3], ddl)
             if mode == "cow":
-                df = last_lsn_dedup(df, key="url", lsn_col="lsn", salt_buckets=4)
+                df = last_lsn_dedup(df, key="url", lsn_col="lsn")
             t.merge(spark, df, batch_id=bid)
         if end == len(events):
             t.compact(spark, all_deltas=True)

@@ -248,3 +248,43 @@ def test_requeue_survives_audit_truncation(spark, tmp_table_root):
     r2 = requeue_quarantine(t, spark, repair=full_fix)
     assert not r2.fenced and r2.batch_id == REQUEUE_BASE + 0 + 1
     assert pending_quarantine_ids(t) == []
+
+
+@pytest.mark.parametrize("small", [True, False], ids=["arrow", "spark"])
+def test_quarantine_goes_through_the_table_fs(spark, tmp_path, monkeypatch, small):
+    """Dead letters are written, listed, read and drained through the
+    table's FS: on an object-store FS whose Spark paths map into the
+    store, with a relative table root, nothing lands in the working
+    directory and the requeue finds and drains the rows."""
+    import pyarrow.fs as pafs
+
+    from yadamu___yet_another_data_migration_utility_spark.operators import apply as apply_mod
+    from yadamu___yet_another_data_migration_utility_spark.sources.fsio import ObjectFS
+
+    store, cwd = tmp_path / "store", tmp_path / "cwd"
+    store.mkdir()
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    if not small:
+        monkeypatch.setattr(apply_mod, "ARROW_MAX_BYTES", -1)
+
+    class StoreFS(ObjectFS):
+        def spark_path(self, path):
+            return os.path.join(str(store), path)
+
+    fs = StoreFS(pafs.SubTreeFileSystem(str(store), pafs.LocalFileSystem()))
+    t = LakeTable.create("t", PAGE_SCHEMA, key="url", bucket_count=4, fs=fs)
+    ddl = "url string, op string, lsn long"
+    df = spark.createDataFrame(spark.createDataFrame(
+        [("a", "I", 1), (None, "I", 2)], ddl).toArrow())
+    m = apply_batch(t, df, 0, run_extract=False)
+    assert m.rows_quarantined == 1 and m.rows_merged_in == 1
+    assert pending_quarantine_ids(t) == [0]
+    assert quarantine_df(spark, t).count() == 1
+    assert os.path.isdir(store / "t" / QUARANTINE_DIR / "batch_id=0")
+    r = requeue_quarantine(t, spark, repair={"url": "coalesce(url, 'b')"},
+                           run_extract=False)
+    assert r is not None and r.rows_merged_in == 1 and r.rows_quarantined == 0
+    assert pending_quarantine_ids(t) == [] and quarantine_df(spark, t) is None
+    assert {row["url"] for row in t.read(spark).collect()} == {"a", "b"}
+    assert list(cwd.iterdir()) == []

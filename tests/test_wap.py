@@ -247,3 +247,40 @@ def test_expire_never_sweeps_concurrently_published_stage(
         (r["url"], r["val"]) for r in t.read(spark).collect()}
     rep = t.validate(spark)
     assert rep["ok"], rep["issues"]
+
+
+def test_staged_publish_commits_what_merge_commits(spark, tmp_path):
+    """``stage_merge`` + ``publish_staged`` and ``merge`` share one
+    delta writer and one commit record: the same batch (a new column,
+    an update, a delete, a redelivery, an insert) committed either way
+    reads the same rows and records the same per-bucket zone maps and
+    file row counts, lineage, schema, ``lsn_high`` and audit rows --
+    the audit and summary differ only in the ``staged`` flag."""
+    from tests.test_merge_property import _by_bucket
+
+    rows = [("a", "v2", 7, "U", 10), ("b", None, None, "D", 11),
+            ("c", "v1", -3, "I", 12), ("c", "v1", -3, "I", 12),
+            ("d", "v9", 40, "I", 13)]
+    df = spark.createDataFrame(rows, "url string, val string, n long, op string, lsn long")
+    staged, merged = (mk(spark, str(tmp_path / p), bucket_count=8)
+                      for p in ("staged", "merged"))
+    for t in (staged, merged):
+        seed(spark, t)
+    staged.stage_merge(spark, df, batch_id=1)
+    r_staged = staged.publish_staged(1)
+    r_merged = merged.merge(spark, df, batch_id=1)
+    assert ({k: v for k, v in r_staged.as_dict().items() if k != "duration_ms"}
+            == {k: v for k, v in r_merged.as_dict().items() if k != "duration_ms"})
+
+    def record(t):
+        """(the staged flags of the audit row and summary, the rest)"""
+        m, audit = t.manifest(), t.audit_entries()
+        flags = (audit[-1].pop("staged", None), m["summary"].pop("staged", None))
+        return flags, (sorted(map(repr, t.read(spark).collect())), _by_bucket(t),
+                       sorted(map(repr, t.lineage_entries())), audit,
+                       m["schema"], m["lsn_high"], m["summary"])
+
+    (flags_s, got_s), (flags_m, got_m) = record(staged), record(merged)
+    assert flags_s == (True, True) and flags_m == (None, None)
+    assert got_s == got_m
+    assert "n" in staged.schema().fieldNames()

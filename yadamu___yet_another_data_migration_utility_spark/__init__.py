@@ -6,7 +6,8 @@ binlog/WAL-tail -> lake-upsert CDC pipeline over Common-Crawl-style web
 pages, per BASELINE.json#north_rule:
 
 - ordered change events (op in {I,U,D}, lsn, url, warc_ts, html, lang)
-- watermark + last-LSN-wins dedup (salted two-phase reduction for hot keys)
+- watermark + last-LSN-wins dedup (a map-side combined reduction, so hot
+  keys collapse before the shuffle)
 - idempotent, batch-id-fenced MERGE into a transactional bucketed lake
   table (``sources.laketable`` -- an Iceberg-shaped format implemented
   from scratch because the sandbox ships no Iceberg runtime jar; in

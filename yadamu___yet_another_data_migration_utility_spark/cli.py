@@ -302,7 +302,6 @@ def cmd_replay(args) -> int:
     q = start_replay(
         spark, table, args.log_path, args.checkpoint_dir,
         max_files_per_trigger=args.max_files_per_trigger,
-        salt_buckets=args.salt_buckets,
         max_errors=args.max_errors, on_error=args.on_error,
         compact_every=args.compact_every,
         on_metrics=metrics.append,
@@ -401,7 +400,6 @@ def cmd_replay_multi(args) -> int:
     q = start_replay_multi(
         spark, tables, args.log_path, args.checkpoint_dir,
         max_files_per_trigger=args.max_files_per_trigger,
-        salt_buckets=args.salt_buckets,
         max_errors=args.max_errors, on_error=args.on_error,
         on_metrics=on_metrics,
         source_format=source_format, decoder=decoder,
@@ -1378,7 +1376,6 @@ def build_parser() -> argparse.ArgumentParser:
     sp.add_argument("--buckets", type=int, default=32)
     sp.add_argument("--merge-mode", choices=["mor", "cow"], default="mor")
     sp.add_argument("--max-files-per-trigger", type=int, default=1)
-    sp.add_argument("--salt-buckets", type=int, default=0)
     sp.add_argument("--max-errors", type=int, default=None,
                     help="bad-row threshold; omit for the FLUSH behavior "
                          "(quarantine + continue, no limit)")
@@ -1431,7 +1428,6 @@ def build_parser() -> argparse.ArgumentParser:
     sp.add_argument("--buckets", type=int, default=32)
     sp.add_argument("--merge-mode", choices=["mor", "cow"], default="mor")
     sp.add_argument("--max-files-per-trigger", type=int, default=1)
-    sp.add_argument("--salt-buckets", type=int, default=0)
     sp.add_argument("--max-errors", type=int, default=None)
     sp.add_argument("--on-error", choices=["abort", "skip"], default="abort")
     common(sp)

@@ -12,7 +12,7 @@ Segments exercised (FIXTURES.md F2 table):
 - deletes incl. delete->reinsert: op derived from a hash of lsn --
   ~12% 'D', so most urls see I/U/D interleavings across lsns
 - hot keys: ``hot_fraction`` of events are remapped onto ``n_hot``
-  urls (skew for the salted reduction + AQE skew join)
+  urls (skew for the map-side combined reduction + AQE skew join)
 - exact duplicates: events with pmod(hash, dup_mod)==0 are re-emitted
   verbatim (at-least-once delivery)
 - late events: ~10% get warc_ts pushed ``late_by`` seconds into the

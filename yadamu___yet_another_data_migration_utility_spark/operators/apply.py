@@ -35,11 +35,10 @@ Stages:
      tags and fires the input Observation; stages 1-3 then run in Arrow
      and pandas on the driver (``extract_text_series``) and the table
      writes the per-bucket delta files with pyarrow;
-   - **Spark** (larger batches, copy-on-write, ``dedup="salted"``,
-     ``precheck_errors``, key or column types the in-process path
-     does not carry): TWO Spark jobs measured per commit -- the
-     broadcast winner build, then scan -> semi-join -> extract UDF ->
-     per-bucket delta write.
+   - **Spark** (larger batches, copy-on-write, key or column types
+     the in-process path does not carry): TWO Spark jobs measured per
+     commit -- the broadcast winner build, then scan -> semi-join ->
+     extract UDF -> per-bucket delta write.
 
 Exactly-once: the quarantine write is made idempotent by overwriting a
 per-batch partition directory; the merge (or skip) is fenced in the
@@ -162,8 +161,7 @@ def quarantine_split(df: DataFrame, op_col: str = "op", key="url",
     )
 
 
-def last_lsn_dedup(df: DataFrame, key="url", lsn_col: str = "lsn",
-                   salt_buckets: int = 0) -> DataFrame:
+def last_lsn_dedup(df: DataFrame, key="url", lsn_col: str = "lsn") -> DataFrame:
     """Last-writer-wins: keep the max-lsn event per key (``key`` is one
     column name or the composite key column list).
 
@@ -173,37 +171,22 @@ def last_lsn_dedup(df: DataFrame, key="url", lsn_col: str = "lsn",
     Skew note (measured, sandbox local[32], 100k-event batch):
     ``max_by`` has a *partial* aggregate, so every map task combines its
     hot-key rows to one row BEFORE the shuffle -- map-side combine is
-    the skew defense for algebraic aggregations, and an extra salt
-    phase only doubles the work. Because the payload struct (html
-    binary) is not fixed-width, Catalyst lowers max_by to
-    SortAggregate; the salted two-phase variant therefore sorts the
-    wide batch four times instead of two, measured 40.5s vs 1.6s per
-    100k-row batch. ``salt_buckets > 0`` keeps the two-phase path
-    available for operators WITHOUT partial aggregation (window-rank
-    style), which is where salting genuinely pays; the engine default
-    is 0.
+    the skew defense for algebraic aggregations, and a salt phase only
+    doubles the work. Because the payload struct (html binary) is not
+    fixed-width, Catalyst lowers max_by to SortAggregate, so a salted
+    two-phase variant sorts the wide batch four times instead of two:
+    measured 40.5s vs 1.6s per 100k-row batch.
     """
     ks = _keylist(key)
-    payload = [c for c in df.columns if c not in ks]
-    if salt_buckets > 0:
-        salt = F.pmod(F.xxhash64(F.col(lsn_col)), F.lit(salt_buckets))
-        partial = (
-            df.groupBy(*[F.col(k) for k in ks], salt.alias("_salt"))
-            .agg(F.max_by(F.struct(*payload), F.col(lsn_col)).alias("_w"))
-            .select(*ks, "_w.*")
-        )
-    else:
-        partial = df
     return (
-        partial.groupBy(*ks)
-        .agg(F.max_by(
-            F.struct(*[c for c in partial.columns if c not in ks]),
-            F.col(lsn_col)).alias("_w"))
+        df.groupBy(*ks)
+        .agg(F.max_by(F.struct(*[c for c in df.columns if c not in ks]),
+                      F.col(lsn_col)).alias("_w"))
         .select(*ks, "_w.*")
     )
 
 
-DEDUP_STRATEGIES = ("broadcast", "salted", "none")
+DEDUP_STRATEGIES = ("broadcast", "none")
 
 #: Largest merge-on-read batch, by the optimizer's size estimate of the
 #: input (file bytes for a parquet scan; an RDD's unknown size counts
@@ -223,8 +206,8 @@ def _plan_bytes(df: DataFrame) -> int:
 
 
 def _spark_reason(mf: dict[str, Any], batch_df: DataFrame, out_schema,
-                  dedup: str, precheck_errors: bool, op_col: str,
-                  lsn_col: str, info: dict[str, Any]) -> str | None:
+                  op_col: str, lsn_col: str,
+                  info: dict[str, Any]) -> str | None:
     """Why this batch must take the Spark path, or None when it commits
     in-process. ``out_schema`` is the schema of the rows handed to the
     merge (the batch's columns, plus ``text`` when extracting). The
@@ -234,10 +217,6 @@ def _spark_reason(mf: dict[str, Any], batch_df: DataFrame, out_schema,
 
     if mf.get("merge_mode", "cow") != "mor":
         return "cow"
-    if dedup == "salted":
-        return "salted"
-    if precheck_errors:
-        return "precheck"
     schema = T.StructType.fromJson(mf["schema"])
     if not all(_driver_hashable(schema[k].dataType) for k in _keylist(mf["key"])):
         return "key_type"
@@ -311,7 +290,7 @@ def _write_quarantine(table: LakeTable, tagged: DataFrame, batch_id: int) -> Non
         .withColumn("_batch_id", F.lit(batch_id))
         .withColumnRenamed("_reason", "reason")
         .write.mode("overwrite")
-        .parquet(qdir)
+        .parquet(table.fs.spark_path(qdir))
     )
 
 
@@ -322,12 +301,10 @@ def apply_batch(
     key: str | list[str] | None = None,
     op_col: str = "op",
     lsn_col: str = "lsn",
-    salt_buckets: int = 0,
     max_errors: int | None = None,
     on_error: str = "abort",
     run_extract: bool = True,
     dedup: str = "broadcast",
-    precheck_errors: bool = False,
     extra_audit: dict[str, Any] | None = None,
 ) -> BatchMetrics:
     """Apply one micro-batch of change events to ``table``. Pure:
@@ -339,14 +316,20 @@ def apply_batch(
     constraints and fires the input Observation, the split, dedup and
     extract run in Arrow and pandas on the driver, and the table writes
     the delta with pyarrow -- one Spark job per commit, plus the
-    quarantine write when bad rows exist. Copy-on-write tables,
-    ``dedup="salted"``, ``precheck_errors``, key types ``_bucket_id``
-    does not hash, types Arrow does not carry exactly, and larger
-    batches take the Spark path: the dedup's winner build and the
-    extract-and-write are two jobs. Both paths give the same table, the
-    same metrics and the same audit row; each call writes one ``apply``
-    record to the operation trace (operators/trace.py) naming the path,
-    the reason for the Spark path, and per-phase seconds.
+    quarantine write when bad rows exist. Copy-on-write tables, key
+    types ``_bucket_id`` does not hash, types Arrow does not carry
+    exactly, and larger batches take the Spark path: the dedup's winner
+    build and the extract-and-write are two jobs. Both paths give the
+    same table, the same metrics and the same audit row; each call
+    writes one ``apply`` record to the operation trace
+    (operators/trace.py) naming the path, the reason for the Spark
+    path, the dedup strategy it ran, and per-phase seconds.
+
+    Quarantined rows persist to the table's dead-letter directory
+    before the commit. A batch with more than ``max_errors`` of them
+    is rejected by the merge's pre-commit hook, after the delta write
+    and before the manifest commit: ``on_error="skip"`` fences it with
+    no data files, ``"abort"`` raises ``BatchAborted``.
 
     ``dedup`` picks the pre-write last-LSN reduction strategy. Under
     merge-on-read the reduction is an OPTIMIZATION, not a correctness
@@ -363,9 +346,6 @@ def apply_batch(
       distinct key to the driver -- a SERIAL cost that grows with batch
       key-cardinality, which caps scaling efficiency on near-unique
       batches.
-    - "salted": two-phase salted exact reduction (last_lsn_dedup) --
-      for skewed hot keys without partial aggregation support. Always
-      the Spark path.
     - "none": write every valid event as a delta row; resolution
       dedups at read/compact (exactly Flink's Iceberg upsert writer
       shape: appended upserts + equality deletes, no pre-reduce).
@@ -373,22 +353,23 @@ def apply_batch(
       touch distinct urls), where a reduction would pay a driver-side
       broadcast build + a second scan to drop only a few percent of
       rows. Fully parallel on the Spark path -- no shuffle, no
-      broadcast, no collect.
+      broadcast, no collect. Copy-on-write tables always reduce
+      ("broadcast"): they resolve against the table once per batch
+      assuming one winner per key.
     """
     from . import trace
 
     with trace.span("apply", table=table.root) as info:
         info["batch_id"] = batch_id
         metrics = _apply(table, batch_df, batch_id, key, op_col, lsn_col,
-                         salt_buckets, max_errors, on_error, run_extract,
-                         dedup, precheck_errors, extra_audit, info)
+                         max_errors, on_error, run_extract, dedup,
+                         extra_audit, info)
         info["rows"] = metrics.rows_in
     return metrics
 
 
-def _apply(table, batch_df, batch_id, key, op_col, lsn_col, salt_buckets,
-           max_errors, on_error, run_extract, dedup, precheck_errors,
-           extra_audit, info) -> BatchMetrics:
+def _apply(table, batch_df, batch_id, key, op_col, lsn_col, max_errors,
+           on_error, run_extract, dedup, extra_audit, info) -> BatchMetrics:
     """``apply_batch``'s body; ``info`` collects its trace record."""
     if on_error not in ON_ERROR_POLICIES:
         raise ValueError(f"on_error must be one of {ON_ERROR_POLICIES}")
@@ -404,13 +385,12 @@ def _apply(table, batch_df, batch_id, key, op_col, lsn_col, salt_buckets,
     # max_errors exactly like structural errors (append aborts instead
     # -- bulk loads have no per-row error funnel)
     constraints = mf.get("constraints", {})
-    if salt_buckets > 0:
-        dedup = "salted"
     if dedup == "none" and mf.get("merge_mode", "cow") != "mor":
         # cow resolves against the table ONCE per batch assuming one
         # winner per key; unreduced batches are only exact under mor
         # read-resolution
         dedup = "broadcast"
+    info["dedup"] = dedup
     spark = batch_df.sparkSession
 
     # fence first: a replayed batch must not even re-count
@@ -425,48 +405,8 @@ def _apply(table, batch_df, batch_id, key, op_col, lsn_col, salt_buckets,
         out_schema = T.StructType(
             [text if f.name == "text" else f for f in out_schema.fields]
             + ([] if "text" in out_schema.fieldNames() else [text]))
-    reason = _spark_reason(mf, batch_df, out_schema, dedup, precheck_errors,
-                           op_col, lsn_col, info)
+    reason = _spark_reason(mf, batch_df, out_schema, op_col, lsn_col, info)
     info["path"], info["reason"] = ("spark", reason) if reason else ("arrow", None)
-
-    if precheck_errors and max_errors is not None and on_error in ("abort", "skip"):
-        # Opt-in extra pass for pipelines EXPECTING poison: evaluate the
-        # max_errors policy on a cheap narrow count BEFORE the extract +
-        # delta write, so a mostly-bad batch is rejected without paying
-        # full-batch compute that the single-job fast path would only
-        # write and then discard. Clean pipelines keep the default
-        # (False): policy checked in the pre-commit hook off the same
-        # Observation.
-        tagged0 = _tag_quarantine(batch_df, op_col, key, lsn_col,
-                                  constraints=constraints)
-        pre = tagged0.agg(*_tag_counts()).collect()[0]
-        if pre["n_bad"] > max_errors:
-            counts0 = {"rows_batch_in": pre["n_in"],
-                       "rows_quarantined": pre["n_bad"],
-                       **(extra_audit or {})}
-            # quarantine rows persist BEFORE the policy decision lands,
-            # same ordering contract as the in-merge hook
-            _write_quarantine(table, tagged0, batch_id)
-            if on_error == "skip":
-                v = table.record_skip(batch_id, extra_audit=counts0)
-                metrics = BatchMetrics(
-                    batch_id=batch_id,
-                    rows_in=pre["n_in"],
-                    rows_quarantined=pre["n_bad"],
-                    rows_deduped=0,
-                    rows_merged_in=0,
-                    rows_deleted=0,
-                    fenced=False,
-                    version=v,
-                    duration_ms=0,
-                    rows_skipped=pre["n_in"] - pre["n_bad"],
-                )
-                metrics.check_invariant()
-                return metrics
-            raise BatchAborted(
-                f"batch {batch_id}: {pre['n_bad']} quarantined > "
-                f"max_errors={max_errors} (precheck)"
-            )
 
     # Input/quarantine counts ride on an Observation attached above the
     # validity filter ON THE PROBE SIDE ONLY (the winner subtree is a
@@ -492,7 +432,7 @@ def _apply(table, batch_df, batch_id, key, op_col, lsn_col, salt_buckets,
         info["dedup_extract_s"] = round(time.monotonic() - t, 4)
     else:
         reduced = _reduce_spark(batch_df, tagged, key, op_col, lsn_col, dedup,
-                                salt_buckets, run_extract)
+                                run_extract)
 
     # filled by the hook once the observation has fired; doubles as the
     # extra_audit dict (merge reads it at manifest-build time, after the
@@ -577,8 +517,7 @@ def _apply(table, batch_df, batch_id, key, op_col, lsn_col, salt_buckets,
 
 
 def _reduce_spark(batch_df: DataFrame, tagged: DataFrame, key, op_col: str,
-                  lsn_col: str, dedup: str, salt_buckets: int,
-                  run_extract: bool) -> DataFrame:
+                  lsn_col: str, dedup: str, run_extract: bool) -> DataFrame:
     """The Spark path's valid split, last-LSN reduction and extract, as
     a plan the merge's delta write runs."""
     valid = tagged.filter(F.col("_reason").isNull()).drop("_reason")
@@ -595,12 +534,9 @@ def _reduce_spark(batch_df: DataFrame, tagged: DataFrame, key, op_col: str,
     # redelivered duplicates (same key AND lsn -- by CDC contract
     # byte-identical events) survive this reduction; resolution
     # collapses them via a benign max_by tie. The strict
-    # one-row-per-key operator remains last_lsn_dedup (public catalog);
-    # passing salt_buckets > 0 selects it with two-phase salting.
+    # one-row-per-key operator remains last_lsn_dedup (public catalog).
     if dedup == "none":
         reduced = valid
-    elif dedup == "salted":
-        reduced = last_lsn_dedup(valid, key, lsn_col, salt_buckets or 16)
     else:
         # Winner selection is max-lsn over STRUCTURALLY-valid events
         # (key/lsn/op only): the winner subtree must stay narrow so
@@ -705,8 +641,9 @@ def apply_batch_multi(
 def quarantine_df(spark, table: LakeTable) -> DataFrame | None:
     """Read the quarantine side table (None if empty)."""
     qroot = os.path.join(table.root, QUARANTINE_DIR)
-    if not os.path.exists(qroot) or not os.listdir(qroot):
+    if not table.fs.isdir(qroot) or not table.fs.listdir(qroot):
         return None
+    qroot = table.fs.spark_path(qroot)
     return spark.read.option("basePath", qroot).parquet(qroot)
 
 
@@ -841,9 +778,11 @@ def requeue_quarantine(
             table, spark, batch_ids=leftover, repair=repair,
             requeue_id=rid2, **apply_kwargs)
 
-    paths = [os.path.join(qroot, f"batch_id={b}") for b in batch_ids]
+    paths = [table.fs.spark_path(os.path.join(qroot, f"batch_id={b}"))
+             for b in batch_ids]
     df = (
-        spark.read.option("basePath", qroot).parquet(*paths)
+        spark.read.option("basePath", table.fs.spark_path(qroot))
+        .parquet(*paths)
         # partition col (batch_id) + bookkeeping cols must not reach the
         # merge, or schema evolution would graft them onto the table
         .drop("batch_id", "_batch_id", "reason")

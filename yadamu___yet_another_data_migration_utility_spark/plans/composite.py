@@ -1,4 +1,4 @@
-"""Round-4 catalog entries: composite-key CDC replay + measured skew.
+"""Round-4 catalog entries: composite-key CDC replay.
 
 The reference replicates arbitrary relational tables whose primary
 keys are mostly composite (/root/reference/src/YADAMU/common/
@@ -171,75 +171,3 @@ def cdc_composite_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return table.read(spark, public=True).select(
         "site", "path", "event_type", "value")
-
-
-@_register(
-    "cdc_skew_salted_apply",
-    f"""
-    WITH chg0 AS ({_COMPOSITE_SQL_SRC}),
-    chg AS (
-      SELECT lsn, op,
-             CASE WHEN lsn % 2 = 0 THEN 'hot.example.com' ELSE site END AS site,
-             CASE WHEN lsn % 2 = 0 THEN concat('/hot/', CAST(lsn % 64 AS VARCHAR))
-                  ELSE path END AS path,
-             ts, value, event_type
-      FROM chg0
-    ),
-    last AS (
-      SELECT *, ROW_NUMBER() OVER (
-        PARTITION BY site, path ORDER BY lsn DESC) AS rn
-      FROM chg
-    )
-    SELECT site, COUNT(*) AS n_pages, MAX(lsn) AS max_lsn,
-           CAST(ROUND(SUM(CAST(value AS DECIMAL(15,2))), 4) AS DOUBLE)
-             AS sum_value
-    FROM last WHERE rn = 1 AND op <> 'D'
-    GROUP BY site
-    """,
-)
-def cdc_skew_salted_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HOT-DOMAIN skew under the salted apply path: half of every batch
-    hammers ONE domain's 64 pages (the hot-key shape the north rule
-    calls out), applied with ``dedup='salted'`` -- the two-phase salted
-    reduction plus the write path's key-derived salt split. The oracle
-    is the per-site rollup of the declarative final state: matching it
-    proves salting changes the SHAPE of the computation, never its
-    result. The measured throughput half of the skew story lives in
-    ``bench.py --replay --skew-hot`` (BASELINE.md)."""
-    from ..operators.apply import apply_batch
-    from ..session import scratch_dir
-    from ..sources.laketable import LakeTable
-
-    chg0 = composite_changelog(spark, sf_dir)
-    hot = F.col("lsn") % 2 == 0
-    chg = chg0.select(
-        "lsn", "op",
-        F.when(hot, F.lit("hot.example.com")).otherwise(F.col("site"))
-        .alias("site"),
-        F.when(hot, F.concat(F.lit("/hot/"),
-                             (F.col("lsn") % 64).cast("string")))
-        .otherwise(F.col("path")).alias("path"),
-        "ts", "value", "event_type",
-    ).persist()  # 3 batches x 2 subtrees + bounds
-    root = tempfile.mkdtemp(prefix="cdc_skew_", dir=scratch_dir())
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    table = LakeTable.create(root, _PAGE_SCHEMA, key=["site", "path"],
-                             bucket_count=16, overwrite=True)
-    bounds = chg.agg(F.min("lsn"), F.max("lsn")).collect()[0]
-    lo, hi = bounds[0], bounds[1]
-    per = max(1, (hi - lo + 1 + 2) // 3)  # ceil(span / 3)
-    for b in range(3):
-        batch = chg.filter(
-            (F.col("lsn") >= lo + b * per) & (F.col("lsn") < lo + (b + 1) * per)
-        )
-        apply_batch(table, batch, batch_id=b, run_extract=False,
-                    dedup="salted", salt_buckets=8)
-    chg.unpersist(blocking=False)
-    return (
-        table.read(spark)
-        .groupBy("site")
-        .agg(F.count(F.lit(1)).alias("n_pages"),
-             F.max("_lsn").alias("max_lsn"),
-             F.round(F.sum(F.col("value").cast("decimal(15,2)")), 4)
-             .cast("double").alias("sum_value"))
-    )

@@ -736,9 +736,7 @@ class MaintenanceMixin:
 
         Plus one advisory (never auto-applied): ``rebucket`` when the
         largest bucket holds more than ``skew_ratio`` x the median
-        bucket's bytes -- hash-bucket skew that compaction cannot fix;
-        at ingest time the salting path (operators.apply dedup=salted)
-        is the non-rewrite alternative."""
+        bucket's bytes -- hash-bucket skew that compaction cannot fix."""
         m = self.manifest()
         entries = self.file_entries()
         per: dict[int, dict[str, int]] = {}
@@ -836,7 +834,7 @@ class MaintenanceMixin:
                 "advisory": True,
                 "detail": (
                     f"largest bucket {sizes[-1]}B > {skew_ratio:g}x median "
-                    f"{sizes[len(sizes) // 2]}B; rebucket() or salted ingest"
+                    f"{sizes[len(sizes) // 2]}B; rebucket()"
                 ),
             })
 

@@ -30,6 +30,62 @@ from .lakebase import (
 )
 
 
+def _mor_merge_manifest(mp: dict[str, Any], batch_id: int, schema_json,
+                        delta: dict[str, Any], extra_audit: dict[str, Any] | None,
+                        staged: bool = False) -> dict[str, Any]:
+    """The manifest a merge-on-read merge commits on top of ``mp``: the
+    delta files of ``delta`` (a ``_delta_record``, or a staged fragment,
+    which carries the same fields) appended to the bucket delta lists,
+    the batch's fence, audit row, lineage, zone maps, file row counts,
+    summary and ``lsn_high``. ``staged`` marks a WAP publish in the
+    audit row and summary."""
+    v = mp["version"] + 1
+    n_in, dels = delta["rows_in"], delta["rows_deleted"]
+    deltas = {k: list(fl) for k, fl in mp.get("deltas", {}).items()}
+    for b, files in delta["files"].items():
+        deltas[b] = deltas.get(b, []) + files
+    applied = dict(mp["applied_batches"])
+    applied[str(batch_id)] = {"version": v, "op": "merge"}
+    flag = {"staged": True} if staged else {}
+    return {
+        **mp,
+        "version": v,
+        "parent": mp["version"],
+        "schema": schema_json,
+        "deltas": deltas,
+        "applied_batches": _cap(applied),
+        "lsn_high": max(mp.get("lsn_high") or 0, delta["max_lsn"] or 0),
+        "audit": {
+            "batch_id": batch_id,
+            "operation": "merge",
+            "mode": "mor",
+            **flag,
+            "rows_in": n_in,
+            "rows_applied": n_in - dels,
+            "rows_deleted": dels,
+            "min_lsn": delta["min_lsn"],
+            "max_lsn": delta["max_lsn"],
+            "touched_buckets": len(delta["files"]),
+            "version": v,
+            **(extra_audit or {}),
+        },
+        "lineage": delta["lineage"],
+        "stats": {**_inherit_stats(mp), **delta["stats"]},
+        "file_rows": {**mp.get("file_rows", {}), **delta.get("file_rows", {})},
+        "summary": {"operation": "merge", "mode": "mor", "rows_written": n_in,
+                    **flag},
+        "committed_at": _utc_now_iso(),
+    }
+
+
+def _mor_result(batch_id: int, version: int, fenced: bool,
+                delta: dict[str, Any], dt: int) -> MergeResult:
+    """The ``MergeResult`` of a merge-on-read commit of ``delta``."""
+    n_in, dels = delta["rows_in"], delta["rows_deleted"]
+    return MergeResult(batch_id, version, fenced, n_in, n_in - dels, dels,
+                       delta["min_lsn"], delta["max_lsn"], len(delta["files"]), dt)
+
+
 class MergeMixin:
     """Append / CDC merge / WAP / bucketed writer (mixed into LakeTable)."""
 
@@ -201,8 +257,9 @@ class MergeMixin:
         self, spark, m, batch_df, batch_id, op_col, lsn_col,
         collect_lineage, extra_audit, pre_commit_hook,
     ) -> MergeResult:
-        """Merge-on-read: ONE Spark job writes the batch as per-bucket
-        delta files (upsert rows + ``_deleted`` tombstones); readers /
+        """Merge-on-read: ONE Spark job (``_write_mor_delta``) writes the
+        batch as per-bucket delta files (upsert rows + ``_deleted``
+        tombstones); readers /
         ``compact()`` resolve. Cost is O(batch) regardless of table
         size -- no target read, no bucket rewrite; the only shuffle is
         the O(batch) hash write-distribution (``_distribute_delta``),
@@ -213,37 +270,50 @@ class MergeMixin:
 
         The whole merge runs under ``_aqe_off``: its plan is decided
         statically, so AQE would add only materialization barriers."""
-        from pyspark.sql import Observation
-
         with _aqe_off(spark):
             t0 = time.monotonic()
-            table_schema = _evolved_schema(m, batch_df.schema, op_col, lsn_col)
-            src = batch_df.withColumnRenamed(lsn_col, LSN_COL)
-            src = _align(src, table_schema, keep=[op_col])
-            delta = src.withColumn(DELETED_COL, F.col(op_col) == "D").drop(op_col)
-
-            key, nb = m["key"], m["bucket_count"]
-            obs = Observation(f"merge_mor_{batch_id}")
             out_dir, rel_dir = self._new_commit_dir(m["version"] + 1)
-            with _ts_micros(spark):
-                (
-                    _distribute_delta(
-                        delta.withColumn("_b", _bucket_expr(key, nb)),
-                        key, nb, spark,
-                    )
-                    .observe(
-                        obs,
-                        F.count(F.lit(1)).alias("n"),
-                        F.sum(F.col(DELETED_COL).cast("long")).alias("dels"),
-                        F.min(LSN_COL).alias("mn"),
-                        F.max(LSN_COL).alias("mx"),
-                    )
-                    .write.partitionBy("_b")
-                    .parquet(self.fs.spark_path(out_dir))
-                )
+            table_schema, got = self._write_mor_delta(
+                spark, m, batch_df, op_col, lsn_col, out_dir,
+                f"merge_mor_{batch_id}")
             return self._commit_mor_delta(
-                m, batch_id, out_dir, rel_dir, table_schema, obs.get,
+                m, batch_id, out_dir, rel_dir, table_schema, got,
                 collect_lineage, extra_audit, pre_commit_hook, t0)
+
+    def _write_mor_delta(
+        self, spark, m, batch_df: DataFrame, op_col, lsn_col, out_dir, name,
+    ) -> tuple[T.StructType, dict[str, Any]]:
+        """ONE Spark job writes ``batch_df`` as per-bucket delta files
+        (upsert rows + ``_deleted`` tombstones) under ``out_dir``: the
+        table schema evolved by the batch, rows aligned to it, the hash
+        write-distribution (``_distribute_delta``), which bounds the
+        file count at O(buckets). Returns the evolved schema and the
+        delta's row count ``n``, tombstone count ``dels`` and ``_lsn``
+        range ``mn``/``mx``, observed on the write itself (no second
+        job). ``name`` names the Observation."""
+        from pyspark.sql import Observation
+
+        table_schema = _evolved_schema(m, batch_df.schema, op_col, lsn_col)
+        src = batch_df.withColumnRenamed(lsn_col, LSN_COL)
+        src = _align(src, table_schema, keep=[op_col])
+        delta = src.withColumn(DELETED_COL, F.col(op_col) == "D").drop(op_col)
+        key, nb = m["key"], m["bucket_count"]
+        obs = Observation(name)
+        with _ts_micros(spark):
+            (
+                _distribute_delta(
+                    delta.withColumn("_b", _bucket_expr(key, nb)), key, nb, spark)
+                .observe(
+                    obs,
+                    F.count(F.lit(1)).alias("n"),
+                    F.sum(F.col(DELETED_COL).cast("long")).alias("dels"),
+                    F.min(LSN_COL).alias("mn"),
+                    F.max(LSN_COL).alias("mx"),
+                )
+                .write.partitionBy("_b")
+                .parquet(self.fs.spark_path(out_dir))
+            )
+        return table_schema, obs.get
 
     def _merge_mor_arrow(
         self, spark, m, batch: pa.Table, batch_id, op_col, lsn_col,
@@ -319,33 +389,20 @@ class MergeMixin:
         collect_lineage, extra_audit, pre_commit_hook, t0,
     ) -> MergeResult:
         """The merge-on-read commit tail both delta writers share: run
-        the pre-commit hook, harvest footers (lineage, zone maps, file
-        row counts) of the files under ``out_dir``, then publish the
-        manifest with the batch's fence. ``got`` holds the delta's row
-        count ``n``, tombstone count ``dels`` and ``_lsn`` range
-        ``mn``/``mx``. Any failure before the publish removes
-        ``out_dir``: nothing references it yet."""
+        the pre-commit hook, record the files under ``out_dir``
+        (``_delta_record``), then publish the manifest with the batch's
+        fence. ``got`` holds the delta's row count ``n``, tombstone
+        count ``dels`` and ``_lsn`` range ``mn``/``mx``. Any failure
+        before the publish removes ``out_dir``: nothing references it
+        yet."""
         try:
             if pre_commit_hook is not None:
                 pre_commit_hook()  # may raise -> clean abort below
         except Exception:
             self.fs.rmtree(out_dir)  # nothing referenced it yet
             raise
-
-        new_files = _list_bucket_files(self.fs, out_dir, rel_dir)
-        lineage: list[dict[str, Any]] = []
-        # zone maps are collected UNCONDITIONALLY (the footers are open
-        # anyway); collect_lineage gates only the lineage rows -- the
-        # two features are independent
-        per_bucket, zone, frows = _footer_stats(
-            self.fs, self.root, new_files, schema=table_schema,
-        )
-        if collect_lineage:
-            for b, fstats in per_bucket.items():
-                lineage.append({"batch_id": batch_id, "bucket": int(b), **fstats})
-
-        n_in = got["n"] or 0
-        dels = got["dels"] or 0
+        delta = self._delta_record(out_dir, rel_dir, table_schema, got,
+                                   batch_id, collect_lineage)
 
         def build(mp: dict[str, Any]) -> dict[str, Any]:
             # rebase: a mor merge only APPENDS delta files + its fence
@@ -356,41 +413,8 @@ class MergeMixin:
                 raise RebaseError(
                     "concurrent schema change during merge; retry the batch"
                 )
-            v = mp["version"] + 1
-            deltas = {k: list(fl) for k, fl in mp.get("deltas", {}).items()}
-            for b, files in new_files.items():
-                deltas[b] = deltas.get(b, []) + files
-            applied = dict(mp["applied_batches"])
-            applied[str(batch_id)] = {"version": v, "op": "merge"}
-            audit = {
-                "batch_id": batch_id,
-                "operation": "merge",
-                "mode": "mor",
-                "rows_in": n_in,
-                "rows_applied": n_in - dels,
-                "rows_deleted": dels,
-                "min_lsn": got["mn"],
-                "max_lsn": got["mx"],
-                "touched_buckets": len(new_files),
-                "version": v,
-                **(extra_audit or {}),
-            }
-            return {
-                **mp,
-                "version": v,
-                "parent": mp["version"],
-                "schema": table_schema.jsonValue(),
-                "deltas": deltas,
-                "applied_batches": _cap(applied),
-                "lsn_high": max(mp.get("lsn_high") or 0, got["mx"] or 0),
-                "audit": audit,
-                "lineage": lineage,
-                "stats": {**_inherit_stats(mp), **zone},
-                "file_rows": {**mp.get("file_rows", {}), **frows},
-                "summary": {"operation": "merge", "mode": "mor",
-                            "rows_written": n_in},
-                "committed_at": _utc_now_iso(),
-            }
+            return _mor_merge_manifest(mp, batch_id, table_schema.jsonValue(),
+                                       delta, extra_audit)
 
         try:
             committed = self._commit_with_rebase(m, build, batch_id=batch_id)
@@ -401,10 +425,33 @@ class MergeMixin:
         if committed is None:  # a concurrent writer fenced this batch first
             self.fs.rmtree(out_dir)
             return MergeResult(batch_id, None, True, 0, 0, 0, None, None, 0, dt)
-        return MergeResult(
-            batch_id, committed["version"], False, n_in, n_in - dels, dels,
-            got["mn"], got["mx"], len(new_files), dt,
-        )
+        return _mor_result(batch_id, committed["version"], False, delta, dt)
+
+    def _delta_record(self, out_dir, rel_dir, table_schema, got, batch_id,
+                      collect_lineage) -> dict[str, Any]:
+        """What a merge-on-read commit records of the delta files under
+        ``out_dir``: the per-bucket file lists, the counts and ``_lsn``
+        range of ``got`` (see ``_commit_mor_delta``), and from the
+        parquet footers the per-bucket lineage, per-file zone maps and
+        per-file row counts. Zone maps are collected UNCONDITIONALLY
+        (the footers are open anyway); ``collect_lineage`` gates only
+        the lineage rows -- the two features are independent."""
+        files = _list_bucket_files(self.fs, out_dir, rel_dir)
+        per_bucket, zone, frows = _footer_stats(
+            self.fs, self.root, files, schema=table_schema)
+        return {
+            "files": files,
+            "rows_in": got["n"] or 0,
+            "rows_deleted": got["dels"] or 0,
+            "min_lsn": got["mn"],
+            "max_lsn": got["mx"],
+            "lineage": [
+                {"batch_id": batch_id, "bucket": int(b), **fstats}
+                for b, fstats in per_bucket.items()
+            ] if collect_lineage else [],
+            "stats": zone,
+            "file_rows": frows,
+        }
 
     # ------------------------------------------------------------------
     def _merge_cow(
@@ -633,8 +680,8 @@ class MergeMixin:
            is a clean conflict, and retention can never race the data
            write because the fragment exists before any file does;
         2. ONE Spark job writes the delta files under
-           ``data/staged-{batch}-{uuid}`` (hash write-distribution,
-           same shape as merge);
+           ``data/staged-{batch}-{uuid}`` (``_write_mor_delta``, the
+           same writer and plan as ``merge``);
         3. the fragment is finalized (status="staged") with the file
            list, audit numbers, lineage and zone stats.
 
@@ -643,8 +690,6 @@ class MergeMixin:
         not be rebased past intervening commits -- the same reason
         Iceberg's WAP cherry-pick only fast-forwards append/delta
         snapshots. Returns the fragment dict."""
-        from pyspark.sql import Observation
-
         # staging fragments and their shielded data dirs are keyed by
         # batch_id in MAIN's namespace; on a branch, just merge -- the
         # branch IS the staging area (audit with read, publish with
@@ -668,37 +713,12 @@ class MergeMixin:
             "staged_at": _utc_now_iso(),
         }))
         try:
-            table_schema = _evolved_schema(m, batch_df.schema, op_col, lsn_col)
-            src = batch_df.withColumnRenamed(lsn_col, LSN_COL)
-            src = _align(src, table_schema, keep=[op_col])
-            delta = src.withColumn(
-                DELETED_COL, F.col(op_col) == "D").drop(op_col)
-            key, nb = m["key"], m["bucket_count"]
-            obs = Observation(f"stage_{batch_id}")
-            with _ts_micros(spark):
-                (
-                    _distribute_delta(
-                        delta.withColumn("_b", _bucket_expr(key, nb)),
-                        key, nb, spark,
-                    )
-                    .observe(
-                        obs,
-                        F.count(F.lit(1)).alias("n"),
-                        F.sum(F.col(DELETED_COL).cast("long")).alias("dels"),
-                        F.min(LSN_COL).alias("mn"),
-                        F.max(LSN_COL).alias("mx"),
-                    )
-                    .write.partitionBy("_b")
-                    .parquet(self.fs.spark_path(out_dir))
-                )
-            got = obs.get
-            new_files = _list_bucket_files(self.fs, out_dir, rel_dir)
-            per_bucket, zone, frows = _footer_stats(
-                self.fs, self.root, new_files, schema=table_schema)
-            lineage = [
-                {"batch_id": batch_id, "bucket": int(b), **fstats}
-                for b, fstats in per_bucket.items()
-            ] if collect_lineage else []
+            with _aqe_off(spark):
+                table_schema, got = self._write_mor_delta(
+                    spark, m, batch_df, op_col, lsn_col, out_dir,
+                    f"stage_{batch_id}")
+            delta = self._delta_record(out_dir, rel_dir, table_schema, got,
+                                       batch_id, collect_lineage)
         except Exception:
             if self.fs.exists(out_dir):
                 self.fs.rmtree(out_dir)
@@ -711,14 +731,7 @@ class MergeMixin:
             "base_version": m["version"],
             "base_schema": m["schema"],
             "schema": table_schema.jsonValue(),
-            "files": new_files,
-            "rows_in": got["n"] or 0,
-            "rows_deleted": got["dels"] or 0,
-            "min_lsn": got["mn"],
-            "max_lsn": got["mx"],
-            "lineage": lineage,
-            "stats": zone,
-            "file_rows": frows,
+            **delta,
             "staged_at": _utc_now_iso(),
         }
         self.fs.put_atomic(frag_path, json.dumps(frag))
@@ -799,56 +812,18 @@ class MergeMixin:
         t0 = time.monotonic()
         frag = self._staged_fragment(batch_id)
         new_files: dict[str, list[str]] = frag["files"]
-        n_in, dels = frag["rows_in"], frag["rows_deleted"]
         m = self.manifest()
         already = str(batch_id) in m["applied_batches"]
 
         def build(mp: dict[str, Any]) -> dict[str, Any]:
-            if mp["schema"] == frag["schema"]:
-                schema_json = frag["schema"]
-            elif mp["schema"] == frag["base_schema"]:
-                schema_json = frag["schema"]  # additive evolution applies
-            else:
+            # the staged schema applies on top of the schema it was
+            # staged against (additive evolution) or of itself
+            if mp["schema"] not in (frag["schema"], frag["base_schema"]):
                 raise RebaseError(
                     "schema changed since the batch was staged; abort "
                     "and re-stage")
-            v = mp["version"] + 1
-            deltas = {k: list(fl) for k, fl in mp.get("deltas", {}).items()}
-            for b, files in new_files.items():
-                deltas[b] = deltas.get(b, []) + files
-            applied = dict(mp["applied_batches"])
-            applied[str(batch_id)] = {"version": v, "op": "merge"}
-            audit = {
-                "batch_id": batch_id,
-                "operation": "merge",
-                "mode": "mor",
-                "staged": True,
-                "rows_in": n_in,
-                "rows_applied": n_in - dels,
-                "rows_deleted": dels,
-                "min_lsn": frag["min_lsn"],
-                "max_lsn": frag["max_lsn"],
-                "touched_buckets": len(new_files),
-                "version": v,
-                **(extra_audit or {}),
-            }
-            return {
-                **mp,
-                "version": v,
-                "parent": mp["version"],
-                "schema": schema_json,
-                "deltas": deltas,
-                "applied_batches": _cap(applied),
-                "lsn_high": max(mp.get("lsn_high") or 0,
-                                frag["max_lsn"] or 0),
-                "audit": audit,
-                "lineage": frag["lineage"],
-                "stats": {**_inherit_stats(mp), **frag["stats"]},
-                "file_rows": {**mp.get("file_rows", {}), **frag.get("file_rows", {})},
-                "summary": {"operation": "merge", "mode": "mor",
-                            "rows_written": n_in, "staged": True},
-                "committed_at": _utc_now_iso(),
-            }
+            return _mor_merge_manifest(mp, batch_id, frag["schema"], frag,
+                                       extra_audit, staged=True)
 
         committed = None if already else self._commit_with_rebase(
             m, build, batch_id=batch_id)
@@ -867,14 +842,11 @@ class MergeMixin:
                 if self.fs.exists(d):
                     self.fs.rmtree(d)
             self.fs.remove(self._staged_fragment_path(batch_id))
-            return None if not referenced else MergeResult(
+            return None if not referenced else _mor_result(
                 batch_id, head["applied_batches"][str(batch_id)]["version"],
-                True, n_in, n_in - dels, dels, frag["min_lsn"],
-                frag["max_lsn"], len(new_files), dt)
+                True, frag, dt)
         self.fs.remove(self._staged_fragment_path(batch_id))
-        return MergeResult(
-            batch_id, committed["version"], False, n_in, n_in - dels,
-            dels, frag["min_lsn"], frag["max_lsn"], len(new_files), dt)
+        return _mor_result(batch_id, committed["version"], False, frag, dt)
 
     def record_skip(
         self, batch_id: int, extra_audit: dict[str, Any] | None = None

@@ -64,7 +64,6 @@ def start_replay(
     schema: T.StructType = CHANGELOG_SCHEMA,
     max_files_per_trigger: int = 1,
     watermark: str = "1 hour",
-    salt_buckets: int = 0,
     available_now: bool = True,
     on_metrics: Callable[[BatchMetrics], None] | None = None,
     compact_every: int | None = None,
@@ -131,7 +130,7 @@ def start_replay(
         stream = stream.withWatermark("warc_ts", watermark)
 
     def _sink(batch_df, batch_id: int) -> None:
-        m = apply_batch(table, batch_df, batch_id, salt_buckets=salt_buckets,
+        m = apply_batch(table, batch_df, batch_id,
                         max_errors=max_errors, on_error=on_error)
         if compact_every and not m.fenced and (batch_id + 1) % compact_every == 0:
             table.compact(batch_df.sparkSession, max_files_per_bucket=compact_max_files)
@@ -180,7 +179,7 @@ def start_replay_multi(
     and must emit ``table_col`` (``decode_debezium(...,
     table_col=...)`` surfaces ``source.table`` for exactly this).
     ``apply_kwargs`` pass through to ``apply_batch``
-    (salt_buckets, dedup, max_errors, ...)."""
+    (dedup, max_errors, on_error, ...)."""
     from ..operators.apply import apply_batch_multi
 
     if source_format == "parquet":
