@@ -921,6 +921,34 @@ def test_lsn_tie_resolves_identically_on_source_and_replica(spark, tmp_path):
         assert again == src
 
 
+def test_lsn_tie_converges_across_read_changes_and_cow(spark, tmp_path):
+    """The same colliding-_lsn batches fed to a merge-on-read and a
+    copy-on-write table: the snapshot read, the change stream's fast
+    path and the copy-on-write merge share one LWW rule, so every tied
+    key picks the same winner in all three, and a live row beats a
+    tombstone at the same _lsn in all three."""
+    keys = [f"k{i}" for i in range(8)]
+    b0 = [(k, f"{k}-a", "I", 5) for k in keys] + [("d", "live", "I", 7),
+                                                  ("z", "v", "I", 8)]
+    b1 = [(k, f"{k}-b", "U", 5) for k in keys] + [("d", None, "D", 7),
+                                                  ("z", None, "D", 9)]
+    mor = mk(spark, str(tmp_path / "mor"))
+    cow = mk(spark, str(tmp_path / "cow"), merge_mode="cow")
+    v0 = mor.current_version()
+    for bid, rows in enumerate((b0, b1)):
+        for t in (mor, cow):
+            t.merge(spark, batch(spark, rows), batch_id=bid)
+    snap = {r["url"]: r["val"] for r in mor.read(spark).collect()}
+    assert snap == {r["url"]: r["val"] for r in cow.read(spark).collect()}
+    # a delete row carrying its _lsn marks the fast path
+    assert _changes(spark, mor, v0) == {
+        *((k, v, 7 if k == "d" else 5, "upsert") for k, v in snap.items()),
+        ("z", None, 9, "delete")}
+    assert snap["d"] == "live"
+    # the content rank, not arrival order, breaks the ties: both win
+    assert {snap[k][-1] for k in keys} == {"a", "b"}
+
+
 def test_metadata_tables_snapshots_and_files(spark, tmp_path):
     """Iceberg-style snapshots/files metadata tables: the snapshot walk
     mirrors the audit chain and the file inventory matches the manifest

@@ -99,3 +99,61 @@ def test_local_fs_call_detection():
     assert any(c.startswith("os.makedirs:")
                for c in _local_fs_calls(PKG / "operators" / "trace.py"))
     assert _local_fs_calls(PKG / "operators" / "compare.py") == []
+
+
+#: deliberate unused imports: each package ``__init__`` re-exports its
+#: public names, and laketable.py re-exports the names the pre-split
+#: module defined in one documented ``from .lakebase import`` block
+REEXPORT_BLOCKS = {"sources/laketable.py": "lakebase"}
+
+
+def _unused_imports(path: pathlib.Path, exempt_module: str | None = None
+                    ) -> list[str]:
+    """Every name an import statement in ``path`` binds that the module
+    never reads, as ``name:line``. A name read only inside a string
+    annotation counts as read. Names imported ``from .<exempt_module>``
+    are skipped."""
+    tree = ast.parse(path.read_text(), str(path))
+    used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    for node in ast.walk(tree):
+        notes = ([node.returns] if isinstance(node, ast.FunctionDef) else
+                 [node.annotation] if isinstance(node, (ast.arg, ast.AnnAssign))
+                 else [])
+        for s in (c for a in notes if a is not None for c in ast.walk(a)
+                  if isinstance(c, ast.Constant) and isinstance(c.value, str)):
+            used |= {n.id for n in ast.walk(ast.parse(s.value, mode="eval"))
+                     if isinstance(n, ast.Name)}
+    out = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and (
+                node.module == "__future__"
+                or (node.level and node.module == exempt_module)):
+            continue
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            out += [f"{name}:{node.lineno}" for a in node.names
+                    if (name := a.asname or a.name.split(".")[0]) not in used]
+    return out
+
+
+@pytest.mark.parametrize("layer", ENGINE)
+def test_engine_modules_import_no_unused_names(layer):
+    files = sorted((PKG / layer).rglob("*.py"))
+    assert files
+    bad = {rel: names for f in files
+           if f.name != "__init__.py"
+           and (names := _unused_imports(
+               f, REEXPORT_BLOCKS.get(rel := str(f.relative_to(PKG)))))}
+    assert not bad, f"imported names never used: {bad}"
+
+
+def test_unused_import_detection(tmp_path):
+    """The checker itself: an unused import is caught, a name read in
+    code or only in a string annotation is not, and laketable's
+    re-export block is exempt only when named."""
+    mod = tmp_path / "m.py"
+    mod.write_text("import os\nimport json\nfrom x import (a, b)\n"
+                   "def f(t: 'b.T') -> None:\n    return json.dumps(a)\n")
+    assert _unused_imports(mod) == ["os:1"]
+    laketable = PKG / "sources" / "laketable.py"
+    assert any(n.startswith("_resolve:") for n in _unused_imports(laketable))
+    assert _unused_imports(laketable, "lakebase") == []

@@ -20,9 +20,12 @@ Stages:
    "skip" fences the batch WITHOUT applying it and continues
    (ON_ERROR=SKIP, same reference lines). In both policies the
    quarantine rows are persisted FIRST, so diagnosis data is never lost.
-2. **last-LSN-wins dedup** -- a NARROW argmax (key+lsn only) finds each
-   key's winning lsn; an explicitly-broadcast semi-join fetches the
-   winner payloads. The wide html payload is never shuffled.
+2. **last-LSN-wins dedup** -- per key, the valid events at the max lsn
+   among structurally valid ones. On the Spark path a NARROW argmax
+   (key+lsn only) finds each key's winning lsn and an explicitly
+   broadcast semi-join fetches the winner payloads, so the wide html
+   payload is never shuffled; in-process, one Arrow sort finds them
+   (``_top_rank``, the LWW pass point lookups share).
 3. **extract** -- html -> text via the Arrow-vectorized pandas UDF
    (functions.extract), only for winner I/U rows.
 4. **MERGE** into the LakeTable (LSN-monotonic, batch-id fenced).
@@ -66,7 +69,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.extract import extract_text, extract_text_series
-from ..sources.lakebase import _driver_hashable, _same_cast
+from ..sources.lakebase import _driver_hashable, _same_cast, _top_rank
 from ..sources.laketable import (
     LSN_COL, LakeTable, MergeResult, _evolved_schema, _keylist,
 )
@@ -241,26 +244,27 @@ def _spark_reason(mf: dict[str, Any], batch_df: DataFrame, out_schema,
 def _reduce_arrow(rows: pa.Table, key, op_col: str, lsn_col: str,
                   dedup: str, run_extract: bool) -> pa.Table:
     """The Spark path's valid split, last-LSN reduction and extract,
-    over a batch collected with its ``_reason`` tags. Same winner rule:
-    per key the max ``lsn`` among structurally valid rows (key, lsn
-    and op all usable), then the valid rows carrying that (key, lsn) --
-    exact redeliveries included. ``dedup="none"`` keeps every valid
-    row. ``text`` comes from ``extract_text_series`` over the live
-    (non-delete) rows only."""
+    over a batch collected with its ``_reason`` tags. Same winner rule,
+    through ``_top_rank``: per key the max ``lsn`` among structurally
+    valid rows (key, lsn and op all usable), then every valid row
+    carrying that (key, lsn) -- exact redeliveries included, and none
+    when that top event is payload-poisoned. ``dedup="none"`` keeps
+    every valid row. ``text`` comes from ``extract_text_series`` over
+    the live (non-delete) rows only."""
     import pyarrow.compute as pc
 
     ks = _keylist(key)
-    valid = rows.filter(pc.is_null(rows.column("_reason"))).drop_columns(["_reason"])
+    keep = pc.is_null(rows.column("_reason")).to_numpy(zero_copy_only=False)
     if dedup != "none":
         ok = pc.is_in(rows.column(op_col), pa.array(["I", "U", "D"]))
         for c in ks + [lsn_col]:
             ok = pc.and_(ok, pc.is_valid(rows.column(c)))
-        winners = rows.filter(ok).group_by(ks).aggregate([(lsn_col, "max")])
-        winners = winners.select(ks + [f"{lsn_col}_max"]).rename_columns(ks + [lsn_col])
-        probe = valid.select(ks + [lsn_col]).append_column(
-            "_i", pa.array(np.arange(valid.num_rows)))
-        hit = probe.join(winners, keys=ks + [lsn_col], join_type="left semi")
-        valid = valid.take(np.sort(hit.column("_i").to_numpy()))
+        cand = np.flatnonzero(ok.to_numpy(zero_copy_only=False))
+        top = np.zeros(rows.num_rows, bool)
+        top[cand[_top_rank(rows.select(ks + [lsn_col]).take(cand), ks,
+                           [lsn_col])[0]]] = True
+        keep &= top
+    valid = rows.filter(keep).drop_columns(["_reason"])
     if run_extract and "html" in valid.column_names:
         live = pc.fill_null(pc.not_equal(valid.column(op_col), "D"), False)
         live = live.combine_chunks() if isinstance(live, pa.ChunkedArray) else live
@@ -338,8 +342,8 @@ def apply_batch(
     intra-key duplication:
 
     - "broadcast" (default): narrow argmax + broadcast semi-join (on
-      the in-process path, the same rule as an Arrow group-by and
-      semi-join). Right for update-heavy streams (few keys, many events
+      the in-process path, the same rule as one Arrow sort,
+      ``_top_rank``). Right for update-heavy streams (few keys, many events
       each): the winner set is small, and skipping extract/write for
       superseded events pays for the broadcast. Cost on the Spark path:
       the broadcast build is its own job and collects one row per

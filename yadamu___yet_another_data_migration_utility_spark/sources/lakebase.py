@@ -8,22 +8,20 @@ the import surface is unchanged."""
 from __future__ import annotations
 
 import contextlib
-import gzip  # noqa: F401
-import json
 import os
 import struct
 import time
-import uuid  # noqa: F401
 from dataclasses import dataclass
 from typing import Any
 
+import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import bloomindex as _bloom  # noqa: F401
-from .fsio import CommitConflict, LocalFS  # noqa: F401
+from . import bloomindex as _bloom
+from .fsio import LocalFS
 
 
 class RebaseError(RuntimeError):
@@ -445,32 +443,68 @@ def _lsn_rank(content_cols: list[str], is_del) -> "F.Column":
     )
 
 
-def _resolve(df: DataFrame, key, schema: T.StructType) -> DataFrame:
-    """Last-writer-wins resolution over (base ∪ delta) rows: keep the
-    max-``_lsn`` row per key (seed rows with NULL ``_lsn`` rank lowest,
-    ties broken by ``_lsn_rank``'s deterministic content rank), drop
-    keys whose winner is a tombstone. One hash-aggregate shuffle on
-    the key (the full column tuple for composite keys) -- max_by has a
-    partial aggregate, so hot keys map-side combine (the skew defense
-    for this reduction)."""
-    ks = _keylist(key)
-    payload = [c for c in df.columns if c not in ks]
-    types = {f.name: f.dataType for f in schema.fields}
+def _lww(df: DataFrame, ks: list[str], payload: list[str],
+         types: dict[str, T.DataType], is_del: "F.Column") -> DataFrame:
+    """The Spark engine's last-writer-wins rule: per key, the
+    ``payload`` columns of the row with the highest ``_lsn_rank``,
+    tombstones included (``is_del`` marks them). The content hash
+    covers the payload columns ``types`` names, other than ``_lsn``,
+    that ``_hashable`` accepts. One hash-aggregate shuffle on the key
+    (the full column tuple for composite keys) -- max_by has a partial
+    aggregate, so hot keys map-side combine (the skew defense for this
+    reduction)."""
     content = [c for c in payload
-               if c not in (LSN_COL, DELETED_COL)
-               and _hashable(types.get(c, T.StringType()))]
-    winner = F.max_by(
-        F.struct(*payload),
-        _lsn_rank(content, F.coalesce(F.col(DELETED_COL), F.lit(False))),
-    )
-    out = df.groupBy(*ks).agg(winner.alias("_w")).select(*ks, "_w.*")
-    return out.filter(
-        ~F.coalesce(F.col(DELETED_COL), F.lit(False))
-    ).select(*[f.name for f in schema.fields])
+               if c in types and c != LSN_COL and _hashable(types[c])]
+    winner = F.max_by(F.struct(*payload), _lsn_rank(content, is_del))
+    return df.groupBy(*ks).agg(winner.alias("_w")).select(*ks, "_w.*")
+
+
+def _resolve(df: DataFrame, key, schema: T.StructType) -> DataFrame:
+    """Last-writer-wins resolution over (base ∪ delta) rows: ``_lww``
+    (seed rows with NULL ``_lsn`` rank lowest), then keys whose winner
+    is a tombstone are dropped."""
+    ks = _keylist(key)
+    is_del = F.coalesce(F.col(DELETED_COL), F.lit(False))
+    out = _lww(df, ks, [c for c in df.columns if c not in ks],
+               {f.name: f.dataType for f in schema.fields}, is_del)
+    return out.filter(~is_del).select(*[f.name for f in schema.fields])
+
+
+def _top_rank(tbl: pa.Table, keys: list[str],
+              ranks: list[str]) -> tuple[np.ndarray, np.ndarray]:
+    """The Arrow engine's last-writer-wins pass: the indices of the rows
+    of ``tbl`` that tie for their key's maximum ``ranks`` tuple, grouped
+    by key, and a mask over them marking each key's first such row (the
+    earliest in ``tbl``: the sort is stable). One sort over (keys
+    ascending, ranks descending); a key's run starts where a key column
+    changes, and its top rows end where a rank column changes. Key and
+    rank columns must hold no NULLs."""
+    import pyarrow.compute as pc
+
+    n = tbl.num_rows
+    srt = tbl.select(keys + ranks)
+    order = pc.sort_indices(srt, [(k, "ascending") for k in keys]
+                            + [(r, "descending") for r in ranks]).to_numpy()
+    srt = srt.take(order)
+
+    def starts(cols: list[str]) -> np.ndarray:
+        new = np.ones(n, bool)
+        if n > 1:
+            new[1:] = np.any([pc.not_equal(srt.column(c).slice(1),
+                                           srt.column(c).slice(0, n - 1))
+                              .to_numpy(zero_copy_only=False) for c in cols], 0)
+        return new
+
+    key_start = starts(keys)
+    group = np.cumsum(key_start | starts(ranks))
+    top = group == group[key_start][np.cumsum(key_start) - 1]
+    return order[top], key_start[top]
 
 
 # ----------------------------------------------------------------------
-# in-process (pyarrow) twins of the read path, used by point lookups
+# in-process (pyarrow) twins of the read path: point lookups read
+# through them, and lookups and apply's in-process commits resolve with
+# _top_rank above
 # ----------------------------------------------------------------------
 def _arrow_key_filter(ks: list[str], probes: list[tuple],
                       target: pa.Schema) -> "pads.Expression":
@@ -508,39 +542,6 @@ def _match_probes(tbl: pa.Table, ks: list[str], probes: list[tuple]) -> pa.Table
     want = set(probes)
     keys = zip(*[tbl.column(k).to_pylist() for k in ks])
     return tbl.filter(pa.array([t in want for t in keys], pa.bool_()))
-
-
-def _resolve_arrow(tbl: pa.Table, ks: list[str]) -> pa.Table | None:
-    """``_resolve`` over an in-process (base ∪ delta) row set: per key
-    the row with the highest ``(coalesce(_lsn, -1), live over
-    tombstone)`` wins, a key whose winner is a tombstone is dropped,
-    and the winner's own ``_lsn`` (NULL included) is kept. Returns
-    None when a key's top rank ties between live rows whose content
-    differs: only ``_lsn_rank``'s content hash orders those, and it is
-    not reimplemented here -- the caller answers through Spark."""
-    best: dict[tuple, tuple] = {}
-    lsns = tbl.column(LSN_COL).to_pylist()
-    dels = tbl.column(DELETED_COL).to_pylist()
-    keys = zip(*[tbl.column(k).to_pylist() for k in ks])
-    for i, (kv, lsn, dele) in enumerate(zip(keys, lsns, dels)):
-        rank = (-1 if lsn is None else lsn, not dele)
-        top = best.get(kv)
-        if top is None or rank > top[0]:
-            best[kv] = (rank, [i])
-        elif rank == top[0]:
-            top[1].append(i)
-    content = tbl.select([c for c in tbl.column_names
-                          if c not in ks and c not in (LSN_COL, DELETED_COL)])
-    winners = []
-    for (_, live), rows in best.values():
-        if not live:
-            continue
-        if len(rows) > 1:
-            vals = content.take(rows).to_pylist()
-            if any(v != vals[0] for v in vals[1:]):
-                return None
-        winners.append(rows[0])
-    return tbl.take(pa.array(winners, pa.int64())).drop_columns([DELETED_COL])
 
 
 #: integral promotion ladder for type widening (Iceberg UpdateSchema)

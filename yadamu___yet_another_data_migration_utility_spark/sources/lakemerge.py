@@ -23,8 +23,8 @@ from .fsio import CommitConflict
 from .lakebase import (
     RebaseError, ConstraintViolation, MergeResult,
     MANIFEST_DIR, DATA_DIR, LSN_COL, DELETED_COL,
-    _keylist, _bucket_expr, _bucket_ids, _distribute_delta, _hashable,
-    _lsn_rank, _evolved_schema, _buckets_changed_between,
+    _keylist, _bucket_expr, _bucket_ids, _distribute_delta, _lww,
+    _evolved_schema, _buckets_changed_between,
     _list_bucket_files, _ts_micros, _aqe_off, _inherit_stats,
     _footer_stats, _align, _align_arrow, _cap, _utc_now_iso, _ZONE_TYPES,
 )
@@ -515,25 +515,16 @@ class MergeMixin:
             tgt = tgt.withColumn(op_col, F.lit("K"))
 
             # ---- last-writer-wins resolution (one shuffle on key) ----
-            # union(target rows, batch rows) -> max_by(payload, _lsn).
-            # Replayed rows tie on _lsn with identical payloads, so ties
-            # are benign; tombstone replays have no target row to tie with.
+            # the snapshot read's rule over union(target rows, batch
+            # rows): deletes are content-free, target rows (op 'K') rank
+            # as live rows. Replayed rows tie on _lsn with identical
+            # payloads, so ties are benign; tombstone replays have no
+            # target row to tie with.
             all_cols = data_cols + [LSN_COL, op_col]
             unioned = tgt.select(*all_cols).unionByName(src.select(*all_cols))
-            ttypes = {f.name: f.dataType for f in table_schema.fields}
-            winner = F.max_by(
-                F.struct(*[c for c in all_cols if c not in ks]),
-                # same logical-content tie rank as _resolve: deletes are
-                # content-free, target rows (op 'K') rank as live rows
-                _lsn_rank([c for c in data_cols if c not in ks
-                           and _hashable(ttypes.get(c, T.StringType()))],
-                          F.col(op_col) == "D"),
-            )
-            resolved = (
-                unioned.groupBy(*ks)
-                .agg(winner.alias("_w"))
-                .select(*ks, "_w.*")
-            )
+            resolved = _lww(unioned, ks, [c for c in all_cols if c not in ks],
+                            {f.name: f.dataType for f in table_schema.fields},
+                            F.col(op_col) == "D")
             result = resolved.filter(F.col(op_col) != "D").drop(op_col)
 
             # ---- lineage: per-bucket applied-LSN ranges + row counts,

@@ -5,30 +5,18 @@ laketable module docstring for the design."""
 
 from __future__ import annotations
 
-import contextlib  # noqa: F401  (kept for parity with the pre-split module)
 import json
 import os
-import time
-import uuid
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import bloomindex as _bloom  # noqa: F401
-from .fsio import CommitConflict, LocalFS  # noqa: F401
-from .lakebase import (  # noqa: F401
-    RebaseError, ConstraintViolation, MergeResult,
-    FORMAT_VERSION, MANIFEST_DIR, DATA_DIR, CURRENT, BRANCHES_SUBDIR,
-    BRANCH_META, MAIN_BRANCH, LSN_COL, DELETED_COL, STATS_FORMAT,
-    MERGE_MODES,
-    _keylist, _bucket_expr, _distribute_delta, _znorm_expr, _zorder_expr,
-    _zorder_key, _where_cond, _keys_residual, _hashable, _lsn_rank,
-    _resolve, _widens, _evolved_schema, _buckets_changed_between,
-    _list_bucket_files, _ts_micros, _enc_stat, _inherit_stats,
-    _zone_kind, _session_tz, _enc_bound, _disjoint, _footer_stats,
-    _align, _cap, _utc_now_iso, _ZONE_TYPES, _ZONE_STR_CAP, _WIDEN_RANK,
+from .fsio import CommitConflict
+from .lakebase import (
+    RebaseError, MANIFEST_DIR, CURRENT, BRANCHES_SUBDIR, BRANCH_META,
+    MAIN_BRANCH, STATS_FORMAT, _utc_now_iso,
 )
 
 

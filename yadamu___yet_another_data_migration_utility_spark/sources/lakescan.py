@@ -6,36 +6,53 @@ laketable.py (round 4); see the laketable module docstring."""
 
 from __future__ import annotations
 
-import contextlib  # noqa: F401  (kept for parity with the pre-split module)
 import json
 import os
 import time
-import uuid
 from typing import Any
 
+import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from . import bloomindex as _bloom  # noqa: F401
-from .fsio import CommitConflict, LocalFS  # noqa: F401
-from .lakebase import (  # noqa: F401
-    RebaseError, ConstraintViolation, MergeResult,
-    FORMAT_VERSION, MANIFEST_DIR, DATA_DIR, CURRENT, BRANCHES_SUBDIR,
-    BRANCH_META, MAIN_BRANCH, LSN_COL, DELETED_COL, STATS_FORMAT,
-    MERGE_MODES,
-    _keylist, _bucket_expr, _distribute_delta, _znorm_expr, _zorder_expr,
-    _zorder_key, _where_cond, _keys_residual, _hashable, _lsn_rank,
-    _resolve, _widens, _evolved_schema, _buckets_changed_between,
-    _list_bucket_files, _ts_micros, _enc_stat, _inherit_stats,
-    _zone_kind, _session_tz, _enc_bound, _disjoint, _footer_stats,
-    _align, _cap, _utc_now_iso, _ZONE_TYPES, _ZONE_STR_CAP, _WIDEN_RANK,
-    _driver_hashable, _bucket_id, _probe_tuples, _key_envelope,
-    _arrow_key_filter, _align_arrow, _match_probes, _resolve_arrow,
-    _check_key_types, _check_probe_arity,
+from . import bloomindex as _bloom
+from .lakebase import (
+    LSN_COL, DELETED_COL, STATS_FORMAT,
+    _keylist, _bucket_expr, _keys_residual, _lww, _resolve, _inherit_stats,
+    _zone_kind, _enc_bound, _disjoint, _driver_hashable, _bucket_id,
+    _probe_tuples, _key_envelope, _arrow_key_filter, _align_arrow,
+    _match_probes, _top_rank, _check_key_types, _check_probe_arity,
 )
+
+
+def _lookup_winners(rows: pa.Table, ks: list[str]) -> pa.Table | None:
+    """``lookup``'s policy over ``_top_rank``: per key of an
+    in-process (base ∪ delta) row set, the row ranked highest by
+    ``(coalesce(_lsn, -1), live over tombstone)`` wins, a key whose
+    winner is a tombstone is dropped, and the winner's own ``_lsn``
+    (NULL included) is kept. Returns None when a key's top rank ties
+    between live rows whose content differs (NaN never equals itself):
+    only ``_lsn_rank``'s content hash orders those, and it is not
+    reimplemented here -- the caller answers through Spark."""
+    import pyarrow.compute as pc
+
+    live = pc.invert(pc.fill_null(rows.column(DELETED_COL), False))
+    ranked = rows.select(ks).append_column(
+        "_l", pc.fill_null(rows.column(LSN_COL), -1)).append_column("_live", live)
+    top, first = _top_rank(ranked, ks, ["_l", "_live"])
+    is_live = live.to_numpy(zero_copy_only=False)
+    win, tied = top[first], top[~first]
+    head = win[np.cumsum(first)[~first] - 1]  # the winner each tie ties with
+    live_tie = is_live[tied]  # a top rank is all live or all tombstones
+    tied, head = tied[live_tie], head[live_tie]
+    if tied.size:
+        content = rows.drop_columns(ks + [LSN_COL, DELETED_COL])
+        if content.take(tied).to_pylist() != content.take(head).to_pylist():
+            return None
+    return rows.take(win[is_live[win]]).drop_columns([DELETED_COL])
 
 
 class ScanMixin:
@@ -376,7 +393,8 @@ class ScanMixin:
         bloom sidecars rule out. Those files are read in-process with
         pyarrow through the table's FS (key filter pushed down),
         aligned to the snapshot schema like ``read``, and delta buckets
-        are resolved last-writer-wins exactly as ``_resolve`` does. The
+        are resolved last-writer-wins by ``_lookup_winners``: one Arrow
+        sort (``_top_rank``) that picks the row ``_resolve`` picks. The
         answer comes back as a local relation, which ``collect()``
         serves without a job. Two cases answer through Spark instead,
         each recorded in the operation trace (operators/trace.py) with
@@ -424,7 +442,7 @@ class ScanMixin:
             rows = _match_probes(pa.concat_tables(
                 [self._read_arrow(rel, dtarget, kfilter) for rel in dfiles]),
                 ks, probes)
-            resolved = _resolve_arrow(rows, ks)
+            resolved = _lookup_winners(rows, ks)
             if resolved is None:
                 trace.trace_event("lookup", table=self.root, path="spark",
                                   reason="lsn_tie", version=m["version"])
@@ -607,18 +625,10 @@ class ScanMixin:
             )
             raw = spark.read.schema(rs).parquet(*new_files)
             payload = [c for c in raw.columns if c not in ks]
-            # same (NULL-_lsn, content) ranking as _resolve -- ties must
-            # pick the same winner the snapshot read picks
-            ftypes = {f.name: f.dataType for f in schema.fields}
-            content = [c for c in payload
-                       if c not in (LSN_COL, DELETED_COL)
-                       and _hashable(ftypes.get(c, T.StringType()))]
-            winner = F.max_by(
-                F.struct(*payload),
-                _lsn_rank(content, F.coalesce(F.col(DELETED_COL), F.lit(False))),
-            )
-            net = raw.groupBy(*ks).agg(winner.alias("_w")).select(*ks, "_w.*")
+            # the snapshot read's LWW rule: ties pick the same winner
             is_del = F.coalesce(F.col(DELETED_COL), F.lit(False))
+            net = _lww(raw, ks, payload,
+                       {f.name: f.dataType for f in schema.fields}, is_del)
             net = net.select(
                 *ks,
                 *[

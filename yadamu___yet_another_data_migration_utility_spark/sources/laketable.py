@@ -92,19 +92,12 @@ write path).
 
 from __future__ import annotations
 
-import contextlib
 import json
 import os
-import time
-import uuid
-from dataclasses import dataclass
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import bloomindex as _bloom
 from .fsio import CommitConflict, LocalFS
 
 
