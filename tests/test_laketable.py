@@ -611,6 +611,60 @@ def test_read_changes_across_type_widening(spark, tmp_table_root):
     assert got == {("b", 9, "upsert"), ("c", 2**40, "upsert")}, got
 
 
+LCASE = T.StringType("UTF8_LCASE")
+
+
+def _files(root):
+    return sorted(os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs)
+
+
+def test_create_rejects_collated_strings(spark, tmp_table_root):
+    """A string of a non-default collation, at any nesting depth, is
+    refused before anything is written. The bucket hash, bloom sidecars
+    and zone maps compare UTF-8 bytes, and pyspark's
+    ``StructField.fromJson`` rewrites collation metadata in place, so
+    such a manifest schema stopped loading after its first re-parse."""
+    for schema in (
+        T.StructType([T.StructField("url", LCASE)]),
+        T.StructType([T.StructField("url", T.StringType()),
+                      T.StructField("tags", T.ArrayType(T.MapType(
+                          T.StringType(), T.StructType([
+                              T.StructField("v", LCASE)]))))]),
+    ):
+        with pytest.raises(ValueError, match="UTF8_LCASE"):
+            LakeTable.create(tmp_table_root, schema, key="url", fs=_test_fs())
+        assert not os.path.exists(tmp_table_root)
+    # default strings, nested ones included, are unaffected
+    t = LakeTable.create(tmp_table_root, T.StructType([
+        T.StructField("url", T.StringType()),
+        T.StructField("tags", T.ArrayType(T.StringType()))]),
+        key="url", fs=_test_fs())
+    t.append(spark, spark.createDataFrame(
+        [("a", ["x"])], "url string, tags array<string>"), batch_id=0)
+    assert [tuple(r) for r in t.read(spark).select("url", "tags").collect()] \
+        == [("a", ["x"])]
+
+
+@pytest.mark.parametrize("mode", MODES)
+def test_merge_rejects_collated_new_column(spark, tmp_table_root, mode):
+    """Schema evolution refuses a new collated column the way ``create``
+    does: no manifest version, no data file, the table still reads."""
+    t = mk(spark, tmp_table_root, merge_mode=mode)
+    t.merge(spark, batch(spark, [("a", "v1", "I", 1)]), batch_id=0)
+    t.merge(spark, batch(spark, [("b", "v1", "I", 2)])
+            .withColumn("lang", F.lit("en")), batch_id=1)
+    v, files = t.current_version(), _files(tmp_table_root)
+    before = sorted(t.read(spark).collect())
+    bad = batch(spark, [("c", "v1", "I", 3)]).withColumn(
+        "tag", F.collate(F.lit("X"), "UTF8_LCASE"))
+    with pytest.raises(ValueError, match="'tag'.*UTF8_LCASE"):
+        t.merge(spark, bad, batch_id=2)
+    assert t.current_version() == v
+    assert _files(tmp_table_root) == files
+    assert sorted(t.read(spark).collect()) == before
+    assert t.schema()["lang"].dataType == T.StringType()
+
+
 @pytest.mark.parametrize("mode", MODES)
 def test_drop_column_purges_and_readd_is_fresh(spark, tmp_table_root, mode):
     """drop_column: full-rewrite purge; time travel keeps the column in

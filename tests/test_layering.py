@@ -54,11 +54,11 @@ def test_engine_layer_does_not_import_plans(layer):
 def test_import_resolution_sees_plans_imports():
     """The checker itself: a relative and an absolute plans import
     are both caught, a functions import is not."""
-    assert _is_plans("plans.textops")
+    assert _is_plans("plans.catalog")
     assert _is_plans(f"{PKG.name}.plans")
     assert not _is_plans("functions.minhash")
-    textops = _imported_modules(PKG / "plans" / "moreops.py")
-    assert "plans.textops" in textops and "plans.catalog" in textops
+    temporal = _imported_modules(PKG / "plans" / "temporal.py")
+    assert "plans.catalog" in temporal and "streaming.stream" in temporal
 
 
 #: local-filesystem calls that would bypass ``table.fs`` (an object
@@ -135,10 +135,12 @@ def _unused_imports(path: pathlib.Path, exempt_module: str | None = None
     return out
 
 
-@pytest.mark.parametrize("layer", ENGINE)
+@pytest.mark.parametrize(
+    "layer", ENGINE + ("functions", "fixtures", "plans", "session.py", "cli.py"))
 def test_engine_modules_import_no_unused_names(layer):
-    files = sorted((PKG / layer).rglob("*.py"))
-    assert files
+    path = PKG / layer
+    files = sorted(path.rglob("*.py")) if path.is_dir() else [path]
+    assert all(f.is_file() for f in files) and files
     bad = {rel: names for f in files
            if f.name != "__init__.py"
            and (names := _unused_imports(

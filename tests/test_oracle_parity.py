@@ -13,10 +13,8 @@ import pytest
 from yadamu___yet_another_data_migration_utility_spark.plans import ORACLES, QUERIES
 
 SF_DIR = "/root/testdata/sf0.001"
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+# the tables the oracles read
+TABLES = ["customer", "events", "lineitem"]
 
 
 @pytest.fixture(scope="module")

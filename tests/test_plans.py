@@ -44,23 +44,9 @@ def test_dedup_winner_join_broadcasts_at_runtime(spark):
 def test_no_cartesian_products_in_catalog(spark):
     """Suite-wide plan gate (r1 verdict): no catalog query may plan a
     BroadcastNestedLoopJoin or CartesianProduct -- the silent O(n^2)
-    scale-killers. Exemptions are declared, with why they are safe:
-
-    - ann_cosine_topk: brute-force scoring IS the declared correctness
-      baseline; the broadcast side is the 8-query set, so the 'nested
-      loop' is one pass over the corpus per partition.
-    - minhash_lsh_dedup / dedup_incremental: the shared _mh_sig
-      k-replication crossJoin broadcasts a 6-row constant range (an
-      explode in join clothing), not a pair join.
-    - corpus_mix_weights / corpus_balanced_sample: the broadcast side
-      is a 1-row global scalar (token total + weight sum / min language
-      count); a constant equi-key would not help because Catalyst
-      constant-folds it back to a nested loop.
-    """
-    allowed = {
-        "ann_cosine_topk", "minhash_lsh_dedup", "dedup_incremental",
-        "corpus_mix_weights", "corpus_balanced_sample",
-    }
+    scale-killers. Exemptions would be declared here, each with why it
+    is safe; there are none."""
+    allowed: set[str] = set()
     assert allowed <= set(QUERIES), sorted(allowed - set(QUERIES))
     for name, fn in sorted(QUERIES.items()):
         if name in allowed:

@@ -25,8 +25,8 @@ Subpackages
 sources/    table formats + changelog readers (laketable, file changelog)
 operators/  CDC batch apply, dedup reductions, fencing, metrics
 functions/  column-level functions: text extraction, dedup signatures
-            (minhash), md5/HyperLogLog sketch primitives, similarity,
-            multimodal, type conversion and spatial recode
+            (minhash), md5/HyperLogLog sketch primitives, type
+            conversion and spatial recode
 streaming/  Structured Streaming wrapper (foreachBatch, checkpoints)
 plans/      query catalog with DuckDB oracles, served by
             __spark_entry__

@@ -1,4 +1,4 @@
 """Column-level functions: extraction, dedup signatures, sketch
-primitives, similarity, multimodal decode, type conversion. All JVM-side
-Catalyst builtins where possible; Arrow-batched pandas UDFs for the rest
-(never per-row Python UDFs)."""
+primitives, type conversion and spatial recode. All JVM-side Catalyst
+builtins where possible; Arrow-batched pandas UDFs for the rest (never
+per-row Python UDFs)."""

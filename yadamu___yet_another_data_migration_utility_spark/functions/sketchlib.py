@@ -3,8 +3,8 @@ contract and the integer-exact HyperLogLog register algebra.
 
 ONE home for spellings that must stay bit-identical everywhere they
 appear -- the engine's ANALYZE statistics and bloom sidecars
-(sources/), and every md5-die/fingerprint query (plans/textops.py
-re-exports ``md5_long`` as its ``_md5_long``).
+(sources/), the MinHash signatures (functions/minhash.py) and the
+catalog's md5 dice (plans/catalog.py).
 
 Determinism rules (each keeps Spark and the DuckDB oracles
 bit-identical):
@@ -21,13 +21,8 @@ import math
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-#: DuckDB spelling of the same 60-bit hash (format with x=<sql expr>)
-MD5_LONG_SQL = "CAST(concat('0x', substr(md5({x}), 1, 15)) AS BIGINT)"
-
-
 def md5_long(c: Column) -> Column:
-    """60-bit hash from md5 -- identical in Spark and DuckDB
-    (``MD5_LONG_SQL`` is the oracle-side spelling)."""
+    """60-bit hash from md5 -- identical in Spark and DuckDB."""
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
@@ -58,21 +53,16 @@ def hll_alpha(m: int) -> float:
     return _ALPHA.get(m, 0.7213 / (1 + 1.079 / m))
 
 
-def hll_estimate(
-    nonzero: int, denom_used: int | None, m: int, rest_bits: int,
-    small_range: bool = True,
-) -> float:
+def hll_estimate(nonzero: int, denom_used: int | None, m: int,
+                 rest_bits: int) -> float:
     """Driver-side estimate from a collected sketch: ``nonzero``
     occupied registers whose scaled terms sum to ``denom_used``
-    (empty registers contribute 2^(rest_bits+1) each). With
-    ``small_range`` the standard linear-counting patch applies below
-    2.5m -- it uses ln(), which is only safe OFF the cross-engine
-    oracle path (driver code, tests); oracle-checked queries must
-    publish the raw estimate instead."""
+    (empty registers contribute 2^(rest_bits+1) each). Below 2.5m the
+    standard linear-counting patch applies."""
     scale = 1 << (rest_bits + 1)
     empties = m - nonzero
     denom = (denom_used or 0) + empties * scale
     est = hll_alpha(m) * m * m * scale / denom
-    if small_range and est <= 2.5 * m and empties > 0:
+    if est <= 2.5 * m and empties > 0:
         est = m * math.log(m / empties)
     return est

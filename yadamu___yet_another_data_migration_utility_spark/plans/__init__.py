@@ -3,8 +3,6 @@ driver-checkable query, a ``(spark, sf_dir) -> DataFrame``, with its
 DuckDB oracle SQL under the same name."""
 
 from .catalog import ORACLES, QUERIES  # noqa: F401
-from . import textops  # noqa: F401  (registers its queries into the dicts)
-from . import moreops  # noqa: F401  (simhash, cosine dedup, rolling hash, staged round-trip)
 from . import temporal  # noqa: F401  (as-of join, sessionization)
 from . import migrate_types  # noqa: F401  (interval ISO-8601, spatial recode)
 from . import composite  # noqa: F401  (composite-key CDC replay + skew evidence)

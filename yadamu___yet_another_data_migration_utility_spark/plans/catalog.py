@@ -13,7 +13,7 @@ hash, so:
   engine-specific decimal-average scale rules leak in;
 - top-k uses ROW_NUMBER with a full deterministic tiebreak, never a
   bare LIMIT;
-- hash-dependent operators (fingerprints, minhash) use md5, which both
+- hash-dependent operators (the sampling dice) use md5, which both
   engines implement identically -- never engine-private hashes.
 
 Scale notes are inline per query.
@@ -42,11 +42,6 @@ def _register(name: str, oracle: str | None = None):
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
-
-
-# exact money/quantity arithmetic (see module docstring)
-def _dec(col: str, p: int = 15, s: int = 2) -> F.Column:
-    return F.col(col).cast(f"decimal({p},{s})")
 
 
 def _sum_dbl(c: F.Column) -> F.Column:

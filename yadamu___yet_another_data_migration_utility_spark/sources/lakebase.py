@@ -575,6 +575,29 @@ def _same_cast(old: T.DataType, new: T.DataType) -> bool:
         old.typeName() in _WIDEN_RANK and new.typeName() in _WIDEN_RANK)
 
 
+def _require_binary_strings(fields: list[T.StructField]) -> None:
+    """Reject ``fields`` entering a table schema if any holds a string
+    of a non-default collation, at any nesting depth. Bucket hashes,
+    bloom sidecars, zone maps and key envelopes all compare UTF-8 bytes,
+    which a collation such as UTF8_LCASE does not; and pyspark's
+    ``StructField.fromJson`` rewrites a field's collation metadata in
+    place, so a manifest schema parsed twice would no longer load."""
+    for f in fields:
+        todo = [f.dataType]
+        while todo:
+            dt = todo.pop()
+            if isinstance(dt, T.StringType) and dt.collation != "UTF8_BINARY":
+                raise ValueError(
+                    f"column {f.name!r}: string collation {dt.collation} is "
+                    "not supported; table strings must be UTF8_BINARY")
+            if isinstance(dt, T.StructType):
+                todo += [g.dataType for g in dt.fields]
+            elif isinstance(dt, T.ArrayType):
+                todo.append(dt.elementType)
+            elif isinstance(dt, T.MapType):
+                todo += [dt.keyType, dt.valueType]
+
+
 def _evolved_schema(m: dict[str, Any], batch_schema: T.StructType, op_col: str,
                     lsn_col: str) -> T.StructType:
     """Schema evolution (Iceberg: UpdateSchema): new payload columns in
@@ -583,7 +606,8 @@ def _evolved_schema(m: dict[str, Any], batch_schema: T.StructType, op_col: str,
     widens the table column -- old data files are read upcast, new
     files are written wide. Any other type drift keeps the table type
     (the batch column is cast by ``_align``, the pre-evolution
-    behavior)."""
+    behavior). A new or widened column must pass
+    ``_require_binary_strings``."""
     table_schema = T.StructType.fromJson(m["schema"])
     payload_cols = [c for c in batch_schema.fieldNames() if c not in (op_col, lsn_col)]
     batch_fields = {f.name: f for f in batch_schema.fields
@@ -606,6 +630,7 @@ def _evolved_schema(m: dict[str, Any], batch_schema: T.StructType, op_col: str,
         for f in batch_schema.fields
         if f.name in payload_cols and f.name not in known
     ]
+    _require_binary_strings([f for f in fields if f not in table_schema.fields])
     return T.StructType(fields)
 
 

@@ -116,7 +116,8 @@ from .lakebase import (  # noqa: F401,E402
     MERGE_MODES,
     _keylist, _bucket_expr, _distribute_delta, _znorm_expr, _zorder_expr,
     _zorder_key, _where_cond, _keys_residual, _hashable, _lsn_rank,
-    _resolve, _widens, _evolved_schema, _buckets_changed_between,
+    _resolve, _widens, _evolved_schema, _require_binary_strings,
+    _buckets_changed_between,
     _list_bucket_files, _ts_micros, _aqe_off, _enc_stat, _inherit_stats,
     _zone_kind, _session_tz, _enc_bound, _disjoint, _footer_stats,
     _align, _cap, _utc_now_iso, _ZONE_TYPES, _ZONE_STR_CAP, _WIDEN_RANK,
@@ -177,10 +178,13 @@ class LakeTable(RefsMixin, ScanMixin, MergeMixin, DmlMixin,
 
         ``merge_mode`` is a table property (Iceberg: write.merge.mode):
         "mor" writes per-batch delta files resolved at read/compact;
-        "cow" rewrites touched buckets at merge time."""
+        "cow" rewrites touched buckets at merge time. Every string in
+        ``schema`` must be of the default collation
+        (``_require_binary_strings``)."""
         fs = fs or LocalFS()
         if merge_mode not in MERGE_MODES:
             raise ValueError(f"merge_mode must be one of {MERGE_MODES}")
+        _require_binary_strings(schema.fields)
         if fs.exists(root):
             if overwrite:
                 fs.rmtree(root)
