@@ -4,10 +4,13 @@ result stays exactly the filtered read (no false negatives, residual
 isin), (b) delta-touched buckets are skipped only whole, tombstone keys
 included, (c) coverage is incremental and survives unrelated commits,
 (d) rewrites orphan entries and expire GCs unreferenced sidecars,
-(e) unsupported key types are a clean error."""
+(e) key types the driver does not hash cannot be indexed, yet read and
+plan with ``keys=`` like every other type, (f) an index of a stale
+format prunes nothing until the advisor's re-harvest replaces it."""
 
 from __future__ import annotations
 
+import json
 import os
 import random
 
@@ -16,6 +19,10 @@ import pyspark.sql.types as T
 import pytest
 
 from yadamu___yet_another_data_migration_utility_spark.sources import bloomindex
+from yadamu___yet_another_data_migration_utility_spark.sources.lakebase import (
+    _bloom_hashes,
+    _probe_tuples,
+)
 from yadamu___yet_another_data_migration_utility_spark.sources.laketable import LakeTable
 
 SCHEMA = T.StructType([
@@ -58,9 +65,9 @@ def test_bloom_prunes_interleaved_files_exactly(spark, tmp_path):
 
 
 def test_no_false_negatives_every_key_found(spark, tmp_path):
-    """The hash contract holds across sides: every key written (via
-    Spark's md5) must probe positive in the driver-decoded bitset --
-    lookup over the full key set returns every row."""
+    """The hash contract holds across sides: every key written (hashed
+    by Spark in the harvest) must probe positive in the driver-decoded
+    bitset -- lookup over the full key set returns every row."""
     t = mk(tmp_path / "t", bucket_count=4)
     keys = [f"u{i}-{i*i}" for i in range(200)]
     t.append(spark, adf(spark, [(k, "x") for k in keys]))
@@ -76,7 +83,8 @@ def test_no_false_negatives_every_key_found(spark, tmp_path):
         for rel in cov
         if bloomindex.might_contain(
             bloomindex.decode_bitset(doc["blooms"][rel]),
-            doc["m"], doc["k"], k)
+            bloomindex.positions(*_bloom_hashes((k,), [T.StringType()]),
+                                 doc["m"], doc["k"]))
     }
     assert union_hit == set(keys)
 
@@ -181,23 +189,24 @@ def test_expire_gcs_unreferenced_sidecars(spark, tmp_path):
 
 
 def test_unsupported_key_type_is_clean_error(spark, tmp_path):
+    """A double key is not hashed driver-side, so it cannot be indexed;
+    ``read(keys=)`` and ``lookup`` still answer it exactly."""
     sch = T.StructType([
         T.StructField("k", T.DoubleType()),
         T.StructField("v", T.StringType()),
     ])
     t = LakeTable.create(str(tmp_path / "t"), sch, key="k", bucket_count=2)
-    t.append(spark, spark.createDataFrame([(1.5, "a")], "k double, v string"))
-    with pytest.raises(ValueError, match="string/integral"):
+    t.append(spark, spark.createDataFrame([(1.5, "a"), (2.5, "b")],
+                                          "k double, v string"))
+    with pytest.raises(ValueError, match="driver hashes"):
         t.harvest_blooms(spark)
-    with pytest.raises(TypeError, match="string/integral"):
-        t.read(spark, keys=[1.5])
-    # lookup still works (bloom path auto-disabled for the key type)
-    assert t.lookup(spark, [1.5]).count() == 1
+    assert [r["v"] for r in t.read(spark, keys=[1.5, 9.0]).collect()] == ["a"]
+    assert [r["v"] for r in t.lookup(spark, [1.5, 9.0]).collect()] == ["a"]
 
 
 def test_integer_key_blooms(spark, tmp_path):
-    """Integral keys share the contract: Spark's cast-to-string and
-    Python str() spell the same text."""
+    """Integral keys share the contract: the harvest and the probe hash
+    a long the same way."""
     sch = T.StructType([
         T.StructField("id", T.LongType()),
         T.StructField("v", T.StringType()),
@@ -252,8 +261,6 @@ def test_malformed_valid_json_sidecar_degrades_to_scan(spark, tmp_path):
     """JSON-valid but semantically broken sidecars (m=0 modulus, missing
     blooms dict) must degrade to a scan like invalid JSON does, never
     crash the planner."""
-    import json
-
     t = mk(tmp_path / "t")
     t.append(spark, adf(spark, [(f"k{i:02d}", "a") for i in range(0, 20, 2)]))
     t.append(spark, adf(spark, [(f"k{i:02d}", "b") for i in range(1, 20, 2)]))
@@ -289,27 +296,34 @@ def test_lost_sidecar_is_repairable_by_reharvest(spark, tmp_path):
 
 
 def test_plan_files_keys_validation_matches_read(spark, tmp_path):
-    """plan_files is the explanation of read: both raise the same way
-    on a key type outside the bloom hash contract."""
+    """plan_files is the explanation of read: both accept every key
+    type, and both reject a composite probe that is not a key tuple."""
     sch = T.StructType([
         T.StructField("k", T.DoubleType()),
         T.StructField("v", T.StringType()),
     ])
     t = LakeTable.create(str(tmp_path / "t"), sch, key="k", bucket_count=2)
     t.append(spark, spark.createDataFrame([(1.5, "a")], "k double, v string"))
-    with pytest.raises(TypeError, match="string/integral"):
-        t.plan_files(keys=[1.5])
+    assert t.plan_files(keys=[1.5]) == t.plan_files()
+    assert t.read(spark, keys=[1.5]).count() == 1
+    c = LakeTable.create(str(tmp_path / "c"), sch, key=["k", "v"], bucket_count=2)
+    for fn in (lambda: c.plan_files(keys=[1.5]),
+               lambda: c.read(spark, keys=[1.5])):
+        with pytest.raises(ValueError, match="2-tuples"):
+            fn()
 
 
 def test_null_probe_matches_nothing():
-    """positions(None) is empty and might_contain(None) is False -- the
-    SQL-equality contract, not the hash of the string 'None'."""
-    assert bloomindex.positions(None, 1024, 5) == []
-    bits = bytes(1024 // 8)
-    assert bloomindex.might_contain(bits, 1024, 5, None) is False
-    # and None never aliases the literal string "None"
-    p_str = bloomindex.positions("None", 1024, 5)
-    assert p_str and all(0 <= p < 1024 for p in p_str)
+    """A None probe, or a composite probe with a None component, leaves
+    no key tuple to hash -- the SQL-equality contract -- and never
+    aliases the literal string 'None'."""
+    assert _probe_tuples(["k"], [None, "None"]) == [("None",)]
+    assert _probe_tuples(["a", "b"], [None, ("x", None), ("x", "y")]) == [
+        ("x", "y")]
+    pos = bloomindex.positions(*_bloom_hashes(("None",), [T.StringType()]),
+                               1024, 5)
+    assert len(pos) == 5 and all(0 <= p < 1024 for p in pos)
+    assert bloomindex.might_contain(bytes(1024 // 8), pos) is False
 
 
 def test_maintain_restores_bloom_coverage_after_compact(spark, tmp_path):
@@ -352,3 +366,41 @@ def test_maintain_restores_bloom_coverage_after_compact(spark, tmp_path):
     # and the advisor is quiet again
     acts2 = {a["action"] for a in t.plan_maintenance()["actions"]}
     assert "harvest_blooms" not in acts2
+
+
+def test_stale_format_index_is_ignored_flagged_and_replaced(
+        spark, tmp_path, monkeypatch, capsys):
+    """An index harvested under an older sidecar format never prunes
+    (lookups stay exact), ``describe`` counts no coverage for it, the
+    advisor flags it with reason ``bloom_format``, and
+    ``maintain(apply=True)`` re-harvests every file so pruning returns."""
+    from yadamu___yet_another_data_migration_utility_spark.cli import main
+
+    t = mk(tmp_path / "t")
+    t.append(spark, adf(spark, [(f"k{i:02d}", "a") for i in range(0, 20, 2)]))
+    t.append(spark, adf(spark, [(f"k{i:02d}", "b") for i in range(1, 20, 2)]))
+    with monkeypatch.context() as mp:
+        mp.setattr(bloomindex, "BLOOM_FORMAT", bloomindex.BLOOM_FORMAT - 1)
+        t.harvest_blooms(spark)
+    t = LakeTable(t.root)  # fresh handle: cold sidecar cache
+    assert t.manifest()["blooms_format"] == bloomindex.BLOOM_FORMAT - 1
+    # k025 sorts inside both files' key zones: only a bloom can skip them
+    assert n_files(t.plan_files(keys=["k02"])) == 2
+    assert n_files(t.plan_files(keys=["k025"])) == 2
+    assert {r["val"] for r in t.lookup(spark, ["k02", "k03"]).collect()} == {
+        "a", "b"}
+    assert main(["describe", "--table-root", t.root]) == 0
+    desc = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert (desc["bloom_files"], desc["bloom_sidecars"]) == (0, 0)
+    flag = [a for a in t.plan_maintenance(small_file_bytes=0)["actions"]
+            if a["action"] == "harvest_blooms"]
+    assert [(a["reason"], a["uncovered_files"]) for a in flag] == [
+        ("bloom_format", 2)]
+    done = t.maintain(spark, apply=True, small_file_bytes=0)
+    res = [a for a in done["actions"] if a["action"] == "harvest_blooms"]
+    assert res[0]["result"]["files_indexed"] == 2
+    assert t.manifest()["blooms_format"] == bloomindex.BLOOM_FORMAT
+    assert n_files(t.plan_files(keys=["k02"])) == 1
+    assert n_files(t.plan_files(keys=["k025"])) == 0
+    assert "harvest_blooms" not in {
+        a["action"] for a in t.plan_maintenance(small_file_bytes=0)["actions"]}

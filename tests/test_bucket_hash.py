@@ -1,10 +1,16 @@
-"""The driver-side bucket function ``_bucket_id`` is bit-identical to
-the write path's ``pmod(xxhash64(key cols), n)`` for every key type it
-accepts: strings (UTF-8, on each side of xxhash64's 32-byte stripe),
-byte/short/int (hashed as 4-byte ints) and long, alone and as
-composite keys with NULL components."""
+"""The driver-side key hash is bit-identical to Spark's for every key
+type ``_driver_hashable`` accepts, alone and as composite keys with
+NULL components: the bucket function ``_bucket_id`` against the write
+path's ``pmod(xxhash64(key cols), n)`` for strings (UTF-8, on each side
+of xxhash64's 32-byte stripe), byte/short/int (hashed as 4-byte ints)
+and long -- the bucket layout of every existing table -- and both the
+bucket function and the bloom index's two salted hashes for boolean,
+date, timestamp_ntz, binary and decimal(p <= 18) keys."""
 
 from __future__ import annotations
+
+import datetime
+from decimal import Decimal
 
 import pyspark.sql.types as T
 import pytest
@@ -13,8 +19,11 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from yadamu___yet_another_data_migration_utility_spark.sources.lakebase import (
+    _bloom_hash_exprs,
+    _bloom_hashes,
     _bucket_id,
     _driver_hashable,
+    _key_bytes,
 )
 
 COLS = {
@@ -88,9 +97,109 @@ def test_bucket_id_rejects_values_outside_the_key_type():
         _bucket_id([7], [T.StringType()], 4)
 
 
+#: the other hashed key types, with a string and a long to mix into
+#: composites
+COLS2 = {
+    "s": T.StringType(),
+    "l": T.LongType(),
+    "o": T.BooleanType(),
+    "d": T.DateType(),
+    "t": T.TimestampNTZType(),
+    "y": T.BinaryType(),
+    "m": T.DecimalType(10, 2),
+    "q": T.DecimalType(18, 0),
+}
+DDL2 = ("s string, l bigint, o boolean, d date, t timestamp_ntz, y binary, "
+        "m decimal(10,2), q decimal(18,0)")
+KEYS2 = [["o"], ["d"], ["t"], ["y"], ["m"], ["q"], ["s", "m", "d"],
+         ["y", "t", "o", "q"], ["d", "s", "l"], ["m", "y"]]
+
+
+def _dec(digits, scale):
+    bound = 10 ** digits - 1
+    return st.integers(-bound, bound).map(lambda n: Decimal(n).scaleb(-scale))
+
+
+ROWS2 = st.lists(
+    st.tuples(*[st.none() | g for g in (
+        STRINGS, _int(64), st.booleans(), st.dates(), st.datetimes(),
+        st.binary(max_size=70), _dec(10, 2), _dec(18, 0))]),
+    min_size=1, max_size=25)
+
+EDGE2 = [
+    ("", 0, True, datetime.date(1, 1, 1), datetime.datetime(1, 1, 1), b"",
+     Decimal("-99999999.99"), Decimal(-(10**18 - 1))),
+    ("é", -1, False, datetime.date(9999, 12, 31),
+     datetime.datetime(9999, 12, 31, 23, 59, 59, 999999), b"x" * 31,
+     Decimal("99999999.99"), Decimal(10**18 - 1)),
+    ("z" * 33, 2**63 - 1, None, datetime.date(1969, 12, 31),
+     datetime.datetime(1969, 12, 31, 23, 59, 59, 1), b"\0" * 32,
+     Decimal("0.00"), Decimal(0)),
+    (None, None, True, datetime.date(1970, 1, 1), datetime.datetime(1970, 1, 1),
+     b"\xff" * 33, Decimal("-0.01"), None),
+    ("q", 7, False, None, None, bytes(range(256)), None, Decimal(-1)),
+    (None, None, None, None, None, None, None, None),
+]
+
+
+@settings(max_examples=6, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(rows=ROWS2)
+def test_other_key_types_hash_as_spark(spark, rows):
+    """The bucket id and the two bloom hashes of every other hashed key
+    type, alone and in composites with strings, longs and NULLs."""
+    rows = rows + EDGE2
+    df = spark.createDataFrame(rows, DDL2)
+    names = ["_".join(ks) for ks in KEYS2]
+    got = df.select(*[
+        e.alias(f"{nm}#{i}") for ks, nm in zip(KEYS2, names)
+        for i, e in enumerate([F.pmod(F.xxhash64(*ks), F.lit(7)),
+                               *_bloom_hash_exprs(ks)])]).collect()
+    pos = {c: i for i, c in enumerate(COLS2)}
+    for row, spark_row in zip(rows, got):
+        for ks, nm in zip(KEYS2, names):
+            vals = [row[pos[c]] for c in ks]
+            types = [COLS2[c] for c in ks]
+            want = tuple(spark_row[f"{nm}#{i}"] for i in range(3))
+            assert (_bucket_id(vals, types, 7), *_bloom_hashes(vals, types)) == want, (
+                ks, vals)
+
+
+def test_key_bytes_rejects_values_outside_the_key_type():
+    """A probe of another Python type, or one its column cannot hold,
+    has no key bytes -- as a bool on an integral key."""
+    D = Decimal
+    cases = [
+        (True, T.LongType()),
+        (1, T.BooleanType()),
+        (datetime.datetime(2020, 1, 1), T.DateType()),
+        (datetime.date(2020, 1, 1), T.TimestampNTZType()),
+        (datetime.datetime(2020, 1, 1, tzinfo=datetime.timezone.utc),
+         T.TimestampNTZType()),
+        (bytearray(b"a"), T.BinaryType()),
+        ("a", T.BinaryType()),
+        (D("1.005"), T.DecimalType(10, 2)),  # more digits than the scale
+        (D("100000000"), T.DecimalType(10, 2)),  # beyond the precision
+        (D("1E+30"), T.DecimalType(18, 0)),
+        (D("NaN"), T.DecimalType(10, 2)),
+        (1.5, T.DecimalType(10, 2)),
+        (1, T.DecimalType(10, 2)),
+    ]
+    for v, dt in cases:
+        assert _key_bytes(v, dt) is None, (v, dt)
+    # a value's scale does not matter, only its value
+    dec = T.DecimalType(10, 2)
+    assert _key_bytes(D("1.5"), dec) == _key_bytes(D("1.500"), dec) is not None
+    assert _key_bytes(D("0E+5"), T.DecimalType(18, 0)) == bytes(8)
+
+
 def test_driver_hashable_types():
     assert all(_driver_hashable(t) for t in COLS.values())
+    assert all(_driver_hashable(t) for t in COLS2.values())
     assert not _driver_hashable(T.StringType("UTF8_LCASE"))
-    for t in (T.DoubleType(), T.TimestampType(), T.DateType(),
-              T.DecimalType(10, 2), T.BooleanType(), T.BinaryType()):
-        assert not _driver_hashable(t)
+    for t in (T.FloatType(), T.DoubleType(), T.DecimalType(30, 4),
+              T.DecimalType(19, 0), T.TimestampType(),
+              T.ArrayType(T.LongType()),
+              T.StructType([T.StructField("a", T.LongType())]),
+              T.MapType(T.StringType(), T.LongType())):
+        assert not _driver_hashable(t), t

@@ -63,6 +63,23 @@ def test_create_and_empty_read(spark, tmp_table_root):
     assert t.merge_mode() == "mor"
 
 
+def test_rejected_overwrite_create_keeps_the_table(spark, tmp_table_root):
+    """``create(overwrite=True)`` validates every argument before it
+    removes anything: a rejected create leaves the old table loadable
+    and readable."""
+    t = mk(spark, tmp_table_root)
+    t.merge(spark, batch(spark, [("a", "v1", "I", 1)]), batch_id=0)
+    for bad in ("nope", [], ["url", "url"]):
+        with pytest.raises(ValueError):
+            LakeTable.create(tmp_table_root, SCHEMA, key=bad, overwrite=True,
+                             fs=_test_fs())
+    with pytest.raises(ValueError, match="merge_mode"):
+        LakeTable.create(tmp_table_root, SCHEMA, key="url", overwrite=True,
+                         merge_mode="nope", fs=_test_fs())
+    assert state(spark, LakeTable.load(tmp_table_root, fs=_test_fs())) == {
+        ("a", "v1", 1)}
+
+
 @pytest.mark.parametrize("mode", MODES)
 def test_insert_update_delete(spark, tmp_table_root, mode):
     t = mk(spark, tmp_table_root, merge_mode=mode)

@@ -2,7 +2,8 @@
 imports the query catalog (plans/). Shared primitives live in
 functions/, which both sides may import. And operators/ and streaming/
 reach table storage only through the table's FS (``table.fs``), never
-through local-filesystem calls."""
+through local-filesystem calls. Only sources/lakebase.py names Spark's
+xxhash64: the merge-key hash has one owner."""
 
 from __future__ import annotations
 
@@ -159,3 +160,35 @@ def test_unused_import_detection(tmp_path):
     laketable = PKG / "sources" / "laketable.py"
     assert any(n.startswith("_resolve:") for n in _unused_imports(laketable))
     assert _unused_imports(laketable, "lakebase") == []
+
+
+#: the one engine module that may name Spark's xxhash64: it owns the
+#: merge-key hash that bucket placement, the bloom index and the
+#: in-process lookup and apply share, so that contract cannot split
+KEY_HASH_OWNER = "sources/lakebase.py"
+
+
+def _xxhash64_lines(path: pathlib.Path) -> list[int]:
+    """The lines of ``path`` that name xxhash64 (code, SQL text,
+    comment or docstring)."""
+    return [i for i, line in enumerate(path.read_text().splitlines(), 1)
+            if "xxhash64" in line]
+
+
+def test_only_lakebase_names_the_key_hash():
+    bad = {rel: lines for layer in ENGINE
+           for f in sorted((PKG / layer).rglob("*.py"))
+           if (rel := str(f.relative_to(PKG))) != KEY_HASH_OWNER
+           and (lines := _xxhash64_lines(f))}
+    assert not bad, f"xxhash64 named outside {KEY_HASH_OWNER}: {bad}"
+
+
+def test_key_hash_name_detection(tmp_path):
+    """The checker itself: a call and a SQL string are both caught, and
+    the owner does name the hash."""
+    mod = tmp_path / "m.py"
+    mod.write_text("from pyspark.sql import functions as F\n"
+                   "a = F.xxhash64('k')\nb = F.expr('pmod(xxhash64(k), 4)')\n")
+    assert _xxhash64_lines(mod) == [2, 3]
+    assert _xxhash64_lines(PKG / KEY_HASH_OWNER)
+    assert _xxhash64_lines(PKG / "sources" / "bloomindex.py") == []

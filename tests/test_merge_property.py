@@ -351,12 +351,25 @@ def test_lookup_winners_equal_spark_resolve(spark, rows, composite):
 
 
 def test_lookup_other_key_types_keep_the_spark_path(spark, tmp_path):
+    """A double key is not hashed driver-side (pyarrow's is_in(0.0)
+    skips a -0.0 row that Spark's isin(0.0) matches): the lookup is
+    ``read(keys=)``, traced with reason ``key_type``, and it equals the
+    filtered read for 0.0, -0.0 and NaN probes."""
+    from pyspark.sql import functions as F
+
     sch = T.StructType([T.StructField("k", T.DoubleType()),
                         T.StructField("v", T.StringType())])
-    t = LakeTable.create(str(tmp_path / "t"), sch, key="k", bucket_count=2)
-    t.append(spark, spark.createDataFrame([(1.5, "a"), (2.5, "b")], "k double, v string"))
-    rows, recs = _trace_records(tmp_path, lambda: t.lookup(spark, [1.5, 9.0]).collect())
-    assert [r["v"] for r in rows] == ["a"]
+    t = LakeTable.create(str(tmp_path / "t"), sch, key="k", bucket_count=2,
+                         merge_mode="mor")
+    t.append(spark, spark.createDataFrame(
+        [(-0.0, "neg"), (math.nan, "nan"), (1.5, "a")], "k double, v string"))
+    t.merge(spark, spark.createDataFrame(
+        [(1.5, "b", "U", 10), (2.5, "c", "I", 11)], "k double, v string, op string, lsn long"), 0)
+    probes = [0.0, -0.0, math.nan, 9.0]
+    rows, recs = _trace_records(tmp_path, lambda: t.lookup(spark, probes).collect())
+    want = t.read(spark).filter(F.col("k").isin(probes)).collect()
+    assert sorted(r["v"] for r in rows) == sorted(r["v"] for r in want) == ["nan", "neg"]
+    assert sorted(r["v"] for r in t.read(spark, keys=probes).collect()) == ["nan", "neg"]
     assert [(r["path"], r["reason"]) for r in recs] == [("spark", "key_type")]
 
 

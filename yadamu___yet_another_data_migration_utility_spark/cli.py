@@ -97,7 +97,7 @@ stateless per-job; a lake table needs day-2 operations):
              lookup would read after bucket, zone-map and bloom pruning
              (no Spark session)
     lookup   point read(s) by key: reads exactly the files `plan --key`
-             lists, in-process for string/integral keys (no Spark job);
+             lists, in-process for keys the driver hashes (no Spark job);
              --version/tag composes
     requeue  drain the dead-letter quarantine back through the engine
              with optional --set COL=EXPR repair (exactly-once fenced)
@@ -707,7 +707,7 @@ def _parse_keys(args_key: list[str], m: dict) -> list:
 def cmd_lookup(args) -> int:
     """Point lookup: current row per key (LakeTable.lookup), reading
     exactly the files ``plan --key`` lists -- in-process, without a
-    Spark job, for string/integral keys. Keys are parsed to the
+    Spark job, for the key types the driver hashes. Keys are parsed to the
     merge-key column's type; on a COMPOSITE-key table each --key is a
     comma-separated tuple in key-column order."""
     t = _table(args)
@@ -843,9 +843,13 @@ def cmd_sync(args) -> int:
 
 def cmd_describe(args) -> int:
     # manifest-only: no Spark session needed
+    from .sources.bloomindex import BLOOM_FORMAT
+
     t = _table(args)
     m = t.manifest()
     deltas = m.get("deltas", {})
+    blooms = ((m.get("bloom_files") or {})
+              if m.get("blooms_format") == BLOOM_FORMAT else {})
     print(json.dumps({
         "version": m["version"],
         "key": m["key"],
@@ -864,10 +868,10 @@ def cmd_describe(args) -> int:
         # stats (files without them are never range-pruned)
         "stats_files": len(m.get("stats", {})),
         # bloom-index coverage: files whose key bloom can skip them on
-        # point lookups (bloom verb / harvest_blooms to extend)
-        "bloom_files": sum(
-            len(v) for v in (m.get("bloom_files") or {}).values()),
-        "bloom_sidecars": len(m.get("bloom_files") or {}),
+        # point lookups (bloom verb / harvest_blooms to extend); an
+        # index of a stale format prunes nothing, so it counts as none
+        "bloom_files": sum(len(v) for v in blooms.values()),
+        "bloom_sidecars": len(blooms),
         "last_operation": (m.get("summary") or {}).get("operation")
         or (m.get("audit") or {}).get("operation"),
         "committed_at": m.get("committed_at"),
@@ -1664,7 +1668,7 @@ def build_parser() -> argparse.ArgumentParser:
         "lookup",
         help="point lookup: current row per merge-key value, reading "
              "only the files `plan --key` lists (in-process, no Spark "
-             "job, for string/integral keys)",
+             "job, for the key types the driver hashes)",
     )
     sp.add_argument("--table-root", required=True)
     sp.add_argument("--key", action="append", required=True,

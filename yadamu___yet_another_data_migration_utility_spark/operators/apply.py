@@ -227,7 +227,8 @@ def _spark_reason(mf: dict[str, Any], batch_df: DataFrame, out_schema,
     if info["plan_bytes"] > ARROW_MAX_BYTES:
         return "size"
     try:
-        back = from_arrow_schema(to_arrow_schema(out_schema))
+        back = from_arrow_schema(to_arrow_schema(out_schema),
+                                 prefer_timestamp_ntz=True)
     except Exception:  # noqa: BLE001 -- a type Arrow cannot carry
         return "arrow_type"
     if [f.dataType for f in back.fields] != [f.dataType for f in out_schema.fields]:

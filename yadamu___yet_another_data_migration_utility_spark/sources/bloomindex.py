@@ -28,15 +28,16 @@ way. Same contract as zone maps: pruning is an optimization the
 planner may decline, never a semantics change.
 
 Determinism contract (Spark side and driver side must agree bit-for-
-bit, the repo-wide md5 rule -- functions/sketchlib.py):
+bit): the bloom hashes the merge key with the engine's one key hash,
+owned by sources/lakebase.py, so it indexes exactly the key types
+that bucket pruning serves (``_driver_hashable``):
 
-- value string: the key cast to string (supported key types are
-  StringType and the integral types, whose Spark cast and Python
-  ``str()`` spell identical text);
-- h1 = md5_long(s), h2 = md5_long(s + "#bloom2") -- two independent
-  60-bit hashes from the shared md5->60-bit contract;
+- h1, h2 = the key hash salted with 1 and with 2, masked to 60 bits
+  (``_bloom_hash_exprs`` in the harvest, ``_bloom_hashes`` for a
+  probe); a composite key hashes its whole tuple, and a key with a
+  NULL component is never indexed (it matches no probe);
 - bit_i = (h1 + i*h2) mod m for i in 0..k-1 (Kirsch-Mitzenmacher
-  double hashing; h1 + (k-1)*h2 < 5*2^60 stays inside int64);
+  double hashing; h1 + (k-1)*h2 < 7*2^60 stays inside int64);
 - bit p lives at byte p>>3, bit p&7 of the little-endian bitset.
 
 Scale: the harvest is ONE Spark job over just the key column of the
@@ -58,42 +59,12 @@ from __future__ import annotations
 
 import base64
 import gzip
-import hashlib
 import json
 
-from pyspark.sql import types as T
-
 #: bump when the hash/bitset contract changes; stale-format sidecars
-#: are ignored by the planner (same discipline as STATS_FORMAT)
-BLOOM_FORMAT = 1
-
-#: salt deriving the second hash of the double-hashing scheme
-BLOOM_SALT = "#bloom2"
-
-#: separator joining the component strings of a COMPOSITE key into the
-#: one canonical value both sides hash. A C0 control char cannot occur
-#: in the str() form of any supported component type except free-text
-#: strings, where collisions ("a\x1fb"+"c" vs "a"+"b\x1fc") merely
-#: create a shared bloom entry -- an extra false POSITIVE, which the
-#: reader's exact residual removes; soundness (no false negatives for
-#: the true tuple) is unaffected.
-KEY_SEP = "\x1f"
-
-
-def canonical_probe(value) -> str | int | None:
-    """The canonical hash input for a probe: scalars pass through
-    (``positions`` strs them -- bit-compatible with every existing
-    single-key sidecar); a composite tuple/list joins its components'
-    str() forms with :data:`KEY_SEP`. None anywhere means "matches
-    nothing" (SQL equality), surfaced as None."""
-    if value is None:
-        return None
-    if isinstance(value, (tuple, list)):
-        if any(v is None for v in value):
-            return None
-        return KEY_SEP.join(
-            v if isinstance(v, str) else str(v) for v in value)
-    return value
+#: are ignored by the planner (same discipline as STATS_FORMAT).
+#: Format 1 hashed md5 of the key's string form
+BLOOM_FORMAT = 2
 
 #: largest supported hash count: the Spark-side position expression
 #: ``h1 + i*h2`` is evaluated in BIGINT, and with h1, h2 < 2^60 the
@@ -102,39 +73,17 @@ def canonical_probe(value) -> str | int | None:
 #: big ints stay exact -- silently breaking the cross-side contract
 MAX_K = 7
 
-_SUPPORTED_KEY_TYPES = (
-    T.StringType, T.LongType, T.IntegerType, T.ShortType, T.ByteType,
-)
 
-
-def bloom_supported(dt: T.DataType) -> bool:
-    """Key types whose Spark cast-to-string and Python str() agree --
-    the precondition for the cross-side hash contract."""
-    return isinstance(dt, _SUPPORTED_KEY_TYPES)
-
-
-def _md5_60(s: str) -> int:
-    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
-
-
-def positions(value, m_bits: int, k: int) -> list[int]:
-    """Driver-side bit positions for a probe value (None has NO
-    positions -- the empty list -- because SQL equality never matches
-    a NULL key; ``might_contain`` maps that to False)."""
-    if value is None:
-        return []
-    s = value if isinstance(value, str) else str(value)
-    h1 = _md5_60(s)
-    h2 = _md5_60(s + BLOOM_SALT)
+def positions(h1: int, h2: int, m_bits: int, k: int) -> list[int]:
+    """The ``k`` bit positions of a key whose two bloom hashes are
+    ``h1`` and ``h2``."""
     return [(h1 + i * h2) % m_bits for i in range(k)]
 
 
-def might_contain(bits: bytes, m_bits: int, k: int, value) -> bool:
-    if value is None:  # a NULL probe matches nothing, like SQL equality
-        return False
-    return all(
-        (bits[p >> 3] >> (p & 7)) & 1 for p in positions(value, m_bits, k)
-    )
+def might_contain(bits: bytes, pos: list[int]) -> bool:
+    """False when the bitset proves the key with positions ``pos``
+    absent."""
+    return all((bits[p >> 3] >> (p & 7)) & 1 for p in pos)
 
 
 def encode_bitset(words: dict[int, int], m_bits: int) -> str:

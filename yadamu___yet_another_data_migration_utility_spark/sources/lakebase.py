@@ -8,6 +8,8 @@ the import surface is unchanged."""
 from __future__ import annotations
 
 import contextlib
+import datetime
+import decimal
 import os
 import struct
 import time
@@ -20,7 +22,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import bloomindex as _bloom
 from .fsio import LocalFS
 
 
@@ -75,9 +76,7 @@ def _bucket_expr(key, n: int):
     composite hash is the same one-pass xxhash over all key columns in
     declaration order, so single-key tables hash exactly as before;
     pmod keeps it non-negative."""
-    return F.pmod(
-        F.xxhash64(*[F.col(k) for k in _keylist(key)]), F.lit(n)
-    ).cast("int")
+    return F.pmod(_key_hash_expr(_keylist(key)), F.lit(n)).cast("int")
 
 
 # Spark's XXH64 (catalyst expressions.XXH64) is the reference xxhash64
@@ -135,31 +134,77 @@ def _xxh64(data: bytes, seed: int) -> int:
 
 
 def _driver_hashable(dt: T.DataType) -> bool:
-    """Key types ``_bucket_id`` hashes exactly as Spark does: strings
-    of the default (binary) collation and the integral types."""
+    """Key types whose key hash the driver computes exactly as Spark
+    does (``_key_bytes``): strings of the default (binary) collation,
+    the integral types, boolean, date, timestamp_ntz, binary and
+    decimal of precision <= 18. The one key-type predicate: bucket and
+    bloom pruning, the Arrow lookup and the in-process apply all apply
+    where it holds. Left out: float/double (pyarrow's ``is_in(0.0)``
+    skips a ``-0.0`` row that Spark's ``isin(0.0)`` matches), wider
+    decimals (Spark hashes their big-endian two's-complement bytes),
+    session-time-zone timestamps (a naive probe's instant depends on
+    the reading session) and complex types."""
     if isinstance(dt, T.StringType):
         return getattr(dt, "collation", "UTF8_BINARY") == "UTF8_BINARY"
-    return dt.typeName() in _INT_RANGES
+    if isinstance(dt, T.DecimalType):
+        return dt.precision <= 18
+    return dt.typeName() in (*_INT_RANGES, "boolean", "date", "timestamp_ntz",
+                             "binary")
+
+
+_EPOCH = datetime.datetime(1970, 1, 1)
+_EPOCH_DAY = _EPOCH.toordinal()
+_MICRO = datetime.timedelta(microseconds=1)
 
 
 def _key_bytes(v: Any, dt: T.DataType) -> bytes | None:
     """The bytes Spark's xxhash64 reads for value ``v`` of key type
-    ``dt``, or None when ``v`` cannot be a value of that type."""
+    ``dt``, or None when ``v`` cannot be a value of that type. Strings
+    and the integral types come first: every commit hashes its keys."""
     if isinstance(dt, T.StringType):
         return v.encode("utf-8") if isinstance(v, str) else None
-    bits = _INT_RANGES[dt.typeName()]
-    if (isinstance(v, bool) or not isinstance(v, int)
-            or not -(1 << (bits - 1)) <= v < 1 << (bits - 1)):
+    name = dt.typeName()
+    bits = _INT_RANGES.get(name)
+    if bits is not None:
+        if (isinstance(v, bool) or not isinstance(v, int)
+                or not -(1 << (bits - 1)) <= v < 1 << (bits - 1)):
+            return None
+        return v.to_bytes(8 if bits == 64 else 4, "little", signed=True)
+    if name == "boolean":  # the int 1 or 0
+        return int(v).to_bytes(4, "little") if isinstance(v, bool) else None
+    if name == "date":  # days since the epoch, an int
+        if isinstance(v, datetime.datetime) or not isinstance(v, datetime.date):
+            return None
+        return (v.toordinal() - _EPOCH_DAY).to_bytes(4, "little", signed=True)
+    if name == "timestamp_ntz":  # microseconds since the epoch, a long
+        if not isinstance(v, datetime.datetime) or v.tzinfo is not None:
+            return None
+        return ((v - _EPOCH) // _MICRO).to_bytes(8, "little", signed=True)
+    if name == "binary":
+        return v if isinstance(v, bytes) else None
+    # decimal(p <= 18): the unscaled value at the column's scale, a long
+    if not isinstance(v, decimal.Decimal) or not v.is_finite():
         return None
-    return v.to_bytes(8 if bits == 64 else 4, "little", signed=True)
+    sign, digits, exp = v.as_tuple()
+    n, shift = int("".join(map(str, digits))), exp + dt.scale
+    if shift >= 0:
+        n *= 10 ** min(shift, dt.precision)
+    elif n % 10 ** -shift:
+        return None  # more fractional digits than the scale
+    else:
+        n //= 10 ** -shift
+    if n >= 10 ** dt.precision:
+        return None
+    return (-n if sign else n).to_bytes(8, "little", signed=True)
 
 
-def _bucket_id(values, types, n: int) -> int:
-    """Driver-side ``pmod(xxhash64(key cols), n)``, bit-identical to
-    ``_bucket_expr`` for ``_driver_hashable`` key types: components
+def _key_hash(values, types, salt: int | None = None) -> int:
+    """Driver-side ``_key_hash_expr``: Spark's variadic xxhash64 of the
+    key components, then of ``salt`` as a long when given, as a signed
+    long. Bit-identical for ``_driver_hashable`` key types: components
     hash left to right, each hash seeding the next, and NULL components
-    are skipped (Spark's variadic xxhash64). Raises TypeError for a
-    value that is not of its column's type."""
+    are skipped. Raises TypeError for a value that is not of its
+    column's type."""
     h = _XXH_SEED
     for v, dt in zip(values, types):
         if v is None:
@@ -168,7 +213,43 @@ def _bucket_id(values, types, n: int) -> int:
         if b is None:
             raise TypeError(f"{v!r} is not a {dt.simpleString()} key value")
         h = _xxh64(b, h)
-    return (h - (1 << 64) if h >> 63 else h) % n
+    if salt is not None:
+        h = _xxh64(salt.to_bytes(8, "little", signed=True), h)
+    return h - (1 << 64) if h >> 63 else h
+
+
+def _key_hash_expr(ks: list[str], salt: int | None = None) -> "F.Column":
+    """The merge-key hash on the Spark side: xxhash64 over the key
+    columns in declaration order, then ``salt`` as a long when given."""
+    salted = [] if salt is None else [F.lit(salt).cast("long")]
+    return F.xxhash64(*[F.col(k) for k in ks], *salted)
+
+
+#: salts of the bloom index's two hashes. A salted hash is independent
+#: of the unsalted one, whose ``pmod`` every key in a file shares (its
+#: bucket), so bloom bits do not correlate with bucket placement
+_BLOOM_SALTS = (1, 2)
+#: the bloom hashes keep 60 bits: ``h1 + i*h2`` then stays inside int64
+#: under Spark's ANSI arithmetic for every i < bloomindex.MAX_K
+_M60 = (1 << 60) - 1
+
+
+def _bloom_hashes(values, types) -> tuple[int, int]:
+    """Driver side of ``_bloom_hash_exprs``: the bloom index's two
+    hashes of one key tuple (TypeError as ``_key_hash``)."""
+    h1, h2 = (_key_hash(values, types, s) & _M60 for s in _BLOOM_SALTS)
+    return h1, h2
+
+
+def _bloom_hash_exprs(ks: list[str]) -> list["F.Column"]:
+    """Spark side of ``_bloom_hashes``, over the key columns ``ks``."""
+    return [_key_hash_expr(ks, s).bitwiseAND(F.lit(_M60))
+            for s in _BLOOM_SALTS]
+
+
+def _bucket_id(values, types, n: int) -> int:
+    """Driver-side ``_bucket_expr``: ``pmod(_key_hash, n)``."""
+    return _key_hash(values, types) % n
 
 
 def _bucket_ids(tbl: pa.Table, ks: list[str], types, n: int) -> list[int]:
@@ -179,7 +260,7 @@ def _bucket_ids(tbl: pa.Table, ks: list[str], types, n: int) -> list[int]:
     for kv in zip(*[tbl.column(k).to_pylist() for k in ks]):
         b = memo.get(kv)
         if b is None:
-            b = memo[kv] = _bucket_id(kv, types, n)
+            b = memo[kv] = _key_hash(kv, types) % n
         out.append(b)
     return out
 
@@ -354,16 +435,6 @@ def _keys_residual(ks: list[str], keys: list) -> "F.Column":
             c = c & (F.col(k) == F.lit(v))
         cond = cond | c
     return cond
-
-
-def _check_key_types(ks: list[str], schema: T.StructType, what: str) -> None:
-    """``keys=`` probing (bloom and bucket-hash contracts) supports
-    string/integral merge keys only."""
-    bad = [k for k in ks if not _bloom.bloom_supported(schema[k].dataType)]
-    if bad:
-        raise TypeError(
-            f"{what}(keys=...) supports string/integral merge keys; "
-            f"{bad[0]} is {schema[bad[0]].dataType.simpleString()}")
 
 
 def _check_probe_arity(ks: list[str], keys: list) -> None:
@@ -761,13 +832,11 @@ def _enc_stat(v: Any) -> Any:
     year-999 mistyped date, which would sort after 2024 and poison the
     zone), dates as ISO (isoformat pads), numbers/bools as themselves.
     Timestamp stats arrive from pyarrow as UTC wall-clock."""
-    import datetime as _dt
-
-    if isinstance(v, _dt.datetime):
+    if isinstance(v, datetime.datetime):
         return (f"{v.year:04d}-{v.month:02d}-{v.day:02d}"
                 f"T{v.hour:02d}:{v.minute:02d}:{v.second:02d}"
                 f".{v.microsecond:06d}")
-    if isinstance(v, _dt.date):
+    if isinstance(v, datetime.date):
         return v.isoformat()
     return v
 
@@ -824,12 +893,10 @@ def _enc_bound(v: Any, kind: str | None, tz: str | None = None) -> Any:
     timeZone, passed down by ``read`` so prune and residual filter
     always agree -- and converted to UTC, the clock the footer stats
     are stored in."""
-    import datetime as _dt
-
     if v is None or kind is None:
         return None
     if kind == "ts":
-        if not isinstance(v, _dt.datetime):
+        if not isinstance(v, datetime.datetime):
             return None
         if v.tzinfo is None:
             try:
@@ -841,14 +908,14 @@ def _enc_bound(v: Any, kind: str | None, tz: str | None = None) -> Any:
                 # 'GMT+8') that ZoneInfo does not: never let pruning
                 # crash a read -- just don't prune on this bound
                 return None
-        v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+        v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
         return _enc_stat(v)
     if kind == "ntz":
-        if not isinstance(v, _dt.datetime) or v.tzinfo is not None:
+        if not isinstance(v, datetime.datetime) or v.tzinfo is not None:
             return None
         return _enc_stat(v)
     if kind == "date":
-        if isinstance(v, _dt.datetime) or not isinstance(v, _dt.date):
+        if isinstance(v, datetime.datetime) or not isinstance(v, datetime.date):
             return None
         return v.isoformat()
     if kind in ("num", "float"):

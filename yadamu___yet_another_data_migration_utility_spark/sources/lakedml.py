@@ -537,7 +537,7 @@ class DmlMixin:
             elif clause is not None and clause != "all":
                 raise ValueError(f'{what} must be "all" or a dict')
 
-        # bucket placement is xxhash64(key-AS-ITS-TABLE-TYPE) (see
+        # bucket placement hashes the key AS ITS TABLE TYPE (see
         # _evolved_schema's key note): cast the source key up front so
         # bucket discovery, the join, and the bucketed write all hash
         # the same value -- a raw int source key against a long table

@@ -18,7 +18,8 @@ from . import bloomindex as _bloom
 from .fsio import CommitConflict
 from .lakebase import (
     FORMAT_VERSION, MANIFEST_DIR, DATA_DIR, LSN_COL, DELETED_COL, _keylist,
-    _bucket_expr, _zorder_key, _inherit_stats, _footer_stats, _utc_now_iso,
+    _bucket_expr, _bloom_hash_exprs, _driver_hashable, _zorder_key,
+    _inherit_stats, _footer_stats, _utc_now_iso,
 )
 
 
@@ -212,7 +213,7 @@ class MaintenanceMixin:
 
         Data plane (``deep=True``, needs ``spark``; O(table) scan):
         - bucket placement: every row in bucket b satisfies
-          ``pmod(xxhash64(key), bucket_count) == b`` -- the invariant
+          ``_bucket_expr(key, bucket_count) == b`` -- the invariant
           merges prune by (a misplaced row silently escapes updates
           and deletes: exactly the blast radius of a key-type change);
         - per-bucket lineage row counts match the files;
@@ -833,10 +834,19 @@ class MaintenanceMixin:
         # sidecar entry until the next harvest, so point lookups degrade
         # to bucket scans. The re-harvest is the daemon's job, and it is
         # incremental (covered files skip), so the action is cheap to
-        # apply whenever the hole is non-empty.
-        from . import bloomindex as _bloomidx
-
-        if m.get("blooms_format") == _bloomidx.BLOOM_FORMAT:
+        # apply whenever the hole is non-empty. An index of an older
+        # format is ignored by the planner: re-harvest it whole.
+        if m.get("blooms_format") not in (None, _bloom.BLOOM_FORMAT):
+            actions.append({
+                "action": "harvest_blooms",
+                "reason": "bloom_format",
+                "uncovered_files": len(entries),
+                "detail": (
+                    f"bloom index format {m['blooms_format']} is stale "
+                    f"(current {_bloom.BLOOM_FORMAT}) and prunes nothing; "
+                    "a re-harvest indexes every live file"),
+            })
+        elif m.get("blooms_format") is not None:
             live_rels = {e["path"] for e in entries}
             covered: set[str] = set()
             for sc_rel, cov in (m.get("bloom_files") or {}).items():
@@ -1052,10 +1062,7 @@ class MaintenanceMixin:
         referenced-blob list. Reference capability it extends: the
         loader's control-file manifest has no file-skipping metadata
         at all (/root/reference/src/YADAMU/loader/node/loaderDBI.js:321)."""
-        from .bloomindex import (
-            BLOOM_FORMAT, BLOOM_SALT, KEY_SEP, MAX_K, bloom_supported,
-        )
-        from ..functions.sketchlib import md5_long
+        from .bloomindex import BLOOM_FORMAT, MAX_K
 
         if not 1 <= k <= MAX_K:
             raise ValueError(
@@ -1069,11 +1076,12 @@ class MaintenanceMixin:
         key = m["key"]
         ks = _keylist(key)
         schema = T.StructType.fromJson(m["schema"])
-        bad = [kc for kc in ks if not bloom_supported(schema[kc].dataType)]
+        bad = [kc for kc in ks if not _driver_hashable(schema[kc].dataType)]
         if bad:
             raise ValueError(
-                f"bloom index needs string/integral merge key columns; "
-                f"{bad[0]} is {schema[bad[0]].dataType.simpleString()}")
+                f"bloom index needs a merge key the driver hashes "
+                f"(_driver_hashable); {bad[0]} is "
+                f"{schema[bad[0]].dataType.simpleString()}")
         live = self._files(m, None, strip=True) + self._files(
             m, None, "deltas", strip=True)
         # a file counts as covered only if its sidecar is actually
@@ -1107,18 +1115,10 @@ class MaintenanceMixin:
                  for rel in todo]
         kschema = T.StructType(
             [T.StructField(kc, schema[kc].dataType) for kc in ks])
-        # composite keys hash ONE canonical joined string -- the same
-        # value bloomindex.canonical_probe computes driver-side (the
-        # cast-to-string / str() agreement holds per component)
-        if len(ks) == 1:
-            s = F.col(ks[0]).cast("string")
-        else:
-            s = F.concat_ws(
-                KEY_SEP, *[F.col(kc).cast("string") for kc in ks])
         nn = F.col(ks[0]).isNotNull()
         for kc in ks[1:]:
             nn = nn & F.col(kc).isNotNull()
-        h1, h2 = md5_long(s), md5_long(F.concat(s, F.lit(BLOOM_SALT)))
+        h1, h2 = _bloom_hash_exprs(ks)
         pos = F.explode(F.array(
             *[(h1 + F.lit(i) * h2) % F.lit(m_bits) for i in range(k)]
         )).alias("p")

@@ -340,7 +340,8 @@ class MergeMixin:
 
         t0 = time.monotonic()
         table_schema = _evolved_schema(
-            m, from_arrow_schema(batch.schema), op_col, lsn_col)
+            m, from_arrow_schema(batch.schema, prefer_timestamp_ntz=True),
+            op_col, lsn_col)
         target = pa.schema([f.with_nullable(True)
                             for f in to_arrow_schema(table_schema)])
         src = batch.rename_columns(

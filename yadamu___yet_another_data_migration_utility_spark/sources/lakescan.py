@@ -21,10 +21,10 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from . import bloomindex as _bloom
 from .lakebase import (
     LSN_COL, DELETED_COL, STATS_FORMAT,
-    _keylist, _bucket_expr, _keys_residual, _lww, _resolve, _inherit_stats,
+    _keylist, _keys_residual, _lww, _resolve, _inherit_stats,
     _zone_kind, _enc_bound, _disjoint, _driver_hashable, _bucket_id,
-    _probe_tuples, _key_envelope, _arrow_key_filter, _align_arrow,
-    _match_probes, _top_rank, _check_key_types, _check_probe_arity,
+    _bloom_hashes, _probe_tuples, _key_envelope, _arrow_key_filter,
+    _align_arrow, _match_probes, _top_rank, _check_probe_arity,
 )
 
 
@@ -105,9 +105,11 @@ class ScanMixin:
         sidecars (sources/bloomindex.py), which reject files for
         uniformly scattered keys. None of the three has false
         negatives, so every skip is exact; files without stats or a
-        bloom entry always scan. A probe that is not a value of its
-        key column's type disables the bucket pruning (the read's
-        residual filter then decides how it compares)."""
+        bloom entry always scan. Bucket and bloom pruning need the key
+        hash: they apply only to ``_driver_hashable`` key types, and a
+        probe that is not a value of its key column's type disables
+        both (the read's residual filter then decides how it
+        compares)."""
         schema = T.StructType.fromJson(m["schema"])
         enc: dict[str, tuple] = {}
         kenc: dict[str, tuple] = {}
@@ -123,6 +125,7 @@ class ScanMixin:
                 k = kinds[col]
                 enc[col] = (_enc_bound(lo, k, tz), _enc_bound(hi, k, tz), k,
                             hi is not None)
+        rejects = None
         if keys is not None:
             ks = _keylist(m["key"])
             probes = _probe_tuples(ks, keys)
@@ -136,6 +139,7 @@ class ScanMixin:
                 if hashed is not None:
                     buckets = sorted(hashed if buckets is None
                                      else hashed.intersection(buckets))
+                    rejects = self._bloom_rejector(m, probes, ktypes)
             for col, (lo, hi) in _key_envelope(ks, probes).items():
                 k = kinds[col]
                 kenc[col] = (_enc_bound(lo, k, tz), _enc_bound(hi, k, tz), k,
@@ -148,7 +152,6 @@ class ScanMixin:
             if (enc or kenc) and m.get("stats_format") == STATS_FORMAT
             else {}
         )
-        rejects = self._bloom_rejector(m, keys) if keys else None
 
         def _skip(f: str) -> bool:
             return bool(
@@ -180,42 +183,35 @@ class ScanMixin:
             plain = [f for f in plain if not _skip(f)]
         return plain, delta_buckets
 
-    def _bloom_rejector(self, m: dict[str, Any], keys: list):
+    def _bloom_rejector(self, m: dict[str, Any], probes: list[tuple],
+                        ktypes: list[T.DataType]):
         """A ``rel -> bool`` predicate ("this file provably holds NONE
         of the probe keys") from the manifest's bloom sidecars, or None
-        when no consultable index exists. NULL probes are dropped (SQL
-        equality never matches a NULL key), an empty remainder means no
-        pruning; unreadable / stale-format sidecars are ignored --
+        when no consultable index exists. ``probes`` are the non-NULL
+        key tuples (SQL equality never matches a NULL key), each a
+        value of its ``_driver_hashable`` key type; none at all means no
+        pruning. Unreadable / stale-format sidecars are ignored --
         coverage loss is always sound."""
         if m.get("blooms_format") != _bloom.BLOOM_FORMAT:
             return None
         bloom_files = m.get("bloom_files") or {}
-        if not bloom_files:
+        if not bloom_files or not probes:
             return None
-        schema = T.StructType.fromJson(m["schema"])
-        if not all(_bloom.bloom_supported(schema[k].dataType)
-                   for k in _keylist(m["key"])):
-            return None
-        # composite probes canonicalize to the one joined string both
-        # sides hash (bloomindex.canonical_probe); scalars pass through
-        kvals = [c for v in keys
-                 if (c := _bloom.canonical_probe(v)) is not None]
-        if not kvals:
-            return None
-        tables: list[tuple[set, dict, int, int, list[list[int]]]] = []
+        hashes = [_bloom_hashes(t, ktypes) for t in probes]
+        tables: list[tuple[set, dict, int, list[list[int]]]] = []
         for sc_rel, cov in bloom_files.items():
             doc = self._bloom_sidecar(sc_rel)
             if doc is None:
                 continue
             mb, kk = doc["m"], doc["k"]
-            pos = [_bloom.positions(v, mb, kk) for v in kvals]
-            tables.append((set(cov), doc["blooms"], mb, kk, pos))
+            pos = [_bloom.positions(h1, h2, mb, kk) for h1, h2 in hashes]
+            tables.append((set(cov), doc["blooms"], mb, pos))
         if not tables:
             return None
         decoded: dict[tuple[str, str], bytes | None] = {}
 
         def rejects(rel: str) -> bool:
-            for cov, entries, mb, kk, pos in tables:
+            for cov, entries, mb, pos in tables:
                 if rel not in cov:
                     continue
                 b64 = entries.get(rel)
@@ -231,10 +227,7 @@ class ScanMixin:
                     decoded[ck] = bits
                 if bits is None or len(bits) * 8 != mb:
                     return False  # corrupt entry: scan the file
-                return all(
-                    any(not ((bits[p >> 3] >> (p & 7)) & 1) for p in pl)
-                    for pl in pos
-                )
+                return not any(_bloom.might_contain(bits, pl) for pl in pos)
             return False
 
         return rejects
@@ -294,19 +287,18 @@ class ScanMixin:
         ``keys=[...]`` restricts the result to rows whose MERGE KEY is
         in the list (exact ``isin`` residual, which Catalyst pushes
         through the union and the LWW aggregation into both parquet
-        scans) and PRUNES the scan with the manifest's Bloom sidecars
-        (harvest_blooms) under the same whole-bucket rule as ranges.
-        Supported for string/integral keys only -- the bloom hash
-        contract's precondition (sources/bloomindex.py); other key
-        types raise. A None probe matches nothing, like SQL equality.
-        On a COMPOSITE-key table each probe is a tuple in key-column
-        order; the residual becomes an OR of per-tuple conjunctions
-        and the bloom hashes the canonical joined string."""
+        scans), for every key type. It PRUNES the scan to the buckets
+        the keys hash to and with the key zone maps and the Bloom
+        sidecars (harvest_blooms), under the same whole-bucket rule as
+        ranges; bucket and bloom pruning apply to the key types the
+        driver hashes (``_driver_hashable``). A None probe matches
+        nothing, like SQL equality. On a COMPOSITE-key table each probe
+        is a tuple in key-column order; the residual becomes an OR of
+        per-tuple conjunctions."""
         m = self.manifest(version)
         schema = T.StructType.fromJson(m["schema"])
         ks = _keylist(m["key"])
         if keys is not None:
-            _check_key_types(ks, schema, "read")
             _check_probe_arity(ks, keys)
         plain_rel, delta_buckets = self._plan_scan(
             m, buckets, ranges,
@@ -358,15 +350,10 @@ class ScanMixin:
         name the timezone of naive timestamp bounds when explaining a
         session whose timeZone differs from the active one; ``keys`` to
         explain Bloom-index file skipping the way ``read(keys=...)``
-        executes it."""
+        executes it (with the same probe validation)."""
         m = self.manifest(version)
         if keys is not None:
-            # same validation as read(keys=...): the plan must never
-            # succeed where the read it explains would raise
-            ks = _keylist(m["key"])
-            _check_key_types(ks, T.StructType.fromJson(m["schema"]),
-                             "plan_files")
-            _check_probe_arity(ks, keys)
+            _check_probe_arity(_keylist(m["key"]), keys)
         plain, delta_buckets = self._plan_scan(m, buckets, ranges, tz=tz,
                                                keys=keys)
         dfiles = self._files(m, delta_buckets, strip=True) + self._files(
@@ -387,26 +374,27 @@ class ScanMixin:
         probes yield no row. On a COMPOSITE-key table each probe is a
         tuple in key-column order.
 
-        String and integral keys are answered WITHOUT a Spark job. The
-        scan is ``plan_files(keys=keys)``: the buckets the keys hash to
-        (driver-side ``_bucket_id``), minus files the key zone maps or
-        bloom sidecars rule out. Those files are read in-process with
-        pyarrow through the table's FS (key filter pushed down),
-        aligned to the snapshot schema like ``read``, and delta buckets
-        are resolved last-writer-wins by ``_lookup_winners``: one Arrow
-        sort (``_top_rank``) that picks the row ``_resolve`` picks. The
-        answer comes back as a local relation, which ``collect()``
-        serves without a job. Two cases answer through Spark instead,
+        Keys of a ``_driver_hashable`` type (string, integral, boolean,
+        date, timestamp_ntz, binary, decimal(p <= 18)) are answered
+        WITHOUT a Spark job. The scan is ``plan_files(keys=keys)``: the
+        buckets the keys hash to (driver-side ``_bucket_id``), minus
+        files the key zone maps or bloom sidecars rule out. Those files
+        are read in-process with pyarrow through the table's FS (key
+        filter pushed down), aligned to the snapshot schema like
+        ``read``, and delta buckets are resolved last-writer-wins by
+        ``_lookup_winners``: one Arrow sort (``_top_rank``) that picks
+        the row ``_resolve`` picks. The answer comes back as a local
+        relation, which ``collect()`` serves without a job. Two cases answer through Spark instead,
         each recorded in the operation trace (operators/trace.py) with
         its reason:
 
         - ``lsn_tie``: a key's top ``_lsn`` ties between live rows of
           differing content. Only ``_lsn_rank``'s content hash orders
-          those, and it is never reimplemented driver-side, so the
-          lookup is ``read(keys=keys)``;
-        - ``key_type``: other key types (float, timestamp, date,
-          decimal, ...) hash the keys to bucket ids in one Spark job,
-          then semi-join a bucket-pruned read against them."""
+          those, and it is never reimplemented driver-side;
+        - ``key_type``: other key types (float, double, wider decimals,
+          timestamp, ...).
+
+        Either way the lookup is ``read(keys=keys)``."""
         from ..operators import trace
 
         m = self.manifest(version)
@@ -421,7 +409,8 @@ class ScanMixin:
         if not all(_driver_hashable(t) for t in ktypes):
             trace.trace_event("lookup", table=self.root, path="spark",
                               reason="key_type", version=m["version"])
-            return self._lookup_by_join(spark, m, keys, public)
+            return self.read(spark, version=m["version"], keys=keys,
+                             public=public)
 
         t0 = time.monotonic()
         probes = _probe_tuples(ks, keys)
@@ -471,34 +460,6 @@ class ScanMixin:
             t = frag.to_table(columns=[n for n in target.names if n in have],
                               filter=kfilter)
         return _align_arrow(t, target)
-
-    def _lookup_by_join(self, spark: SparkSession, m: dict[str, Any],
-                        keys: list, public: bool) -> DataFrame:
-        """``lookup`` for key types ``_bucket_id`` does not hash: one
-        Spark job hashes the keys to bucket ids, then a bucket-pruned
-        read (pinned to the SAME manifest, so a concurrent rebucket
-        cannot skew the ids) is semi-joined against the broadcast keys.
-        The keys' ``[min, max]`` envelope rides along as a range, so
-        the key zone maps skip files inside the hashed buckets; it
-        contains every requested value, so it never excludes one."""
-        key, nb = m["key"], m["bucket_count"]
-        ks = _keylist(key)
-        schema = T.StructType.fromJson(m["schema"])
-        rows = [(k,) for k in keys] if len(ks) == 1 else [tuple(t) for t in keys]
-        kdf = spark.createDataFrame(
-            rows, T.StructType(
-                [T.StructField(k, schema[k].dataType) for k in ks]))
-        hit = [
-            r["_b"]
-            for r in kdf.select(_bucket_expr(key, nb).alias("_b"))
-            .distinct().collect()
-        ]
-        ranges = _key_envelope(ks, _probe_tuples(ks, keys)) or None
-        probe_ok = all(_bloom.bloom_supported(schema[k].dataType) for k in ks)
-        df = self.read(spark, version=m["version"], buckets=hit,
-                       public=public, ranges=ranges,
-                       keys=keys if probe_ok else None)
-        return df.join(F.broadcast(kdf), ks, "left_semi")
 
     CHANGE_COL = "_change_type"
 

@@ -185,6 +185,15 @@ class LakeTable(RefsMixin, ScanMixin, MergeMixin, DmlMixin,
         if merge_mode not in MERGE_MODES:
             raise ValueError(f"merge_mode must be one of {MERGE_MODES}")
         _require_binary_strings(schema.fields)
+        ks = _keylist(key)
+        if not ks:
+            raise ValueError("merge key must name at least one column")
+        if len(set(ks)) != len(ks):
+            raise ValueError(f"duplicate columns in composite key: {ks}")
+        missing = [k for k in ks if k not in schema.fieldNames()]
+        if missing:
+            raise ValueError(f"merge key column(s) {missing} not in schema")
+        # validated first: a rejected create never removes the table at root
         if fs.exists(root):
             if overwrite:
                 fs.rmtree(root)
@@ -211,14 +220,6 @@ class LakeTable(RefsMixin, ScanMixin, MergeMixin, DmlMixin,
                         f"to v{v} after an interrupted create; use load())"
                     )
                 fs.rmtree(root)
-        ks = _keylist(key)
-        if not ks:
-            raise ValueError("merge key must name at least one column")
-        if len(set(ks)) != len(ks):
-            raise ValueError(f"duplicate columns in composite key: {ks}")
-        missing = [k for k in ks if k not in schema.fieldNames()]
-        if missing:
-            raise ValueError(f"merge key column(s) {missing} not in schema")
         key = ks[0] if len(ks) == 1 else ks
         if LSN_COL not in schema.fieldNames():
             schema = T.StructType(list(schema.fields) + [T.StructField(LSN_COL, T.LongType())])
