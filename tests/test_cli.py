@@ -502,6 +502,51 @@ def test_cli_tag_refs_and_named_time_travel(spark, tmp_path, capsys):
     assert rc == 2
 
 
+@pytest.mark.parametrize("ty", ["decimal(10,2)", "binary"])
+def test_cli_lookup_and_plan_decimal_and_binary_keys(spark, tmp_path, capsys, ty):
+    """``--key`` text parses to the key column's type: an exact
+    decimal at the column scale, binary from hex. ``lookup`` finds the
+    row and ``plan --key`` plans only the probe's bucket; malformed or
+    rounding-needing text is a clean exit 2."""
+    from decimal import Decimal
+
+    import pyspark.sql.types as T
+
+    from yadamu___yet_another_data_migration_utility_spark.sources.lakebase import (
+        _bucket_id,
+    )
+    from yadamu___yet_another_data_migration_utility_spark.sources.laketable import (
+        LakeTable,
+    )
+
+    if ty == "binary":
+        dt, keys = T.BinaryType(), [bytes([i, 255 - i]) for i in range(16)]
+        probe, text, bad = keys[3], keys[3].hex(), ["zz", "abc"]
+    else:
+        dt, keys = T.DecimalType(10, 2), [Decimal(125 * i).scaleb(-2) for i in range(16)]
+        probe, text, bad = keys[3], "3.75", ["3.755", "abc", "123456789", "NaN"]
+    schema = T.StructType([T.StructField("k", dt), T.StructField("val", T.StringType())])
+    root = str(tmp_path / "t")
+    t = LakeTable.create(root, schema, key="k", bucket_count=8)
+    t.merge(spark, spark.createDataFrame(
+        [(k, f"v{i}", "I", i + 1) for i, k in enumerate(keys)],
+        T.StructType([*schema.fields, T.StructField("op", T.StringType()),
+                      T.StructField("lsn", T.LongType())])), batch_id=0)
+
+    rc, out = _run(capsys, ["lookup", "--table-root", root, "--key", text])
+    assert rc == 0 and out["found"] == 1 and out["rows"][0]["val"] == "v3"
+    rc, out = _run(capsys, ["plan", "--table-root", root, "--key", text])
+    b = _bucket_id((probe,), [dt], 8)
+    files = out["plain"] + out["delta_resolved"]
+    assert rc == 0 and files and out["files_pruned"] > 0
+    assert all(f"/_b={b}/" in f for f in files), files
+    assert out["files_scanned"] == len(files)
+    for verb in ("lookup", "plan"):
+        for text in bad:
+            rc, _ = _run(capsys, [verb, "--table-root", root, "--key", text])
+            assert rc == 2, (verb, text)
+
+
 def test_cli_update_where(spark, tmp_path, capsys):
     import pyspark.sql.types as T
 

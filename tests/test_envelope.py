@@ -58,6 +58,22 @@ def test_roundtrip_lossless(spark):
     assert res.ok, res
 
 
+def test_roundtrip_timestamp_ntz(spark):
+    """A zone-less timestamp column crosses the wire as epoch-us and
+    decodes back to timestamp_ntz with the exact wall-clock values,
+    pre-1970 and sub-second ones included."""
+    log = changelog_df(spark, 300, 40, dup_mod=0).withColumn(
+        "seen", (F.col("warc_ts").cast("timestamp_ntz")
+                 - F.make_dt_interval(F.lit(20000), F.lit(0), F.lit(0),
+                                      F.col("lsn") / 1000)))
+    assert log.filter(F.year("seen") < 1970).count() > 0
+    back = _roundtrip(log)
+    assert isinstance(back.schema["seen"].dataType, T.TimestampNTZType)
+    cols = ["lsn", "op", "url", "warc_ts", "seen"]
+    res = compare(log.select(cols), back.select(cols), columns=cols)
+    assert res.ok, res
+
+
 def test_delete_carries_before_image(spark):
     log = changelog_df(spark, N_EVENTS, N_URLS, dup_mod=0)
     dels = _roundtrip(log).filter(F.col("op") == "D")

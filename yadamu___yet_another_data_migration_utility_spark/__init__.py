@@ -28,8 +28,6 @@ functions/  column-level functions: text extraction, dedup signatures
             (minhash), md5/HyperLogLog sketch primitives, type
             conversion and spatial recode
 streaming/  Structured Streaming wrapper (foreachBatch, checkpoints)
-plans/      query catalog with DuckDB oracles, served by
-            __spark_entry__
 fixtures/   deterministic synthetic changelog generator (seeded, pure
             Spark -- no external data)
 """

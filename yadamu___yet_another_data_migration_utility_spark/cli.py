@@ -597,11 +597,14 @@ def cmd_validate(args) -> int:
 
 def _parse_typed(ty: str | None, s: str):
     """Parse a CLI value to the manifest-schema type ``ty`` -- one
-    definition shared by the plan and lookup verbs. Raises ValueError
-    on malformed input (callers turn it into a clean exit 2).
-    Unsupported types (string/binary/decimal/...) pass through as raw
-    text: zone maps never prune them, so a plan stays valid."""
+    definition shared by the plan, lookup and delete-where verbs.
+    Decimals parse exactly at the column's scale, binary values from
+    hex. Raises ValueError on malformed input or a decimal that would
+    need rounding (callers turn it into a clean exit 2). Other types
+    (string, complex) pass through as the text itself."""
     import datetime as dt
+    import decimal
+    import re
 
     if ty in ("timestamp", "timestamp_ntz"):
         return dt.datetime.fromisoformat(s)
@@ -618,6 +621,21 @@ def _parse_typed(ty: str | None, s: str):
         return float(s)
     if ty in ("byte", "short", "integer", "long"):
         return int(s)
+    if ty == "binary":
+        return bytes.fromhex(s)
+    if ty and (m := re.fullmatch(r"decimal\((\d+),\s*(\d+)\)", ty)):
+        prec, scale = int(m[1]), int(m[2])
+        try:
+            d = decimal.Decimal(s)
+            if not d.is_finite():
+                raise decimal.InvalidOperation
+            q = d.quantize(decimal.Decimal(1).scaleb(-scale),
+                           context=decimal.Context(prec=prec))
+        except decimal.InvalidOperation:
+            raise ValueError(f"not a {ty}: {s!r}") from None
+        if q != d:
+            raise ValueError(f"{s!r} needs rounding to fit {ty}")
+        return q
     return s
 
 
@@ -654,8 +672,8 @@ def cmd_plan(args) -> int:
     and blooms) -- next to the unpruned plan: the operator's answer to
     "why didn't my scan prune". Bounds and keys are parsed to the
     COLUMN's type from the manifest schema (ISO timestamps/dates,
-    numerics, booleans), matching the typed-bound rule the planner
-    itself enforces. Manifest-only: no Spark session."""
+    numerics, exact decimals, booleans, hex binary), matching the
+    typed-bound rule the planner itself enforces. Manifest-only: no Spark session."""
     t = _table(args)
     m = t.manifest(args.version)
     types = {f["name"]: f["type"] for f in m["schema"]["fields"]}
@@ -1672,7 +1690,7 @@ def build_parser() -> argparse.ArgumentParser:
     )
     sp.add_argument("--table-root", required=True)
     sp.add_argument("--key", action="append", required=True,
-                    help="merge-key value (repeatable)")
+                    help="merge-key value (repeatable; binary keys in hex)")
     sp.add_argument("--version", type=_version_arg, default=None,
                     help="version number or tag name")
     common(sp)
@@ -1787,8 +1805,8 @@ def build_parser() -> argparse.ArgumentParser:
              "(e.g. ts:2020-03-01T12:30:00..2020-04-01)",
     )
     sp.add_argument("--key", action="append", default=[],
-                    help="merge-key value (repeatable): plan the lookup "
-                         "of these keys")
+                    help="merge-key value (repeatable; binary keys in "
+                         "hex): plan the lookup of these keys")
     branch_opt(sp)
     sp.set_defaults(fn=cmd_plan, cpus=None)
 

@@ -2,13 +2,12 @@
 contract and the integer-exact HyperLogLog register algebra.
 
 ONE home for spellings that must stay bit-identical everywhere they
-appear -- the engine's ANALYZE statistics and bloom sidecars
-(sources/), the MinHash signatures (functions/minhash.py) and the
-catalog's md5 dice (plans/catalog.py).
+appear: the engine's ANALYZE statistics (sources/lakemaint.py) and the
+MinHash signatures (functions/minhash.py).
 
-Determinism rules (each keeps Spark and the DuckDB oracles
-bit-identical):
-- md5 -> first 15 hex chars -> 60-bit BIGINT (both engines agree);
+Determinism rules (each is exact integer arithmetic, so any engine that
+implements md5 computes the same values):
+- md5 -> first 15 hex chars -> 60-bit BIGINT;
 - integer DIV for hash splitting (60-bit values exceed double range);
 - register rho from length(bin(x)), never floor(log2);
 - the harmonic denominator as an exact integer sum of 2^(rest_bits+1-rho).
