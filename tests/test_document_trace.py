@@ -1,85 +1,14 @@
-"""Tests for the document-collection source (S8, ref mongoDBI.js
-DOCUMENT_TO_ARRAY / ARRAY_TO_DOCUMENT) and the operation trace log
-(M2, ref yadamuDBI.js:243-251 sqlTrace)."""
+"""Tests for the operation trace log (M2, ref yadamuDBI.js:243-251
+sqlTrace)."""
 
 from __future__ import annotations
 
-import datetime
 import json
-import os
 
 import pyspark.sql.functions as F
-import pyspark.sql.types as T
 import pytest
 
 from yadamu___yet_another_data_migration_utility_spark.operators import trace
-from yadamu___yet_another_data_migration_utility_spark.sources.document import (
-    DOC_COL,
-    read_collection,
-    rows_to_documents,
-    write_collection,
-)
-
-
-def _sample(spark):
-    schema = T.StructType([
-        T.StructField("id", T.LongType()),
-        T.StructField("name", T.StringType()),
-        T.StructField("score", T.DoubleType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("payload", T.StringType()),
-    ])
-    rows = [
-        (1, "alpha", 1.5, datetime.datetime(2024, 1, 2, 3, 4, 5, 123456),
-         json.dumps({"k": 7})),
-        (2, 'quo"te,comma', -0.25, datetime.datetime(2024, 6, 30, 23, 59, 59, 999999),
-         None),
-        (3, None, 3.0000000000000004, None, json.dumps({"k": None})),
-    ]
-    return spark.createDataFrame(rows, schema)
-
-
-def test_document_roundtrip_typed(spark, tmp_path):
-    df = _sample(spark)
-    root = str(tmp_path / "coll")
-    side = write_collection(df, root, id_col="id")
-    assert side["row_schema"] is not None
-    back = read_collection(spark, root, mode="rows")
-    assert back.schema == df.schema
-    a = sorted(df.collect(), key=lambda r: r.id)
-    b = sorted(back.collect(), key=lambda r: r.id)
-    assert a == b  # lossless: us timestamps, doubles, nulls, quotes
-
-
-def test_document_mode_read_has_id_and_payload(spark, tmp_path):
-    df = _sample(spark)
-    root = str(tmp_path / "coll")
-    write_collection(df, root, id_col="id")
-    docs = read_collection(spark, root, mode="documents")
-    assert docs.columns == ["_id", DOC_COL]
-    got = {r._id: json.loads(r.document) for r in docs.collect()}
-    assert set(got) == {"1", "2", "3"}
-    assert got["1"]["name"] == "alpha"
-
-
-def test_document_derived_id_is_deterministic(spark, tmp_path):
-    df = _sample(spark)
-    d1 = rows_to_documents(df).orderBy(DOC_COL).collect()
-    d2 = rows_to_documents(df).orderBy(DOC_COL).collect()
-    assert d1 == d2
-    ids = [json.loads(r.document)["_id"] for r in d1]
-    assert len(set(ids)) == 3  # distinct md5-derived _id per row
-
-
-def test_document_passthrough_and_schemaless_inference(spark, tmp_path):
-    # a (document)-shaped frame writes as-is => schemaless collection
-    docs = rows_to_documents(_sample(spark), id_col="id")
-    root = str(tmp_path / "raw")
-    side = write_collection(docs, root)
-    assert side["row_schema"] is None
-    back = read_collection(spark, root, mode="rows")  # distributed inference
-    assert back.count() == 3
-    assert "name" in back.columns and "score" in back.columns
 
 
 def test_trace_span_and_readback(spark, tmp_path):

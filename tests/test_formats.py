@@ -277,29 +277,6 @@ def test_compare_canonical_xml_rule(spark):
         assert not compare(src, tgt_bad, canonical_xml=True).ok, drifted
 
 
-def test_jdbc_interface_options():
-    """Interface-level acceptance (no DB server in the sandbox): the
-    reader options must spell Spark's partitioned-parallel JDBC read."""
-    from yadamu___yet_another_data_migration_utility_spark.sources.jdbc import (
-        JdbcSnapshotConfig,
-    )
-
-    cfg = JdbcSnapshotConfig(
-        url="jdbc:postgresql://db/crawl", table="pages",
-        partition_column="page_id", lower_bound=0, upper_bound=1_000_000,
-        num_partitions=16, properties={"user": "u", "password": "p"},
-    )
-    opts = cfg.reader_options()
-    assert opts["partitionColumn"] == "page_id"
-    assert opts["numPartitions"] == "16"
-    assert opts["fetchsize"] == "10000"
-    assert cfg.bounds_query() == "SELECT MIN(page_id) AS lo, MAX(page_id) AS hi FROM pages"
-    with pytest.raises(ValueError, match="bounds"):
-        JdbcSnapshotConfig(url="x", table="t", partition_column="c").reader_options()
-    # unpartitioned single-cursor read is still expressible
-    single = JdbcSnapshotConfig(url="x", table="t").reader_options()
-    assert "partitionColumn" not in single
-
 def test_compare_normalization_timestamp_ntz(spark, tmp_path):
     """timestamp_precision must also truncate TIMESTAMP_NTZ -- what
     Spark 4 actually reads back from parquet -- not only TIMESTAMP.

@@ -1,8 +1,9 @@
 """Package layering: operators/ and streaming/ reach table storage
 only through the table's FS (``table.fs``), never through
-local-filesystem calls. No engine, function or CLI module imports a
-name it never uses. Only sources/lakebase.py names Spark's xxhash64:
-the merge-key hash has one owner."""
+local-filesystem calls. Every package module has an importer inside
+the package. No engine, function or CLI module imports a name it never
+uses. Only sources/lakebase.py names Spark's xxhash64: the merge-key
+hash has one owner."""
 
 from __future__ import annotations
 
@@ -18,20 +19,18 @@ ENGINE = ("sources", "operators", "streaming")
 
 def _imported_modules(path: pathlib.Path) -> list[str]:
     """Every module an import statement in ``path`` names, resolved to
-    a dotted name relative to the package root."""
+    a dotted name relative to the package root. ``from m import n``
+    names ``m`` and ``m.n``: ``n`` may be a submodule."""
     rel = path.relative_to(PKG).with_suffix("").parts
     out = []
     for node in ast.walk(ast.parse(path.read_text(), str(path))):
         if isinstance(node, ast.Import):
             out += [a.name for a in node.names]
         elif isinstance(node, ast.ImportFrom):
-            if node.level:
-                base = list(rel[: len(rel) - node.level])
-                mod = ".".join(base + ([node.module] if node.module else []))
-                out += [mod] if node.module else [
-                    ".".join(base + [a.name]) for a in node.names]
-            else:
-                out.append(node.module or "")
+            base = rel[: len(rel) - node.level] if node.level else ()
+            mod = ".".join([*base, *([node.module] if node.module else [])])
+            out += ([mod] if node.module else []) + [
+                f"{mod}.{a.name}" if mod else a.name for a in node.names]
     return out
 
 
@@ -42,6 +41,49 @@ def test_import_resolution():
     apply = _imported_modules(PKG / "operators" / "apply.py")
     assert {"functions.extract", "sources.laketable", "operators.trace",
             "pyspark.sql", "numpy"} <= set(apply)
+
+
+def _orphan_modules() -> list[str]:
+    """Every package module other than an ``__init__`` or ``__main__``
+    that no other package module imports, as a dotted name relative to
+    the package root."""
+    mods = {".".join(f.relative_to(PKG).with_suffix("").parts): f
+            for f in PKG.rglob("*.py")}
+    imported = {m.removeprefix(PKG.name + ".")
+                for name, f in mods.items()
+                for m in _imported_modules(f) if m != name}
+    return sorted(n for n in mods if n not in imported
+                  and n.rsplit(".", 1)[-1] not in ("__init__", "__main__"))
+
+
+def test_every_module_has_an_importer():
+    """A module whose only consumer is gone is deleted with it: every
+    package module other than an ``__init__`` or ``__main__`` is
+    imported by another one (the CLI itself through ``__main__``)."""
+    assert _orphan_modules() == []
+
+
+def test_orphan_module_detection(tmp_path, monkeypatch):
+    """The checker itself, on a throwaway package: a module imported
+    only by ``__init__``, ``__main__`` or an orphan, or as a name in
+    ``from package import module``, still has an importer; one that
+    nothing imports, or only itself, is an orphan."""
+    pkg = tmp_path / "pkg"
+    for rel, text in {
+        "__init__.py": "from .a import x\n",
+        "__main__.py": "from .cli import main\n",
+        "cli.py": "import os\nfrom pkg.sub import b\n",
+        "a.py": "x = 1\n",
+        "lone.py": "from . import lone\n",
+        "sub/__init__.py": "",
+        "sub/b.py": "",
+        "sub/c.py": "from ..a import x\nfrom .d import y\n",
+        "sub/d.py": "y = 1\n",
+    }.items():
+        (pkg / rel).parent.mkdir(parents=True, exist_ok=True)
+        (pkg / rel).write_text(text)
+    monkeypatch.setitem(globals(), "PKG", pkg)
+    assert _orphan_modules() == ["lone", "sub.c"]
 
 
 #: local-filesystem calls that would bypass ``table.fs`` (an object

@@ -4,7 +4,10 @@ mid-replay kill (the reference's LOSTCONNECTION suite analogue,
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
+import pytest
 
 from yadamu___yet_another_data_migration_utility_spark.fixtures.changelog import (
     PAGE_SCHEMA,
@@ -20,6 +23,7 @@ from yadamu___yet_another_data_migration_utility_spark.sources.laketable import 
 from yadamu___yet_another_data_migration_utility_spark.streaming.stream import (
     replay_available,
     start_replay,
+    start_replay_multi,
 )
 
 N_EVENTS, N_URLS, N_SEGMENTS = 3000, 200, 6
@@ -114,122 +118,22 @@ def test_replay_compaction_and_metrics_tables(spark, tmp_path):
     assert bad.count() == 0
 
 
-def test_streaming_url_sessions_stateful(spark, tmp_path):
-    """Custom stateful operator (applyInPandasWithState): per-url
-    sessions close EITHER inline (a >30-min gap inside arriving data)
-    OR by event-time timeout when the watermark passes the deadline;
-    sessions still open at end-of-stream are NOT emitted."""
-    import time as _time
-
-    from datetime import datetime
-
-    from pyspark.sql import Row
-    from yadamu___yet_another_data_migration_utility_spark.streaming.stream import (
-        start_url_sessions,
-    )
-
-    wal = str(tmp_path / "wal_sess")
-
-    def seg(rows):
-        df = spark.createDataFrame(
-            [Row(lsn=l, op="U", url=u,
-                 warc_ts=datetime.strptime(ts, "%Y-%m-%d %H:%M:%S"),
-                 html=None, lang="en")
-             for (l, u, ts) in rows],
-            "lsn long, op string, url string, warc_ts timestamp, "
-            "html binary, lang string",
-        )
-        df.coalesce(1).write.mode("append").parquet(wal)
-        _time.sleep(0.1)  # distinct mtimes -> deterministic file order
-
-    T0 = "2024-01-01 "
-    # batch 1: u1 session A (10:00 + 10:10), then an 80-min in-batch gap
-    # -> session A closes INLINE; session B (11:30) stays open in state
-    seg([(1, "u1", T0 + "10:00:00"),
-         (2, "u1", T0 + "10:10:00"),
-         (3, "u1", T0 + "11:30:00")])
-    # batch 2: advance event time (wm after this batch: 14:00-1h=13:00)
-    seg([(4, "u9", T0 + "14:00:00")])
-    # batch 3: wm=13:00 > session B deadline 12:00 -> B emits by TIMEOUT
-    seg([(5, "u8", T0 + "14:30:00")])
-
-    q = start_url_sessions(
-        spark, wal, str(tmp_path / "sess_out"), str(tmp_path / "sess_ckpt")
-    )
-    q.awaitTermination()
-    got = {
-        (r["url"], str(r["session_start"])): (
-            str(r["session_end"]), r["n_events"], r["min_lsn"], r["max_lsn"]
-        )
-        for r in spark.read.parquet(str(tmp_path / "sess_out")).collect()
-    }
-    # u9/u8 sessions are still open (no gap, no watermark past deadline)
-    assert got == {
-        ("u1", "2024-01-01 10:00:00"): ("2024-01-01 10:10:00", 2, 1, 2),
-        ("u1", "2024-01-01 11:30:00"): ("2024-01-01 11:30:00", 1, 3, 3),
-    }, got
-
-
-def test_streaming_hourly_rollup_watermark_semantics(spark, tmp_path):
-    """Stateful windowed rollup with late data: an event arriving late
-    but inside the watermark is folded into its (still-open) window; an
-    event older than the watermark whose window was already finalized
-    is dropped; finalized windows match the batch aggregation exactly."""
-    import time as _time
-
-    from pyspark.sql import Row
-    from yadamu___yet_another_data_migration_utility_spark.streaming.stream import (
-        start_hourly_rollup,
-    )
-
-    wal = str(tmp_path / "wal_roll")
-
-    def seg(rows):
-        from datetime import datetime
-
-        df = spark.createDataFrame(
-            [Row(lsn=l, op=o, url=u,
-                 warc_ts=datetime.strptime(ts, "%Y-%m-%d %H:%M:%S"),
-                 html=None, lang="en")
-             for (l, o, u, ts) in rows],
-            "lsn long, op string, url string, warc_ts timestamp, "
-            "html binary, lang string",
-        )
-        df.coalesce(1).write.mode("append").parquet(wal)
-        _time.sleep(0.1)  # distinct mtimes -> deterministic file order
-
-    T0 = "2024-01-01 "
-    # segment 1: window [10:00,11:00) opens
-    seg([(1, "I", "u1", T0 + "10:10:00"),
-         (2, "U", "u2", T0 + "10:40:00")])
-    # segment 2: 10:20 arrives LATE (event time < max seen) but its
-    # window is still open -> must be folded in
-    seg([(3, "I", "u3", T0 + "10:20:00")])
-    # segments 3+4: advance event time; the watermark lags one batch,
-    # so segment 4's batch runs with wm = 13:30-1h = 12:30 and evicts +
-    # emits the finalized [10:00,11:00) windows exactly once
-    seg([(5, "I", "u9", T0 + "13:30:00")])
-    seg([(6, "I", "u8", T0 + "14:00:00")])
-    # segment 5: lsn=4 is TOO late -- its window was already finalized
-    # and emitted -> must be dropped (no duplicate window row, no
-    # count change)
-    seg([(4, "I", "u0", T0 + "10:30:00")])
-
-    q = start_hourly_rollup(
-        spark, wal, str(tmp_path / "roll_out"), str(tmp_path / "roll_ckpt")
-    )
-    q.awaitTermination()
-    got = {
-        (str(r["window_start"]), r["op"]): (r["n_events"], r["min_lsn"], r["max_lsn"])
-        for r in spark.read.parquet(str(tmp_path / "roll_out")).collect()
-    }
-    # finalized 10:00 windows: the two on-time events plus the
-    # late-but-open lsn=3; the post-finalization lsn=4 left no trace;
-    # the still-open 13:00/14:00 windows are not emitted yet
-    assert got == {
-        ("2024-01-01 10:00:00", "I"): (2, 1, 3),
-        ("2024-01-01 10:00:00", "U"): (1, 2, 2),
-    }, got
+@pytest.mark.parametrize("multi", [False, True], ids=["start_replay", "start_replay_multi"])
+def test_replay_source_rejects_bad_format_before_starting(spark, tmp_path, multi):
+    """Both replay starters build their source the same way: an unknown
+    ``source_format``, and ``jsonl`` without a decoder, are ValueErrors
+    raised before any query starts or any checkpoint is written."""
+    table = LakeTable.create(str(tmp_path / "t"), PAGE_SCHEMA, key="url",
+                             bucket_count=2)
+    start, target = ((start_replay_multi, {"t": table}) if multi
+                     else (start_replay, table))
+    ckpt = str(tmp_path / "ckpt")
+    for fmt, msg in (("csv", "unknown source_format 'csv'"),
+                     ("jsonl", "requires a decoder")):
+        with pytest.raises(ValueError, match=msg):
+            start(spark, target, str(tmp_path / "wal"), ckpt, source_format=fmt)
+    assert spark.streams.active == []
+    assert not os.path.exists(ckpt)
 
 
 def test_follow_changes_tail_reconstructs_snapshots(spark, tmp_path):
@@ -735,11 +639,7 @@ def test_streaming_replay_multi_routes_resumes_exactly_once(spark, tmp_path):
     yet advanced is the worst case) and restart: re-delivered slices
     fence as no-ops and the union of both tables equals the
     single-stream oracle split by the same route."""
-    from yadamu___yet_another_data_migration_utility_spark.streaming.stream import (
-        start_replay_multi,
-    )
-
-    log = changelog_df(spark, 1500, 120, dup_mod=40)
+    log =changelog_df(spark, 1500, 120, dup_mod=40)
     route = F.when(F.crc32(F.col("url")) % 2 == 0, "even").otherwise("odd")
     wal = str(tmp_path / "wal")
     write_wal_segments(log.withColumn("_table", route).select(

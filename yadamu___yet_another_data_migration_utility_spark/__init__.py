@@ -25,9 +25,9 @@ Subpackages
 sources/    table formats + changelog readers (laketable, file changelog)
 operators/  CDC batch apply, dedup reductions, fencing, metrics
 functions/  column-level functions: text extraction, dedup signatures
-            (minhash), md5/HyperLogLog sketch primitives, type
-            conversion and spatial recode
-streaming/  Structured Streaming wrapper (foreachBatch, checkpoints)
+            (minhash), md5/HyperLogLog sketch primitives
+streaming/  Structured Streaming replay (foreachBatch, checkpoints),
+            change tail and mirror, incremental rollup
 fixtures/   deterministic synthetic changelog generator (seeded, pure
             Spark -- no external data)
 """

@@ -1,4 +1,4 @@
-"""Column-level functions: extraction, dedup signatures, sketch
-primitives, type conversion and spatial recode. All JVM-side Catalyst
+"""Column-level functions: html-to-text extraction, MinHash dedup
+signatures and md5/HyperLogLog sketch primitives. JVM-side Catalyst
 builtins where possible; Arrow-batched pandas UDFs for the rest (never
 per-row Python UDFs)."""

@@ -539,7 +539,7 @@ def _reduce_spark(batch_df: DataFrame, tagged: DataFrame, key, op_col: str,
     # redelivered duplicates (same key AND lsn -- by CDC contract
     # byte-identical events) survive this reduction; resolution
     # collapses them via a benign max_by tie. The strict
-    # one-row-per-key operator remains last_lsn_dedup (public catalog).
+    # one-row-per-key operator is ``last_lsn_dedup`` above.
     if dedup == "none":
         reduced = valid
     else:

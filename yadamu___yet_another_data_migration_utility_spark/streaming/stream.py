@@ -11,9 +11,9 @@ checkpointing).
   BATCH_SIZE/COMMIT_COUNT windows, /root/reference/src/YADAMU/common/
   yadamuWriter.js:159-174, default 10k rows -- here a segment is the
   unit);
-- watermark on ``warc_ts`` bounds event-time lateness for any stateful
-  downstream consumer; correctness of the sink does NOT depend on it
-  (the LSN-monotonic merge discards stale events regardless);
+- watermark: a fixed, advisory 1 hour on ``warc_ts`` (when the source
+  carries it). The sink keeps no event-time state, so nothing depends
+  on it: the LSN-monotonic merge discards stale events regardless;
 - sink: ``foreachBatch`` whose body is the pure ``apply_batch`` -- the
   micro-batch id from Structured Streaming is the fencing key, so
   restart-after-crash replays of the last batch are exact no-ops;
@@ -56,6 +56,63 @@ CHANGELOG_SCHEMA = T.StructType(
 )
 
 
+def _replay_source(
+    spark: SparkSession,
+    changelog_path: str,
+    schema: T.StructType,
+    max_files_per_trigger: int,
+    source_format: str,
+    decoder: Callable[[DataFrame], DataFrame] | None,
+) -> DataFrame:
+    """The replay starters' source: parquet WAL segments read with
+    ``schema``, or raw JSON-lines text that ``decoder`` must normalize.
+    An unknown format, or jsonl without a decoder, is a ValueError
+    before any query starts."""
+    if source_format == "parquet":
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", max_files_per_trigger)
+            .parquet(changelog_path)
+        )
+    elif source_format == "jsonl":
+        if decoder is None:
+            raise ValueError("source_format='jsonl' requires a decoder")
+        stream = (
+            spark.readStream
+            .option("maxFilesPerTrigger", max_files_per_trigger)
+            .text(changelog_path)
+        )
+    else:
+        raise ValueError(f"unknown source_format {source_format!r}")
+    if decoder is not None:
+        stream = decoder(stream)
+    # the foreachBatch sink is stateless, so the watermark is advisory;
+    # arbitrary replicated schemas may not carry the event-time column
+    if "warc_ts" in stream.columns:
+        stream = stream.withWatermark("warc_ts", "1 hour")
+    return stream
+
+
+def _start_foreach_batch(
+    stream: DataFrame,
+    sink: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    name: str,
+    available_now: bool,
+) -> StreamingQuery:
+    """Start ``sink`` as the foreachBatch body of a checkpointed query:
+    the checkpoint carries the source offsets, the micro-batch id the
+    sink's fence."""
+    writer = (
+        stream.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir)
+        .queryName(name)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def start_replay(
     spark: SparkSession,
     table: LakeTable,
@@ -63,7 +120,6 @@ def start_replay(
     checkpoint_dir: str,
     schema: T.StructType = CHANGELOG_SCHEMA,
     max_files_per_trigger: int = 1,
-    watermark: str = "1 hour",
     available_now: bool = True,
     on_metrics: Callable[[BatchMetrics], None] | None = None,
     compact_every: int | None = None,
@@ -105,29 +161,8 @@ def start_replay(
     exactly-once with no extra coordination). Callers should issue one
     final ``rollup.refresh`` after the stream drains to catch the
     tail; ``replay_available`` does."""
-    if source_format == "parquet":
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(changelog_path)
-        )
-    elif source_format == "jsonl":
-        if decoder is None:
-            raise ValueError("source_format='jsonl' requires a decoder")
-        stream = (
-            spark.readStream
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .text(changelog_path)
-        )
-    else:
-        raise ValueError(f"unknown source_format {source_format!r}")
-    if decoder is not None:
-        stream = decoder(stream)
-    # the foreachBatch sink is stateless, so the watermark is advisory
-    # (bounds lateness if a stateful op is ever composed upstream);
-    # arbitrary replicated schemas may not carry the event-time column
-    if "warc_ts" in stream.columns:
-        stream = stream.withWatermark("warc_ts", watermark)
+    stream = _replay_source(spark, changelog_path, schema,
+                            max_files_per_trigger, source_format, decoder)
 
     def _sink(batch_df, batch_id: int) -> None:
         m = apply_batch(table, batch_df, batch_id,
@@ -139,14 +174,8 @@ def start_replay(
         if on_metrics is not None:
             on_metrics(m)
 
-    writer = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("cdc_replay")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream, _sink, checkpoint_dir, "cdc_replay",
+                                available_now)
 
 
 def start_replay_multi(
@@ -157,7 +186,6 @@ def start_replay_multi(
     table_col: str = "_table",
     schema: T.StructType | None = None,
     max_files_per_trigger: int = 1,
-    watermark: str = "1 hour",
     available_now: bool = True,
     on_metrics: Callable[[dict[str, BatchMetrics]], None] | None = None,
     source_format: str = "parquet",
@@ -182,30 +210,11 @@ def start_replay_multi(
     (dedup, max_errors, on_error, ...)."""
     from ..operators.apply import apply_batch_multi
 
-    if source_format == "parquet":
-        if schema is None:
-            schema = T.StructType(
-                [T.StructField(table_col, T.StringType()),
-                 *CHANGELOG_SCHEMA.fields])
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(changelog_path)
-        )
-    elif source_format == "jsonl":
-        if decoder is None:
-            raise ValueError("source_format='jsonl' requires a decoder")
-        stream = (
-            spark.readStream
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .text(changelog_path)
-        )
-    else:
-        raise ValueError(f"unknown source_format {source_format!r}")
-    if decoder is not None:
-        stream = decoder(stream)
-    if "warc_ts" in stream.columns:
-        stream = stream.withWatermark("warc_ts", watermark)
+    if schema is None:
+        schema = T.StructType(
+            [T.StructField(table_col, T.StringType()), *CHANGELOG_SCHEMA.fields])
+    stream = _replay_source(spark, changelog_path, schema,
+                            max_files_per_trigger, source_format, decoder)
 
     def _sink(batch_df, batch_id: int) -> None:
         # the router makes 1 + T passes over the micro-batch (discovery
@@ -222,232 +231,8 @@ def start_replay_multi(
         if on_metrics is not None:
             on_metrics(ms)
 
-    writer = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("cdc_replay_multi")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def start_hourly_rollup(
-    spark: SparkSession,
-    changelog_path: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    *,
-    watermark: str = "1 hour",
-    window: str = "1 hour",
-    schema: T.StructType = CHANGELOG_SCHEMA,
-    max_files_per_trigger: int = 1,
-) -> StreamingQuery:
-    """Stateful streaming twin of the batch ``events_hourly_rollup``:
-    tumbling event-time windows over the changelog with WATERMARKED
-    late-data semantics (the construct the replay sink itself does not
-    need -- its LSN-monotonic merge is order-insensitive -- but every
-    monitoring/derived-stream consumer does).
-
-    Append output mode: a window row is written exactly once, when the
-    watermark (max event time seen minus ``watermark``) passes the
-    window end and the state is evicted. A late event arriving while
-    its window is still in state is folded in; one arriving AFTER its
-    window was finalized is dropped -- no duplicate window rows, ever
-    (pinned by tests/test_streaming.py watermark-semantics test) --
-    bounded state, the only stance that survives an unbounded
-    10^10-event stream. State is O(open windows x ops), not O(corpus).
-
-    Scale: groupBy(window, op) with algebraic aggs -- map-side partial
-    combine, one shuffle per micro-batch keyed by (window, op); the
-    parquet sink appends one finalized-window file set per batch."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(changelog_path)
-        .withWatermark("warc_ts", watermark)
-    )
-    agg = (
-        stream.groupBy(F.window("warc_ts", window).alias("w"), "op")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("lsn").alias("min_lsn"),
-            F.max("lsn").alias("max_lsn"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "op",
-            "n_events",
-            "min_lsn",
-            "max_lsn",
-        )
-    )
-    return (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("cdc_hourly_rollup")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-#: output row of one finalized url session
-SESSION_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("session_start", T.TimestampType()),
-        T.StructField("session_end", T.TimestampType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("min_lsn", T.LongType()),
-        T.StructField("max_lsn", T.LongType()),
-    ]
-)
-
-#: UDF-internal row: epoch-microsecond bounds (converted to timestamps
-#: JVM-side -- Arrow round-trips naive datetimes through the SESSION
-#: timezone, which would shear against the epoch-based watermark under
-#: any non-UTC session)
-_SESSION_US_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("start_us", T.LongType()),
-        T.StructField("end_us", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("min_lsn", T.LongType()),
-        T.StructField("max_lsn", T.LongType()),
-    ]
-)
-
-#: per-url crawl-session state: (start_us, last_us, n, min_lsn, max_lsn)
-_SESSION_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("start_us", T.LongType()),
-        T.StructField("last_us", T.LongType()),
-        T.StructField("n", T.LongType()),
-        T.StructField("min_lsn", T.LongType()),
-        T.StructField("max_lsn", T.LongType()),
-    ]
-)
-
-SESSION_GAP_US = 30 * 60 * 1_000_000
-
-
-def start_url_sessions(
-    spark: SparkSession,
-    changelog_path: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    *,
-    watermark: str = "1 hour",
-    gap_us: int = SESSION_GAP_US,
-    schema: T.StructType = CHANGELOG_SCHEMA,
-    max_files_per_trigger: int = 1,
-) -> StreamingQuery:
-    """CUSTOM stateful streaming operator via ``applyInPandasWithState``
-    (the construct for per-key logic that windowed aggs can't express):
-    per-url crawl sessions closed by a 30-min event-time inactivity gap.
-
-    Semantics (the streaming twin of the batch ``events_sessionization``
-    gaps-and-islands): events for a url folding into an open session
-    extend it; a gap > ``gap_us`` INSIDE arriving data closes the older
-    session immediately; an open session with no further arrivals
-    closes when the WATERMARK passes its deadline (event-time timeout),
-    so every finalized session is emitted exactly once and sessions
-    still open at end-of-stream stay in state (bounded by open keys).
-
-    Scale: state is one 5-long tuple per OPEN url session -- O(active
-    keys), evicted by timeout, never O(corpus); each micro-batch
-    shuffles only that batch's events by url. Arrow-batched pandas on
-    both edges; no per-row Python dispatch."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    gap_ms = gap_us // 1000
-    _cols = ["url", "start_us", "end_us", "n_events", "min_lsn", "max_lsn"]
-
-    def fn(key, pdfs, state: GroupState):
-        url = key[0]
-
-        def finalize(cur) -> dict:
-            return {
-                "url": url,
-                "start_us": cur[0],
-                "end_us": cur[1],
-                "n_events": cur[2],
-                "min_lsn": cur[3],
-                "max_lsn": cur[4],
-            }
-
-        if state.hasTimedOut:
-            out = [finalize(state.get)]
-            state.remove()
-            yield pd.DataFrame(out)
-            return
-
-        events: list[tuple[int, int]] = []
-        for pdf in pdfs:
-            if len(pdf):
-                # _ts_us is TRUE epoch microseconds, computed JVM-side
-                # (unix_micros) -- immune to the session-timezone shear
-                # of Arrow's naive-datetime round-trip
-                events.extend(zip(pdf["_ts_us"].tolist(), pdf["lsn"].tolist()))
-        events.sort()
-        cur = list(state.get) if state.exists else None
-        if not events and cur is None:  # defensive: nothing to do
-            yield pd.DataFrame([], columns=_cols)
-            return
-        out = []
-        for ts_us, lsn in events:
-            if cur is None:
-                cur = [ts_us, ts_us, 1, lsn, lsn]
-            elif ts_us - cur[1] > gap_us:
-                out.append(finalize(cur))
-                cur = [ts_us, ts_us, 1, lsn, lsn]
-            else:
-                cur[1] = max(cur[1], ts_us)
-                cur[2] += 1
-                cur[3] = min(cur[3], lsn)
-                cur[4] = max(cur[4], lsn)
-        wm_ms = state.getCurrentWatermarkMs()
-        deadline_ms = cur[1] // 1000 + gap_ms
-        if deadline_ms <= wm_ms:
-            # the watermark already passed the gap: close inline (an
-            # event-time timeout may not be set in the past)
-            out.append(finalize(cur))
-            if state.exists:
-                state.remove()
-        else:
-            state.update(tuple(cur))
-            state.setTimeoutTimestamp(deadline_ms)
-        yield pd.DataFrame(out, columns=_cols)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(changelog_path)
-        .withWatermark("warc_ts", watermark)
-        .withColumn("_ts_us", F.unix_micros(F.col("warc_ts")))
-    )
-    sessions = stream.groupBy("url").applyInPandasWithState(
-        fn, _SESSION_US_SCHEMA, _SESSION_STATE_SCHEMA,
-        "append", GroupStateTimeout.EventTimeTimeout,
-    ).select(
-        "url",
-        F.timestamp_micros(F.col("start_us")).alias("session_start"),
-        F.timestamp_micros(F.col("end_us")).alias("session_end"),
-        "n_events", "min_lsn", "max_lsn",
-    )
-    return (
-        sessions.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("cdc_url_sessions")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_foreach_batch(stream, _sink, checkpoint_dir,
+                                "cdc_replay_multi", available_now)
 
 
 def replay_available(
@@ -750,8 +535,7 @@ def start_dedup_ingest(
     available_now: bool = True,
     on_metrics: Callable[[dict], None] | None = None,
 ) -> StreamingQuery:
-    """Continuous ingest with INLINE near-dup filtering -- the streaming
-    twin of the ``dedup_incremental`` batch operator, and the shape a
+    """Continuous ingest with INLINE near-dup filtering -- the shape a
     crawl pipeline actually runs: every micro-batch of documents is
     checked against a PERSISTED MinHash band index (itself a LakeTable)
     before landing, so duplicates are dropped at the door instead of by
@@ -879,11 +663,5 @@ def start_dedup_ingest(
             on_metrics({"batch_id": batch_id, "n_in": n_in,
                         "n_kept": n_kept, "n_dups": n_in - n_kept})
 
-    writer = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("dedup_ingest")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream, _sink, checkpoint_dir, "dedup_ingest",
+                                available_now)
